@@ -1,0 +1,37 @@
+package perfbench
+
+/** Minimal JSON writer for the harness's result and span files. */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => s"${quote(k.toString)}:${apply(x)}" }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+
+  def span(s: Span): String = apply(Map(
+    "id" -> s.id, "parent" -> s.parent, "kind" -> s.kind, "name" -> s.name,
+    "start" -> s.start, "end" -> s.end, "attrs" -> s.attrs, "tags" -> s.tags))
+}
