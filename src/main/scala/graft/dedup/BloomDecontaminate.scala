@@ -1,9 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, GraftExpressionBridge}
+import org.apache.spark.sql.{DataFrame, GraftExpressionBridge, GraftPlanBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.util.sketch.BloomFilter
 
 /** N-gram contamination check with a Bloom-filter prefilter — "which
@@ -14,16 +14,30 @@ import org.apache.spark.util.sketch.BloomFilter
   * The 100 TB shape: the EVAL side is small by construction (benchmarks,
   * held-out splits), the TRAIN side is the corpus. A direct semi-join of
   * train n-grams against eval n-grams shuffles the train side's entire
-  * exploded n-gram stream (~10× the corpus bytes). Instead:
+  * exploded n-gram stream (~10× the corpus bytes). Instead, in one lazy
+  * plan:
   *
-  *  1. collect the eval set's distinct n-gram hashes into a Bloom filter
-  *     (driver-side build over the SMALL side only, then broadcast —
-  *     a few MB for millions of n-grams at 1e-4 fpp);
-  *  2. scan train, keeping only n-grams the filter might contain — this
-  *     map-side test eliminates ~everything before any exchange;
+  *  1. build a Bloom filter over the eval set's n-gram hashes with
+  *     Spark's own `BloomFilterAggregate` (the aggregate behind runtime
+  *     bloom-filter joins) in a scalar subquery over the SMALL side only
+  *     — a few MB for millions of n-grams at 1e-4 fpp. It runs as part of
+  *     the report's own execution: building the report launches no job,
+  *     checkpoints nothing, and the filter bytes never enter the plan;
+  *  2. scan train, keeping only n-grams the filter might contain
+  *     (`BloomFilterMightContain`, codegen'd inside the scan's stage) —
+  *     this map-side test eliminates ~everything before any exchange;
   *  3. EXACT verify: semi-join the tiny survivor set against the real
   *     eval hash set, so Bloom false positives never reach the output —
   *     the result is exact; the filter only buys the scan-side prune.
+  *     The join is shuffle-hash, never broadcast: an explode carries the
+  *     pre-explode scan's size estimate, so a broadcast could be sized
+  *     on a wrong, tiny figure.
+  *
+  * `BloomFilterAggregate` clamps the filter's sizing to
+  * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (items) and
+  * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (bits). Sizing
+  * beyond them builds a smaller filter than asked for: more false
+  * positives pass step 2, and step 3 still keeps the result exact.
   *
   * N-grams come from `NgramHashes.word_ngram_hashes` (distinct 64-bit
   * hashes per doc, computed scan-side in one codegen'd pass); a shared
@@ -39,33 +53,22 @@ object BloomDecontaminate {
                           idCol: String, textCol: String, n: Int,
                           expectedEvalNgrams: Long = 1000000L,
                           fpp: Double = 1e-4): DataFrame = {
+    import GraftExpressionBridge.{toColumn, toExpression}
     val grams = (d: DataFrame) => d.select(col(idCol),
       explode(graft.expressions.NgramHashes.word_ngram_hashes(col(textCol), n)).as("g"))
 
-    // small by construction; materialized once — it feeds BOTH the
-    // driver-side Bloom build (an eager action) and the exact-verify
-    // semi-join, which otherwise re-runs the eval gram explode+distinct
-    val evalGrams = grams(eval).select("g").distinct().localCheckpoint(true)
-    val bloom: BloomFilter = evalGrams.stat.bloomFilter("g", expectedEvalNgrams, fpp)
-    // Native probe, not a UDF: serialize the driver-built filter and hand
-    // the bytes to Spark's own codegen'd BloomFilterMightContain (the
-    // expression behind runtime bloom-filter joins). `stat.bloomFilter`
-    // puts raw longs, and BloomFilterMightContain probes with
-    // mightContainLong on the readFrom-deserialized filter — identical
-    // semantics to the former udf, but the whole decontamination scan
-    // now stays inside one WholeStageCodegen span. The literal rides the
-    // plan the same way a runtime-filter subquery result would.
-    val bloomBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    }
-    val mightContain = GraftExpressionBridge.toColumn(BloomFilterMightContain(
-      Literal(bloomBytes, BinaryType), GraftExpressionBridge.toExpression(col("g"))))
+    // putLong per hash, probed with mightContainLong: the semantics of
+    // `DataFrameStatFunctions.bloomFilter` over the same sizing
+    val bloom = grams(eval).select(toColumn(new BloomFilterAggregate(toExpression(col("g")),
+      Literal(expectedEvalNgrams), Literal(BloomFilter.optimalNumOfBits(expectedEvalNgrams, fpp)))
+      .toAggregateExpression())).scalar()
+    val mightContain = toColumn(BloomFilterMightContain(
+      GraftPlanBridge.toCatalyst(bloom), toExpression(col("g"))))
 
     grams(train)
       .filter(mightContain)                           // map-side Bloom prune
-      .join(evalGrams, Seq("g"), "left_semi")         // exact verify
+      .join(grams(eval).select("g").distinct().hint("shuffle_hash"),
+        Seq("g"), "left_semi")                        // exact verify
       .groupBy(col(idCol))
       .agg(countDistinct(col("g")).as("n_shared"))
   }

@@ -23,10 +23,12 @@ object ExactDedup {
 
   /** Within-batch dedup with deterministic keeper: the MIN of `keyCol` per
     * hash survives (dropDuplicates keeps an arbitrary row — unusable when
-    * results must be reproducible). Carries `carryCols` via min_by. */
-  def keepers(df: DataFrame, hashCol: String, keyCol: String, carryCols: Seq[String] = Nil): DataFrame = {
-    val aggs = min(col(keyCol)).as(keyCol) +:
-      carryCols.map(c => min_by(col(c), col(keyCol)).as(c))
+    * results must be reproducible). Carries `carryCols` via min_by;
+    * `extraAggs` ride the same aggregation (a per-hash tally or set). */
+  def keepers(df: DataFrame, hashCol: String, keyCol: String, carryCols: Seq[String] = Nil,
+              extraAggs: Seq[Column] = Nil): DataFrame = {
+    val aggs = (min(col(keyCol)).as(keyCol) +:
+      carryCols.map(c => min_by(col(c), col(keyCol)).as(c))) ++ extraAggs
     df.groupBy(hashCol).agg(aggs.head, aggs.tail: _*)
   }
 

@@ -77,11 +77,16 @@ object SectorVote {
                    levelLabels: Seq[String] = Seq("8", "6", "4", "2"),
                    num: Int = 1, denom: Int = 2): DataFrame = {
     require(divisors.length == levelLabels.length)
-    // Single lineage: aggregate the raw pairs ONCE, then explode one row
-    // per hierarchy level and aggregate all levels in one shuffle. (The
-    // naive form — one aggregation per level joined back — recomputes the
-    // base scan+join per level: 5× the work, measured 8 s → 2 s at sf0.1.)
-    val base = pairs.groupBy(col(docCol), col(codeCol).cast("long").as("code"))
+    // Single lineage, one shuffle: every aggregation below groups by the
+    // doc first, so hash-partitioning the raw pairs by `docCol` ONCE
+    // satisfies all four of them (base counts, level counts, per-level
+    // winners, pivot) and the planner adds no further exchange. A doc's
+    // pairs number its tickers, so the pre-aggregation a per-aggregation
+    // exchange would buy saves little. (The naive form — one aggregation
+    // per level joined back — recomputes the base scan+join per level:
+    // 5× the work, measured 8 s → 2 s at sf0.1.)
+    val base = pairs.repartition(col(docCol))
+      .groupBy(col(docCol), col(codeCol).cast("long").as("code"))
       .agg(count(lit(1)).as("cnt"))
     val lvls = array(divisors.zipWithIndex.map { case (d, i) =>
       struct(lit(i).as("lvl"), lit(d).as("div"))
@@ -153,8 +158,8 @@ object SectorVote {
     * exchange, and `finish` runs the trim-level cascade (same winner and
     * tie-break semantics as `hierarchical`/`hierarchicalCompact`: max
     * count, ties to the smallest code, first level clearing num/denom).
-    * Preferred at scale: the windowed form shuffles level-exploded rows
-    * (4×) and sorts per window; the compact form shuffles collected
+    * Preferred at scale: the windowed form shuffled level-exploded rows
+    * (4×) and sorted per window; the compact form shuffles collected
     * structs and evaluates interpreted array HOFs per row (measured ~2×
     * slower than this at sf0.1). */
   def hierarchicalAgg(divisors: Seq[Long] = Seq(1L, 100L, 10000L, 1000000L),
@@ -227,7 +232,7 @@ object SectorVote {
                           num: Int = 1, denom: Int = 2): DataFrame =
     hierarchical(pairs, docCol, codeCol, divisors, levelLabels, num, denom)
 
-  /** `hierarchical` with two shuffles instead of four: aggregate
+  /** `hierarchical` as a collect-then-cascade (two shuffles): aggregate
     * (doc, code) counts, collect each doc's count list (bounded by the
     * doc's distinct codes — order-sized here, never corpus-sized), and
     * run the level cascade as per-row array expressions. Same result,

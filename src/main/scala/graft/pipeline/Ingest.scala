@@ -14,10 +14,15 @@ import graft.text.TextOps
   *   → dedup gate vs history (F8) → typed doc assembly (O18).
   *
   * Reference: `src/lurkers/reddit.py:72-90,156-174` + `src/base.py:210-218`.
-  * Scale shape: the universe join is broadcast (dimension stays tiny); the
-  * ticker explode shuffles on the doc key only for the collect_set — and
-  * the dedup gate shuffles on the uniformly-distributed hash. Hot tickers
-  * (AAPL/TSLA skew) live inside a doc's array, never as a join key.
+  * Scale shape: the posts cross one exchange. The universe semi-join is
+  * broadcast (the dimension stays tiny) and runs map-side on the exploded
+  * (post, ticker) rows; the only shuffle of posts is the keeper
+  * aggregation's, on the uniformly-distributed text hash, and that
+  * aggregation also collects the tickers (its map-side partial folds a
+  * post's ticker rows back into one before the exchange). The dedup
+  * gate's anti-join then reuses the hash partitioning, or broadcasts a
+  * small history. Hot tickers (AAPL/TSLA skew) are never a shuffle or
+  * join key.
   */
 object Ingest {
 
@@ -28,35 +33,34 @@ object Ingest {
       .filter(col("selftext").isNotNull &&
         !col("selftext").isin("unknown", "[removed]"))
 
-  /** O16 + F5/J2: extract candidate tickers from text, drop stop-tickers
-    * (`reddit.py:89`: `- {'DD','ARE'}`), keep only universe members.
-    * Returns (idCol, tickers) for docs with ≥1 valid ticker (F4). */
-  def resolveTickers(docs: DataFrame, idCol: String, textCol: Column,
-                     universe: DataFrame, symbolCol: String,
-                     stopTickers: Seq[String] = Seq("DD", "ARE")): DataFrame = {
-    val raw = TextOps.extractTickersEn(textCol)
-    val pruned = array_except(raw, array(stopTickers.map(lit): _*))
-    docs.select(col(idCol), explode(pruned).as("__t"))
-      .join(broadcast(universe.select(col(symbolCol).as("__t"))), Seq("__t"), "left_semi")
-      .groupBy(idCol)
-      .agg(array_sort(collect_set(col("__t"))).as("tickers"))
-  }
+  /** Stop-tickers removed from every candidate set (`reddit.py:89`:
+    * `- {'DD','ARE'}`); shared by [[ingest]] and [[ingestStream]]. */
+  val StopTickers: Seq[String] = Seq("DD", "ARE")
 
   /** Full ingest: returns the typed documents that survive every gate.
     * `history` holds previously-ingested text hashes; `retrievalTime` is
-    * the injected clock (never `now()` — determinism, SURVEY §7.4). */
+    * the injected clock (never `now()` — determinism, SURVEY §7.4).
+    *
+    * Tickers (O16 + F5/J2): candidates are extracted once, minus
+    * [[StopTickers]], exploded beside the post and semi-joined against
+    * the universe; the surviving rows feed the `text_hash` keeper
+    * aggregation directly, which collects each hash's ticker set next to
+    * its keeper columns. Equal hash ⇒ equal text ⇒ equal tickers, so the
+    * set is the keeper's own; a post with no universe ticker leaves no
+    * row and never reaches the aggregation (F4). */
   def ingest(posts: DataFrame, universe: DataFrame, history: DataFrame,
              retrievalTime: Column): Dataset[Doc] = {
-    val valid = filterValidPosts(posts)
-    val withText = valid.withColumn("__text",
-      TextOps.getText(col("title"), col("selftext")))
-    val tickers = resolveTickers(withText, "id", col("__text"), universe, "ticker_symbol")
-    val docs = withText.join(tickers, "id") // inner join == F4 (≥1 ticker)
+    val withText = filterValidPosts(posts)
+      .withColumn("__text", TextOps.getText(col("title"), col("selftext")))
       .withColumn("text_hash", TextOps.textHashHex(col("__text")))
+    val candidates = array_except(TextOps.extractTickersEn(col("__text")),
+      array(StopTickers.map(lit): _*))
+    val tickerRows = withText.select(col("*"), explode(candidates).as("__t"))
+      .join(broadcast(universe.select(col("ticker_symbol").as("__t"))), Seq("__t"), "left_semi")
     val fresh = ExactDedup.dedupGate(
-      ExactDedup.keepers(docs, "text_hash", "id",
-        carryCols = Seq("source", "title", "selftext", "__text", "tickers",
-          "created_utc", "url")),
+      ExactDedup.keepers(tickerRows, "text_hash", "id",
+        carryCols = Seq("source", "title", "selftext", "created_utc", "url"),
+        extraAggs = Seq(array_sort(collect_set(col("__t"))).as("tickers"))),
       history, "text_hash")
     import posts.sparkSession.implicits._
     fresh.select(Doc.assemble(
@@ -97,7 +101,7 @@ object Ingest {
     */
   def ingestStream(posts: DataFrame, universeSymbols: Seq[String],
                    retrievalTime: Column,
-                   stopTickers: Seq[String] = Seq("DD", "ARE"),
+                   stopTickers: Seq[String] = StopTickers,
                    horizon: String = "7 days"): Dataset[Doc] = {
     val valid = filterValidPosts(posts)
       .withColumn("__text", TextOps.getText(col("title"), col("selftext")))

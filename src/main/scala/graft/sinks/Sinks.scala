@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *   appending — the "at-least-once + dedup = exactly-once effect"
   *   requirement of SURVEY §7.4.
   * - K2 universe upsert-if-absent (`src/workqueue_setup.py:34-46`):
-  *   left-anti on the key then append (Delta MERGE WHEN NOT MATCHED in a
+  *   left-anti on the key then append, as ONE job: the appended-row count
+  *   is observed on the write itself (Delta MERGE WHEN NOT MATCHED in a
   *   lakehouse deployment; the anti-join form is engine-pure).
   * - K4 staging flag reset (`src/utils/database_utils.py:66-81`): the
   *   reference resets ALL staged docs — acking even failed migrations
@@ -48,7 +49,11 @@ object Sinks {
       .parquet(path)
 
   /** K2: append only rows whose `keyCol` is absent from the existing
-    * table. Returns the number of rows appended.
+    * table. Returns the number of rows appended, counted by an
+    * `observe` on the write job — the anti-join runs once, with no cache
+    * and no separate count job. An upsert that finds no new key still
+    * runs the write: it appends no row, but leaves one schema-only
+    * (zero-row) part file in the table directory.
     *
     * SINGLE-WRITER contract: the check-then-append is not atomic — two
     * concurrent callers can both observe a key absent and both append
@@ -71,11 +76,10 @@ object Sinks {
         val existing = spark.read.parquet(path).select(keyCol)
         incoming.join(existing, Seq(keyCol), "left_anti")
       }
-    val toWrite = newRows.cache()
-    val n = toWrite.count()
-    if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(path)
-    toWrite.unpersist()
-    n
+    val appended = new org.apache.spark.sql.Observation("merge_upsert")
+    newRows.observe(appended, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Append).parquet(path)
+    appended.get("n").asInstanceOf[Long]
   }
 
   /** K3: bulk-indexing writer shape (`streaming_bulk` into ES,

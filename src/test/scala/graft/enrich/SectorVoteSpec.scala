@@ -44,6 +44,15 @@ class SectorVoteSpec extends SparkSpec {
     assert(out(3L) == (Some(11220000L), Some("8")))
   }
 
+  test("hierarchical: the four doc-first aggregations share one exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val pairs = Seq((1L, 11223344L), (1L, 11223355L), (2L, 11000000L)).toDF("doc", "icb")
+    val plan = SectorVote.hierarchical(pairs, "doc", "icb").queryExecution.executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, plan.treeString)
+  }
+
   test("majorityAgg (typed Aggregator) matches the relational majority") {
     val data = Seq((1L, 10), (1L, 10), (1L, 10), (1L, 20), (2L, 10), (2L, 20), (2L, 30))
     val ds = data.toDF("doc", "sector").as[(Long, Int)]

@@ -33,6 +33,14 @@ class IngestSpec extends SparkSpec {
     assert(byId("101").time.toString == "2024-03-01 10:15:00.0")
   }
 
+  test("ingest plans one hash exchange: tickers fold into the keeper aggregation") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = Ingest.ingest(posts, universe, emptyHistory, clock).queryExecution.executedPlan
+    val shuffles = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, plan.treeString)
+  }
+
   test("ingest is idempotent under the dedup gate (reference test_reddit.py:12-15 analog)") {
     val run1 = Ingest.ingest(posts, universe, emptyHistory, clock)
     val history = run1.select(col("text_hash")).toDF()

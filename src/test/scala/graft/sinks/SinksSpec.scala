@@ -71,6 +71,21 @@ class SinksSpec extends SparkSpec {
     assert(rows == Map(1L -> "x", 2L -> "y", 3L -> "z")) // 2 kept original
   }
 
+  test("mergeUpsert with no new key returns 0 and leaves the table's rows as they were (K2)") {
+    val path = tmp()
+    assert(Sinks.mergeUpsert(spark, Seq((1L, "x"), (2L, "y")).toDF("k", "v"), path, "k") == 2)
+    val n = Sinks.mergeUpsert(spark, Seq((2L, "y2"), (1L, "x2")).toDF("k", "v"), path, "k")
+    assert(n == 0)
+    val back = spark.read.parquet(path)
+    assert(back.count() == 2)
+    assert(back.as[(Long, String)].collect().toMap == Map(1L -> "x", 2L -> "y"))
+    // the write still ran: it leaves one schema-only part file (as documented)
+    val dir = new java.io.File(path)
+    val parts = dir.listFiles().map(_.getName).filter(_.startsWith("part-"))
+    val empty = parts.filter(p => spark.read.parquet(s"$path/$p").count() == 0)
+    assert(empty.length == 1, parts.mkString(", "))
+  }
+
   test("bulkWrite batches per partition and tallies ok/fail (K3/A6)") {
     val df = (1 to 95).map(i => (i.toLong, s"doc$i")).toDF("id", "v").repartition(4)
     val seen = spark.sparkContext.collectionAccumulator[Int]("batches")
