@@ -19,9 +19,11 @@ import org.apache.spark.sql.functions._
   *     sets decorrelate, so its copies contribute band rows but almost
   *     no candidate pairs (the unique-corpus regime).
   *
-  * `RouterProbe` then measures all three verify forms plus the routed
-  * decision on the result. The cost model should survive mixing BY
-  * CONSTRUCTION — it compares actual shipment counts (2C vs κ·n·B),
+  * Timing q35's pair miner on the result under each forced verify form
+  * and under the routed decision tests the router on a mixture (the
+  * numbers are in `MinHashLSH`'s "MIXED-density validation" note). The
+  * cost model should survive mixing BY CONSTRUCTION — it compares
+  * actual shipment counts (2C vs κ·n·B),
   * both of which aggregate correctly over a mixture — and this corpus
   * is the measurement that either confirms that or makes the case for
   * per-source routing.

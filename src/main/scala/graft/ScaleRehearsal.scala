@@ -64,29 +64,16 @@ object ScaleRehearsal {
     * Queries that throw come back with `error` set, never aborting the
     * sweep. */
   def measure(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[QM] = {
-    val known = names.filter(SparkEntry.queries.contains)
-    // positional zip-back, not a by-name map: a caller measuring the
-    // same query twice (an inline A/B) must get both measurements
-    val it = measureThunks(spark,
-      known.map(n => n -> (() => SparkEntry.queries(n)(spark, sfDir)))).iterator
-    names.map(n =>
-      if (SparkEntry.queries.contains(n)) it.next()
-      else QM(n, 0, 0, 0, 0, 0, 0, 0, Some("unknown query")))
-  }
-
-  /** [[measure]] over arbitrary plan thunks instead of registered query
-    * names — the probe mains (SessionizeSkewProbe) A/B operator FORMS
-    * that are deliberately not part of the query surface. */
-  def measureThunks(spark: SparkSession,
-      thunks: Seq[(String, () => org.apache.spark.sql.DataFrame)]): Seq[QM] = {
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
-    try thunks.map { case (name, mk) =>
+    try names.map { name =>
       System.gc(); m.reset()
       val t0 = System.nanoTime()
       try {
         val obs = new org.apache.spark.sql.Observation()
-        mk().observe(obs, org.apache.spark.sql.functions.count(
+        val plan = SparkEntry.queries.get(name)
+          .getOrElse(throw new NoSuchElementException("unknown query"))
+        plan(spark, sfDir).observe(obs, org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("n"))
           .write.format("noop").mode("overwrite").save()
         val rows = obs.get("n").asInstanceOf[Long]

@@ -1,7 +1,13 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import graft.ops.{Checkpoints, GraphIds}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a near-dup pair list — the step that turns
   * pairwise similarity output (MinHashLSH / SimHash / embedding LSH)
@@ -13,89 +19,84 @@ import org.apache.spark.sql.functions._
   * Algorithm: iterative min-label propagation. Every vertex starts
   * labeled with itself; each round, a vertex adopts the minimum label in
   * its closed neighborhood; converged when no label changes. Rounds are
-  * pure DataFrame joins/aggregations (shuffle on vertex id — no driver
-  * state, no collect), so each round scales like any other equi-join.
+  * RDD jobs keyed by vertex id (shuffle on vertex id — no driver state,
+  * no collect), so each round scales like any other equi-join.
   * Rounds needed = graph diameter, and near-dup components are
   * shallow (duplicates of a common source), so convergence is fast; for
-  * adversarially long chains switch to the large-star/small-star
-  * alternation (Kiveris et al., "Connected Components in MapReduce"),
-  * which converges in O(log n) rounds with the same join shapes.
+  * adversarially long chains use the large-star/small-star alternation
+  * ([[connectedComponentsStar]], Kiveris et al., "Connected Components
+  * in MapReduce"), which converges in O(log n) rounds.
   *
   * The driver loop only evaluates a COUNT per round (the changed-label
-  * tally); labels stay distributed. `localCheckpoint` truncates the
-  * growing lineage each round — without it, round i replans rounds
-  * 0..i-1 and iteration time is quadratic. (localCheckpoint stores
-  * blocks on executors: fast, but an executor loss mid-loop fails the
-  * job and Spark restarts it — acceptable for an idempotent batch
-  * operator. For long multi-hour loops on preemptible nodes, switch to
-  * reliable `checkpoint` with a checkpoint dir: same call shape,
-  * HDFS-durable at the cost of a write per round.)
+  * tally); labels stay distributed. Each round is persisted and the
+  * previous one released, and the result is one `localCheckpoint`
+  * (localCheckpoint stores blocks on executors: fast, but an executor
+  * loss mid-loop fails the job and Spark restarts it — acceptable for
+  * an idempotent batch operator. For long multi-hour loops on
+  * preemptible nodes, switch to reliable `checkpoint` with a checkpoint
+  * dir: same call shape, HDFS-durable at the cost of a write per round.)
+  *
+  * Ids (both entry points): integral ids are cast to long once, inside
+  * the edge checkpoint, and the output is cast back to the endpoints'
+  * type. An edge with a null endpoint links nothing; its non-null
+  * endpoint is still a vertex, and a null endpoint is one vertex whose
+  * component is null — it matches no edge, as in an equi-join.
   */
 object Clusters {
+
+  private val Lvl = StorageLevel.MEMORY_AND_DISK
 
   /** (vertex, component) for every vertex in `edges` (both endpoint
     * columns); component = min vertex id reachable.
     *
-    * ROUTING (the KMeans uniform-dims pattern, round-15's central
-    * finding applied here per the round-16 brief): every propagation
-    * round's per-vertex work is a LONG MIN — there is nothing for
-    * Catalyst to codegen that an RDD `reduceByKey(min)` doesn't already
-    * do — while each relational round paid a fresh
-    * analyze/optimize/codegen pass (measured 0.92 s for a 256-edge
-    * graph at sf0.1: ~100% planning). When both endpoint columns are
-    * LongType and the (one-time, pair-sized) edge checkpoint holds no
-    * nulls, the rounds run as RDD jobs over one hash partitioner —
-    * edges partitioned by dst once, labels co-partitioned by vertex, so
-    * each round is ONE reduceByKey shuffle plus narrow joins. Long-min
-    * is total and associative, so labels are bit-identical to the
-    * relational rounds (ClustersRoutingSpec pins it). Null endpoints or
-    * non-long ids keep the relational rounds — null vertices have
-    * engine-defined join semantics the RDD form does not replay. */
+    * Every propagation round's per-vertex work is a LONG MIN — nothing
+    * for Catalyst to codegen that an RDD `reduceByKey(min)` doesn't
+    * already do, while a relational round paid a fresh
+    * analyze/optimize/codegen pass (measured 0.92 s for a 256-edge graph
+    * at sf0.1: ~100% planning, OPTIMIZATION_r16.md). So the rounds are
+    * RDD jobs over one hash partitioner — edges partitioned by dst once,
+    * labels co-partitioned by vertex, so each round is ONE reduceByKey
+    * shuffle plus narrow joins: min label over the closed neighborhood,
+    * `changed` = vertices whose neighbor-min undercut their label,
+    * converged when none did. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
+    val ends = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
+    val t = GraphIds.idType(ends, "src")
     // Materialize the edge list ONCE: `edges` is typically the lazy plan
     // of a whole near-dup pipeline (shingle → MinHash → band join →
     // verify); without this, every propagation round re-executes it.
-    // Edges are pair-sized (≪ corpus), so the checkpoint is cheap.
-    val und = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .union(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
+    // Edges are pair-sized (≪ corpus), so the checkpoint is cheap. A
+    // null-endpoint edge leaves a vertex-only row (src, null), and every
+    // null src collapses into one (null, null) row.
+    val und = ends.select(col("src").cast(LongType).as("src"),
+        when(col("src").isNotNull, col("dst").cast(LongType)).as("dst"))
       .distinct()
       .localCheckpoint(true)
-    val longIds = und.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    // the null probe rides the same tiny checkpointed table the rounds
-    // read — as an RDD job (a relational filter+isEmpty would pay the
-    // very per-probe Catalyst pass the routing exists to avoid)
-    val nullFree = longIds &&
-      und.rdd.filter(r => r.isNullAt(0) || r.isNullAt(1)).isEmpty()
-    val out =
-      if (nullFree) ccRoundsRdd(und, maxIter)
-      else ccRoundsRelational(und, maxIter)
-    // the returned plan reads only the FINAL label checkpoint; the edge
-    // table was a loop-only input
-    graft.ops.Checkpoints.release(und)
-    out
+    val out = ccRoundsRdd(und, maxIter)
+    // the returned plan reads only the label checkpoint; the edge table
+    // was a loop-only input
+    Checkpoints.release(und)
+    GraphIds.narrow(out, t, "v", "component")
   }
 
-  /** Label-propagation rounds as RDD jobs (see [[connectedComponents]]).
-    * Exact replay of the relational rounds: min label over the closed
-    * neighborhood, `changed` = vertices whose neighbor-min undercut
-    * their label, converged when none did. */
-  private[graft] def ccRoundsRdd(und: DataFrame, maxIter: Int): DataFrame = {
-    val spark = und.sparkSession
-    val undRdd = und.rdd.map(r => (r.getLong(0), r.getLong(1)))
+  /** The label-propagation rounds over the normalized edge checkpoint
+    * `und` (src, dst): long ids, (src, null) for a vertex-only row. */
+  private def ccRoundsRdd(und: DataFrame, maxIter: Int): DataFrame = {
+    val rows = und.rdd
     // data-adaptive width: the checkpointed edge table's partition count
     // (AQE-coalesced small locally, wide at scale) — never a constant
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(1, undRdd.getNumPartitions))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val p = new HashPartitioner(math.max(1, rows.getNumPartitions))
     // edges keyed by dst ONCE (the side each round joins labels on)
-    val byDst = undRdd.map { case (s, d) => (d, s) }.partitionBy(p).persist(lvl)
-    var labels = undRdd.map(_._1).distinct(p.numPartitions)
-      .map(v => (v, v)).partitionBy(p).persist(lvl)
+    val byDst = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(1), r.getLong(0))).partitionBy(p).persist(Lvl)
+    var labels: RDD[(Long, Long)] = rows.filter(!_.isNullAt(0))
+      .map(_.getLong(0)).distinct(p.numPartitions)
+      .map(v => (v, v)).partitionBy(p).persist(Lvl)
     // the PERSISTED handle backing `labels` (mapValues below wraps it in
     // a new RDD — unpersisting the wrapper would leak the blocks)
-    var owner: org.apache.spark.rdd.RDD[_] = labels
+    var owner: RDD[_] = labels
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -107,56 +108,22 @@ object Clusters {
       val next = labels.leftOuterJoin(nmin).mapValues { case (l, o) =>
         val m = o.fold(l)(math.min(l, _))
         (m, o.exists(_ < l))
-      }.persist(lvl)
+      }.persist(Lvl)
       changed = next.filter(_._2._2).count()
       owner.unpersist(blocking = false)
       owner = next
       labels = next.mapValues(_._1)
       iter += 1
     }
-    val outRdd = labels.map { case (v, l) =>
-      org.apache.spark.sql.Row(v, l) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val out = spark.createDataFrame(outRdd, schema).localCheckpoint(true)
+    val nullable = und.schema("src").nullable
+    val schema = StructType(Seq(StructField("v", LongType, nullable),
+      StructField("component", LongType, nullable)))
+    val outRdd = labels.map { case (v, l) => Row(v, l) }
+      .union(rows.filter(_.isNullAt(0)).map(_ => Row(null, null)))
+    val out = und.sparkSession.createDataFrame(outRdd, schema).localCheckpoint(true)
     owner.unpersist(blocking = false)
     byDst.unpersist(blocking = false)
     out
-  }
-
-  /** The original relational rounds — the routing fallback for null /
-    * non-long vertex ids, and the spec's equivalence reference. */
-  private[graft] def ccRoundsRelational(und: DataFrame, maxIter: Int): DataFrame = {
-    var labels = und.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(true)
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      // min label over the closed neighborhood (self ∪ neighbors)
-      val neighborMin = und
-        .join(labels.withColumnRenamed("v", "dst"), "dst")
-        .groupBy(col("src").as("v"))
-        .agg(min("label").as("nmin"))
-      val next = labels.join(neighborMin, Seq("v"), "left")
-        .select(col("v"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-          (col("nmin") < col("label")).as("__chg"))
-      val mat = next.localCheckpoint(true)
-      changed = mat.filter(col("__chg")).count()
-      // the eager checkpoint above fully materialized `mat`, so the
-      // PREVIOUS round's label blocks are dead — release them now
-      // instead of accumulating vertex-cardinality tables × rounds in
-      // executor storage until a driver GC + ContextCleaner pass (the
-      // round-11 ADVICE leak class, amplified by iteration)
-      graft.ops.Checkpoints.release(labels)
-      labels = mat.drop("__chg")
-      iter += 1
-    }
-    labels.select(col("v"), col("label").as("component"))
   }
 
   /** Cluster assignment for near-dup pairs + representative flag:
@@ -168,171 +135,87 @@ object Clusters {
 
   // ---- large-star / small-star alternation ------------------------------
 
-  /** Large-star: for each vertex u, link every LARGER neighbor to the
-    * min of u's closed neighborhood. Connectivity-preserving; shrinks
-    * tall structures toward their minimum.
-    *
-    * The per-u neighborhood min is a WINDOW over the same `u` the old
-    * groupBy+join form shuffled on (the capBuckets lesson: the window
-    * slots into one exchange+sort where aggregate-then-join-back pays
-    * the aggregation exchange AND a join per round — measured on q92
-    * this halved the per-round stage count; identical row set). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-      .withColumn("m", least(col("u"), min(col("v")).over(w)))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Small-star: direct every edge large→small, then link each vertex's
-    * smaller neighbors (and itself) to the neighborhood minimum. Same
-    * windowed-min shape as [[largeStar]]; the one (u → m) self row the
-    * old form unioned in (a second pass over the aggregate) is emitted
-    * from the single row whose v IS the minimum (`dir` is distinct, so
-    * exactly one row per u qualifies) — one pass, no union, no join. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-    e.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .filter(col("u") =!= col("v")).distinct()
-      .withColumn("m", min(col("v")).over(w))
-      .select(explode(when(col("v") === col("m"),
-          array(struct(col("v").as("n"), col("m")),
-            struct(col("u").as("n"), col("m"))))
-        .otherwise(array(struct(col("v").as("n"), col("m"))))).as("nm"))
-      .select(col("nm.n").as("u"), col("nm.m").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** One large-star + small-star round over an (u, v) edge frame —
-    * exposed for plan inspection (PlanPeek `starround`): the loop-body
-    * shape never appears in the final query's explain because each round
-    * materializes behind a localCheckpoint. */
-  private[graft] def starRound(e: DataFrame): DataFrame =
-    smallStar(largeStar(e))
-
   /** Connected components by the large-star/small-star alternation
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     * the adversarial-graph escape hatch for [[connectedComponents]]:
     * label propagation needs DIAMETER rounds, this converges in
-    * O(log² n) (O(log n) in practice) with the same equi-join/agg round
-    * shape, so a 10⁶-vertex chain costs ~20 rounds instead of 10⁶.
-    * Near-dup graphs are shallow, so propagation usually wins on
-    * constant factors; prefer this variant when components may be long
-    * chains (linked citations, threaded conversations).
+    * O(log² n) (O(log n) in practice), so a 10⁶-vertex chain costs ~20
+    * rounds instead of 10⁶. Near-dup graphs are shallow, so propagation
+    * usually wins on constant factors; prefer this variant when
+    * components may be long chains (linked citations, threaded
+    * conversations).
     *
+    * One round, over the loop-free distinct edge set:
+    *   - large-star: for each vertex u, link every LARGER neighbor to the
+    *     min of u's closed neighborhood;
+    *   - small-star: direct every edge large→small, then link each
+    *     vertex's smaller neighbors (and itself) to the neighborhood min.
+    * Both are connectivity-preserving long min/compare work, so the
+    * rounds run as RDD jobs (the [[connectedComponents]] argument).
     * Convergence = edge-set fixed point, detected by an
-    * order-independent signature (count + sum of per-edge hashes) — one
-    * tiny aggregate per round, no driver-side edge list. Same output
-    * contract as [[connectedComponents]]: (v, component = min reachable
-    * vertex), every endpoint of `edges` present. */
+    * order-independent signature (count + Σ xxhash64(u, v), the same
+    * XXH64 kernel Spark's `xxhash64` evaluates) — one tiny aggregate per
+    * round, no driver-side edge list. The fixed point is a forest of
+    * stars rooted at each component's min. Same output contract as
+    * [[connectedComponents]]: (v, component = min reachable vertex),
+    * every endpoint of `edges` present. */
   def connectedComponentsStar(edges: DataFrame, aCol: String, bCol: String,
                               maxIter: Int = 25): DataFrame = {
-    val raw = edges.select(col(aCol).as("u"), col(bCol).as("v"))
+    val raw = edges.select(col(aCol).cast(LongType).as("u"),
+      col(bCol).cast(LongType).as("v"))
+    val ends = edges.select(col(aCol).as("v")).union(edges.select(col(bCol).as("v")))
+    val t = GraphIds.idType(ends, "v")
     // all vertices up front (before the self-loop filter: a vertex seen
     // only in a self-loop still owes an output row)
     val verts = raw.select(col("u").as("v")).union(raw.select("v")).distinct()
       .localCheckpoint(true)
+    // u =!= v also drops every null-endpoint edge (null <> x is null)
     val e0 = raw.filter(col("u") =!= col("v")).distinct()
       .localCheckpoint(true)
-    // ROUTING (the connectedComponents argument, same measurement): the
-    // star rounds are long min/max/compare work — RDD jobs skip the
-    // per-round Catalyst pass. `e0`'s u =!= v filter already dropped
-    // every null row (null <> x is null), so long ids alone decide.
-    val longIds = e0.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    val fixed =
-      if (longIds) starFixedPointRdd(e0, maxIter)
-      else starFixedPointRelational(e0, maxIter)
-    // e0 was loop-only input (unless the loop converged at round zero
-    // and returned it unchanged)
-    if (fixed ne e0) graft.ops.Checkpoints.release(e0)
-    // fixed point is a forest of stars rooted at each component's min:
-    // children point at the root; roots label themselves
-    verts.join(fixed.select(col("u").as("v"), col("v").as("__root")), Seq("v"), "left")
-      .select(col("v"), coalesce(col("__root"), col("v")).as("component"))
+    val fixed = starFixedPointRdd(e0, maxIter)
+    Checkpoints.release(e0)
+    // children point at the root; roots label themselves, and a null
+    // vertex matches no edge
+    GraphIds.narrow(
+      verts.join(fixed.select(col("u").as("v"), col("v").as("__root")), Seq("v"), "left")
+        .select(col("v"), coalesce(col("__root"), col("v")).as("component")),
+      t, "v", "component")
   }
 
-  /** Relational star alternation to the edge-set fixed point — the
-    * routing fallback for non-long vertex ids, and the spec's
-    * equivalence reference. */
-  private[graft] def starFixedPointRelational(e0: DataFrame,
-                                              maxIter: Int): DataFrame = {
-    var e = e0
-    def signature(d: DataFrame): (Long, java.math.BigDecimal) = {
-      // decimal sum: ANSI mode would throw on a long-sum overflow
-      val r = d.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).collect()(0)
-      (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-    }
-    var sig = signature(e)
-    var iter = 0
-    var converged = e.isEmpty
-    while (!converged && iter < maxIter) {
-      val prev = e
-      e = smallStar(largeStar(e)).localCheckpoint(true)
-      // eager checkpoint: the previous round's edge blocks are dead —
-      // release per round instead of accumulating until a driver GC
-      // (never releases e0 — the caller owns it)
-      if (prev ne e0) graft.ops.Checkpoints.release(prev)
-      val next = signature(e)
-      converged = next == sig
-      sig = next
-      iter += 1
-    }
-    e
-  }
-
-  /** Star alternation rounds as RDD jobs — exact replay of
-    * [[starFixedPointRelational]]: same per-round edge SETS (distinct
-    * long pairs, min/compare logic mirrored row for row), same
-    * convergence signature (count + Σ xxhash64(u,v), replayed via the
-    * same XXH64 kernel Spark's `xxhash64` evaluates), so the stopping
-    * round and the fixed-point edge set are identical
-    * (ClustersRoutingSpec pins it). */
-  private[graft] def starFixedPointRdd(e0: DataFrame, maxIter: Int): DataFrame = {
-    import org.apache.spark.rdd.RDD
+  /** The star rounds over the checkpointed loop-free edge set `e0`, to
+    * the edge-set fixed point (or `maxIter` rounds). */
+  private def starFixedPointRdd(e0: DataFrame, maxIter: Int): DataFrame = {
     val spark = e0.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var e: RDD[(Long, Long)] = e0.rdd
-      .map(r => (r.getLong(0), r.getLong(1))).persist(lvl)
+      .map(r => (r.getLong(0), r.getLong(1))).persist(Lvl)
     val np = math.max(1, e.getNumPartitions)
-    val p = new org.apache.spark.HashPartitioner(np)
-    def xx(u: Long, v: Long): Long =
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(v,
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(u, 42L))
+    val p = new HashPartitioner(np)
     def signature(d: RDD[(Long, Long)]): (Long, BigInt) =
-      d.map { case (u, v) => (1L, BigInt(xx(u, v))) }
+      d.map { case (u, v) => (1L, BigInt(XXH64.hashLong(v, XXH64.hashLong(u, 42L)))) }
         .aggregate((0L, BigInt(0)))(
           (a, b) => (a._1 + b._1, a._2 + b._2),
           (a, b) => (a._1 + b._1, a._2 + b._2))
-    def largeStarR(d: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+    def largeStar(d: RDD[(Long, Long)]): RDD[(Long, Long)] = {
       val sym = d.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
       val mins = sym.reduceByKey(p, math.min(_: Long, _: Long))
-      // NO trailing distinct (one shuffle per round saved): smallStarR's
-      // `dir ... distinct` dedups this output anyway, so every
-      // POST-ROUND edge set (and therefore the convergence signature and
-      // the fixed point) is identical — only the intermediate multiset
-      // between the two star ops carries duplicates, bounded by 2|E|
-      // rows, and the distinct's map-side combine collapses them at the
-      // same place the dropped shuffle would have.
+      // no trailing distinct (one shuffle per round saved): smallStar's
+      // `dir ... distinct` dedups this output anyway, so every post-round
+      // edge set (and so the signature and the fixed point) is the same;
+      // only the multiset between the two star ops carries duplicates,
+      // bounded by 2|E| rows and collapsed by the distinct's map-side
+      // combine.
       sym.partitionBy(p).join(mins).flatMap { case (u, (v, minv)) =>
         val m = math.min(u, minv)
         if (v > u && v != m) Iterator((v, m)) else Iterator.empty
       }
     }
-    def smallStarR(d: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+    def smallStar(d: RDD[(Long, Long)]): RDD[(Long, Long)] = {
       val dir = d.map { case (u, v) => (math.max(u, v), math.min(u, v)) }
         .filter { case (u, v) => u != v }.distinct(np)
       val mins = dir.reduceByKey(p, math.min(_: Long, _: Long))
+      // (v, m) always, plus (u, m) on the one row whose v IS the min;
+      // self links dropped
       dir.partitionBy(p).join(mins).flatMap { case (u, (v, m)) =>
-        // relational smallStar emits (v, m) always plus (u, m) on the
-        // one row whose v IS the min, then filters n != m
         if (v == m) { if (u != m) Iterator((u, m)) else Iterator.empty }
         else Iterator((v, m))
       }.distinct(np)
@@ -342,20 +225,17 @@ object Clusters {
     var converged = sig._1 == 0L
     while (!converged && iter < maxIter) {
       val prev = e
-      e = smallStarR(largeStarR(e)).persist(lvl)
+      e = smallStar(largeStar(e)).persist(Lvl)
       val next = signature(e) // materializes the round
       prev.unpersist(blocking = false)
       converged = next == sig
       sig = next
       iter += 1
     }
-    val outRdd = e.map { case (u, v) => org.apache.spark.sql.Row(u, v) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("u",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val out = spark.createDataFrame(outRdd, schema).localCheckpoint(true)
+    val schema = StructType(Seq(StructField("u", LongType, nullable = false),
+      StructField("v", LongType, nullable = false)))
+    val out = spark.createDataFrame(e.map { case (u, v) => Row(u, v) }, schema)
+      .localCheckpoint(true)
     e.unpersist(blocking = false)
     out
   }

@@ -1,7 +1,7 @@
 package graft.enrich
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Sector classification by ticker vote (SURVEY.md A1/A2,
@@ -23,31 +23,6 @@ import org.apache.spark.sql.functions._
   * replaced everywhere).
   */
 object SectorVote {
-
-  /** A1 as a typed `Aggregator[IN, BUF, OUT]` (SURVEY §2.10's UDAF
-    * mapping): buffer = per-sector counts, merge = map union, finish =
-    * thresholded mode with the same deterministic tie-break as
-    * `majority`. Usable as a `TypedColumn` in `Dataset.groupByKey(...)
-    * .agg(majorityAgg(num, denom).toColumn)` — partial aggregation
-    * (map-side combine) comes free from the Aggregator contract. */
-  def majorityAgg(num: Int = 2, denom: Int = 3): Aggregator[Int, Map[Int, Long], Option[Int]] =
-    new Aggregator[Int, Map[Int, Long], Option[Int]] {
-      def zero: Map[Int, Long] = Map.empty
-      def reduce(b: Map[Int, Long], sector: Int): Map[Int, Long] =
-        b.updated(sector, b.getOrElse(sector, 0L) + 1L)
-      def merge(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
-        b.foldLeft(a) { case (acc, (k, v)) => acc.updated(k, acc.getOrElse(k, 0L) + v) }
-      def finish(b: Map[Int, Long]): Option[Int] =
-        if (b.isEmpty) None
-        else {
-          val total = b.values.sum
-          val (sector, cnt) = b.minBy { case (k, v) => (-v, k) } // max cnt, min sector
-          if (cnt * denom > total * num) Some(sector) else None
-        }
-      def bufferEncoder: Encoder[Map[Int, Long]] = Encoders.kryo[Map[Int, Long]]
-      def outputEncoder: Encoder[Option[Int]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Option[Int]]()
-    }
 
   /** A1: majority vote. `pairs` has one row per (doc, sector) occurrence.
     * Returns (docCol, winnerCol, cnt, total) with winnerCol null when the
@@ -156,12 +131,11 @@ object SectorVote {
     * Buffer = per-code counts (bounded by the doc's distinct codes);
     * map-side partial aggregation collapses each doc's rows before the
     * exchange, and `finish` runs the trim-level cascade (same winner and
-    * tie-break semantics as `hierarchical`/`hierarchicalCompact`: max
-    * count, ties to the smallest code, first level clearing num/denom).
-    * Preferred at scale: the windowed form shuffled level-exploded rows
-    * (4×) and sorted per window; the compact form shuffles collected
-    * structs and evaluates interpreted array HOFs per row (measured ~2×
-    * slower than this at sf0.1). */
+    * tie-break semantics as `hierarchical`: max count, ties to the
+    * smallest code, first level clearing num/denom). Preferred at scale:
+    * the windowed form shuffled level-exploded rows (4×) and sorted per
+    * window; a collect-then-cascade form evaluates its array HOFs
+    * interpreted per row and measured ~2× slower than this at sf0.1. */
   def hierarchicalAgg(divisors: Seq[Long] = Seq(1L, 100L, 10000L, 1000000L),
                       levelLabels: Seq[String] = Seq("8", "6", "4", "2"),
                       num: Int = 1, denom: Int = 2): Aggregator[Long, Map[Long, Long], HierVote] = {
@@ -215,64 +189,5 @@ object SectorVote {
       def bufferEncoder: Encoder[Map[Long, Long]] = inner.bufferEncoder
       def outputEncoder: Encoder[HierVote] = inner.outputEncoder
     }
-  }
-
-  /** Historical alias for [[hierarchical]]. This USED to be a separate
-    * hash-agg implementation "like hierarchical but without the
-    * row_number window" (measured 3.4 vs 4.7 s at sf0.1 on the q24
-    * shape) — then `hierarchical` itself was rewritten to the same
-    * hash-agg cascade, leaving two near-line-for-line duplicates whose
-    * only difference was an equivalent argmax encoding
-    * (max(struct(lcnt, -code)) vs min(struct(-lcnt, code))). One body
-    * now serves both names; the SectorVoteSpec equivalence test that
-    * guarded the duplicate pins the delegation. */
-  def hierarchicalHashAgg(pairs: DataFrame, docCol: String, codeCol: String,
-                          divisors: Seq[Long] = Seq(1L, 100L, 10000L, 1000000L),
-                          levelLabels: Seq[String] = Seq("8", "6", "4", "2"),
-                          num: Int = 1, denom: Int = 2): DataFrame =
-    hierarchical(pairs, docCol, codeCol, divisors, levelLabels, num, denom)
-
-  /** `hierarchical` as a collect-then-cascade (two shuffles): aggregate
-    * (doc, code) counts, collect each doc's count list (bounded by the
-    * doc's distinct codes — order-sized here, never corpus-sized), and
-    * run the level cascade as per-row array expressions. Same result,
-    * same tie-breaks — but the aggregate()/transform() lambdas evaluate
-    * INTERPRETED (no whole-stage codegen for HOFs), and under full
-    * materialization this is the SLOWEST form at scale (sf0.1 3.2 s /
-    * ×30 37.6 s / ×100 166.8 s vs the typed hybrid's 2.6/12.9/45.9 —
-    * ScratchForms, noop sink). Kept for the shuffle-count comparison
-    * and for engines without typed aggregators; prefer the hybrid. */
-  def hierarchicalCompact(pairs: DataFrame, docCol: String, codeCol: String,
-                          divisors: Seq[Long] = Seq(1L, 100L, 10000L, 1000000L),
-                          levelLabels: Seq[String] = Seq("8", "6", "4", "2"),
-                          num: Int = 1, denom: Int = 2): DataFrame = {
-    require(divisors.length == levelLabels.length)
-    val collected = pairs
-      .groupBy(col(docCol), col(codeCol).cast("long").as("code"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(docCol)
-      .agg(collect_list(struct(col("code"), col("cnt"))).as("cc"),
-        sum("cnt").as("total"))
-    // per level: winner = arg-max of (sum cnt per trimmed code), ties to
-    // the smallest code; encoded as a fold over the distinct level codes
-    def winner(d: Long): Column = {
-      val lvlCodes = array_distinct(transform(col("cc"), c => (c.getField("code") / d).cast("long")))
-      val scored = transform(lvlCodes, lc => struct(
-        aggregate(col("cc"), lit(0L),
-          (acc, c) => acc + when((c.getField("code") / d).cast("long") === lc, c.getField("cnt")).otherwise(lit(0L))).as("lcnt"),
-        lc.as("lvl_code")))
-      val best = aggregate(scored, struct(lit(-1L).as("lcnt"), lit(Long.MaxValue).as("lvl_code")),
-        (b, x) => when(x.getField("lcnt") > b.getField("lcnt") ||
-            (x.getField("lcnt") === b.getField("lcnt") &&
-             x.getField("lvl_code") < b.getField("lvl_code")), x).otherwise(b))
-      when(best.getField("lcnt") * denom > col("total") * num, best.getField("lvl_code"))
-    }
-    val wins = divisors.zipWithIndex.foldLeft(collected) { case (df, (d, i)) =>
-      df.withColumn(s"w$i", winner(d))
-    }
-    val sector = coalesce(divisors.indices.map(i => col(s"w$i")): _*)
-    val level = coalesce(divisors.indices.map(i =>
-      when(col(s"w$i").isNotNull, lit(levelLabels(i)))): _*)
-    wins.select(col(docCol), sector.as("sector"), level.as("level"))
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * base-10 string render, then a string→long cast — all to read the
   * first 4–8 digest bytes as an integer. On per-gram hot paths (q160's
   * sketch base rows, q33's hashing-trick embedding) the string machinery
-  * dominated the digest itself (R16Probe `q160`: base rows 1.18 s at
-  * sf0.1). The kernel is VALUE-IDENTICAL: the first `nibbles` hex chars
+  * dominated the digest itself (q160's base rows: 1.1–1.2 s of ~2.3 s at
+  * sf0.1, OPTIMIZATION_r16.md §5). The kernel is VALUE-IDENTICAL: the first `nibbles` hex chars
   * of the md5 hex encoding read as an unsigned big-endian integer are
   * exactly the high `4·nibbles` bits of the digest, so every oracle
   * mirror (`('0x' || substr(md5(x),1,k))::BIGINT` / conv-form SQL) is

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition by iterative peeling: repeatedly delete nodes
   * whose (undirected) degree is below k; what survives is the maximal
@@ -24,13 +27,13 @@ import org.apache.spark.sql.functions._
   * the early exit is result-invisible — it exists because q134 runs
   * THREE peels whose k=2/3 members converge in a round or two, and
   * 24 materialized no-op rounds at ×100 cost ~35 s of pure overhead.
-  * The per-round count() reads an already-materialized localCheckpoint.
+  * The per-round count() is the job that materializes the persisted
+  * round.
   *
-  * Scale per round: two windowed degree counts (one exchange per edge
-  * endpoint — deg(x) is the row count of x on either side of a
-  * symmetrized edge list), no joins; `localCheckpoint` truncates the
-  * iterative lineage (the `Clusters` lesson). Edge state only ever
-  * shrinks.
+  * Scale per round: one degree count (deg(x) is the row count of x on
+  * either side of a symmetrized edge list) and two co-partitioned
+  * filter-joins; each round is persisted and its predecessor released.
+  * Edge state only ever shrinks.
   */
 object KCore {
 
@@ -48,42 +51,43 @@ object KCore {
   /** Nodes of the k-core of the (symmetrized, de-duplicated, loop-free)
     * graph, with their within-core degree. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      rounds: Int): DataFrame =
-    kCoreOfSymmetrized(symmetrize(edges, srcCol, dstCol), k, rounds)
+      rounds: Int): DataFrame = {
+    val sym = symmetrize(edges, srcCol, dstCol)
+    val out = kCoreOfSymmetrized(sym, k, rounds)
+    Checkpoints.release(sym) // the result is its own checkpoint
+    out
+  }
 
   /** [[kCore]] over edges ALREADY passed through [[symmetrize]] (both
     * directions present, deduped, loop-free, materialized, columns
     * (a, b)) — the entry point for sharing the symmetrization across
-    * several k. */
+    * several k.
+    *
+    * A peeling round is pure long count/compare work, so the rounds run
+    * as RDD jobs (a relational round paid a fresh Catalyst pass plus two
+    * window sorts). Integral ids are read as long once, when the rounds
+    * read `sym`, and the output node is cast back to `sym`'s id type; a
+    * row with a null endpoint is dropped (symmetrize's a =!= b filter
+    * already drops them). In a symmetrized edge set deg-by-a equals
+    * deg-by-b for the same node and the keep criterion
+    * `deg(a)>=k && deg(b)>=k` is symmetric, so each round keeps the edge
+    * set the oracle's unrolled rounds keep. One degree reduceByKey plus
+    * two filter-joins per round, zero per-round plans. */
   def kCoreOfSymmetrized(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k>=1, rounds>=1; got k=$k rounds=$rounds")
-    // ROUTING (the Clusters/PageRank pattern): a peeling round is pure
-    // long count/compare work, and the relational rounds each paid a
-    // fresh Catalyst pass plus TWO window sorts; with long, null-free
-    // ids the rounds run as RDD jobs (KCoreRoutingSpec pins equality).
-    // symmetrize()'s a =!= b filter already drops null endpoints, so
-    // the null probe (one RDD job over the tiny checkpoint) only guards
-    // callers that bypassed it.
-    val longIds = sym.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds &&
-        sym.rdd.filter(r => r.isNullAt(0) || r.isNullAt(1)).isEmpty())
-      kCoreRdd(sym, k, rounds)
-    else kCoreRelationalOfSymmetrized(sym, k, rounds)
+    val t = GraphIds.idType(sym, "a")
+    GraphIds.idType(sym, "b")
+    GraphIds.narrow(kCoreRdd(sym, k, rounds), t, "node")
   }
 
-  /** Peeling rounds as RDD jobs — exact replay of the relational
-    * rounds: in a symmetrized edge set deg-by-a equals deg-by-b for the
-    * same node and the keep criterion `deg(a)>=k && deg(b)>=k` is
-    * symmetric, so each round's surviving edge SET (and therefore the
-    * early-exit round) is identical. One degree reduceByKey plus two
-    * filter-joins per round, zero per-round plans. */
-  private[graft] def kCoreRdd(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
+  /** The peeling rounds; output node ids are long. */
+  private def kCoreRdd(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = sym.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var e = sym.rdd.map(r => (r.getLong(0), r.getLong(1))).persist(lvl)
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(1, e.getNumPartitions))
+    val lvl = StorageLevel.MEMORY_AND_DISK
+    var e = sym.select(col("a").cast(LongType), col("b").cast(LongType)).rdd
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(0), r.getLong(1))).persist(lvl)
+    val p = new HashPartitioner(math.max(1, e.getNumPartitions))
     var remaining = e.count()
     var converged = false
     (1 to rounds).foreach { _ =>
@@ -104,52 +108,12 @@ object KCore {
       }
     }
     val degOut = e.map { case (a, _) => (a, 1L) }.reduceByKey(_ + _)
-      .map { case (node, deg) => org.apache.spark.sql.Row(node, deg) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("deg",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+      .map { case (node, deg) => Row(node, deg) }
+    val schema = StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("deg", LongType, nullable = false)))
     val out = spark.createDataFrame(degOut, schema).localCheckpoint(true)
     e.unpersist(blocking = false)
     out
-  }
-
-  /** The original relational rounds — routing fallback and the spec's
-    * equivalence reference. */
-  private[graft] def kCoreRelationalOfSymmetrized(sym: DataFrame, k: Int,
-                                                  rounds: Int): DataFrame = {
-    var e = sym
-    var remaining = e.count()
-    var converged = false
-    // Per-round degrees as WINDOW counts over the two exchanges the
-    // round pays anyway (the Clusters.largeStar lesson): in a
-    // symmetrized graph the a-side row count of node x IS deg(x), and so
-    // is the b-side count, so `deg(a) >= k AND deg(b) >= k` filters the
-    // same edge set the old degree-agg + two semi-joins kept — at two
-    // exchanges and zero joins per round instead of three exchanges and
-    // two joins.
-    val wa = org.apache.spark.sql.expressions.Window.partitionBy("a")
-    val wb = org.apache.spark.sql.expressions.Window.partitionBy("b")
-    (1 to rounds).foreach { _ =>
-      if (!converged) {
-        val prev = e
-        e = e.withColumn("__da", count(lit(1)).over(wa))
-          .withColumn("__db", count(lit(1)).over(wb))
-          .filter(col("__da") >= k && col("__db") >= k)
-          .select("a", "b")
-          .localCheckpoint(true)
-        // the eager checkpoint makes the previous round's blocks dead —
-        // release per round (the Clusters lesson), EXCEPT the caller's
-        // input `sym`, which q134-style callers share across several k
-        if (prev ne sym) graft.ops.Checkpoints.release(prev)
-        val now = e.count()
-        converged = now == remaining // fixpoint: every further round is a no-op
-        remaining = now
-      }
-    }
-    e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-      .select(col("a").as("node"), col("deg"))
   }
 
   /** The same peeling as `rounds` unrolled SQL CTEs over a directed

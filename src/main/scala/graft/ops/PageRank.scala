@@ -1,13 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Damped PageRank by iterative join-aggregation — centrality over the
   * kNN similarity graph ranks prototypical documents (graph-based data
-  * selection), the same shape GraphX's `staticPageRank` computes but as
-  * pure DataFrame ops: no RDD round-trip, Catalyst/AQE plan each round,
-  * and the decimal-sum trick makes every round bit-identical across any
+  * selection), the same shape GraphX's `staticPageRank` computes, with
+  * the decimal-sum trick making every round bit-identical across any
   * partitioning (and against a DuckDB oracle — [[graft.similarity.Pca]]'s
   * pattern applied to graph iteration).
   *
@@ -27,12 +30,13 @@ import org.apache.spark.sql.functions._
   * Scale shape: the edge list (checkpointed once, with its quantized
   * reciprocal) is the only corpus-sized table; each round is one
   * edge⋈rank join + one map-side-combined aggregation + one node-sized
-  * left join, and `localCheckpoint` caps the lineage (the Clusters
-  * pattern). Driver holds nothing but the node count.
+  * left join, and one `localCheckpoint` of the result caps the lineage.
+  * Driver holds nothing but the node count.
   */
 object PageRank {
 
   private val Dec = "decimal(28,12)"
+  private val Lvl = StorageLevel.MEMORY_AND_DISK
 
   /** `iters` rounds over `edges`; returns (idCol, pr). */
   def run(nodes: DataFrame, idCol: String, edges: DataFrame,
@@ -68,66 +72,48 @@ object PageRank {
   /** The shared damped-iteration core over a prepared
     * (__src, __dst, __recip) edge table.
     *
-    * ROUTING (the Clusters/KMeans pattern, round-15's central finding):
-    * a round's per-edge work is one multiply + decimal quantize and its
-    * per-node work one fused sum — nothing for Catalyst to codegen that
-    * an RDD `reduceByKey` doesn't already do, while each relational
-    * round paid a fresh analyze/optimize pass (q104's five rounds
-    * measured ~1.2 s at sf0.1 on a 6k-edge graph: ~all planning). With
-    * long ids and a null-free edge/node checkpoint, the rounds run as
-    * RDD jobs replaying the engine arithmetic exactly
-    * ([[iterateRdd]]); anything else keeps the relational rounds. */
+    * Normalization, once, inside the two checkpoints the core takes:
+    * integral ids are cast to long (the output id is cast back to the
+    * node id type), and an edge with a null endpoint or a null recip is
+    * dropped — it contributes nothing, exactly as in an equi-join where
+    * a null contribution is skipped by the sum. (A weighted recip is
+    * null when all of a source's weights are null.) A null node id
+    * stays a node: it counts toward n and gets the teleport mass only.
+    *
+    * The rounds run as RDD jobs: a round's per-edge work is one
+    * multiply + decimal quantize and its per-node work one fused sum —
+    * nothing for Catalyst to codegen that an RDD `reduceByKey` doesn't
+    * already do, while a relational round paid a fresh analyze/optimize
+    * pass (q104's five rounds measured ~1.2 s at sf0.1 on a 6k-edge
+    * graph: ~all planning, OPTIMIZATION_r16.md). The engine arithmetic
+    * is replayed exactly: per-edge contribution =
+    * `BigDecimal.valueOf(pr*recip).setScale(12, HALF_UP)` (Spark's
+    * double→decimal(28,12) cast; non-finite or >28-digit values cast to
+    * null = skip, the Pca recipe), per-node sum is exact decimal
+    * addition (order-free), `__in` = `BigDecimal.doubleValue` (the
+    * decimal→double cast), and the damped update is the double
+    * expression `teleport + damping·in`. One co-partitioned join + one
+    * reduceByKey shuffle per round, zero per-round plans; the whole
+    * iteration executes as ONE job at materialization. */
   private def iterate(nodes: DataFrame, idCol: String, edgesRecip: DataFrame,
                       iters: Int, damping: Double,
                       teleportNumerator: Double): DataFrame = {
-    val e = edgesRecip.localCheckpoint(true)
-    val ids = nodes.select(col(idCol).as("__id")).localCheckpoint(true)
-    val out =
-      if (rddRoutable(e, ids))
-        iterateRdd(e, ids, idCol, iters, damping, teleportNumerator)
-      else iterateRelational(e, ids, idCol, iters, damping, teleportNumerator)
-    if (iters >= 1) { Checkpoints.release(e); Checkpoints.release(ids) }
-    out
-  }
-
-  /** The routing decision (exposed for PageRankRoutingSpec): long ids
-    * everywhere and a null-free edge/node checkpoint. The null probes
-    * are RDD jobs over the tiny checkpoints (no Catalyst pass — the
-    * Clusters routing note): a weighted recip CAN be null (all of a
-    * source's weights null ⇒ Σw null ⇒ null recip), and a null recip's
-    * contribution-skip is engine semantics the RDD form doesn't
-    * replay. */
-  private[graft] def rddRoutable(e: DataFrame, ids: DataFrame): Boolean = {
-    val longT = org.apache.spark.sql.types.LongType
-    e.schema("__src").dataType == longT &&
-      e.schema("__dst").dataType == longT &&
-      ids.schema("__id").dataType == longT &&
-      e.rdd.filter(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))
-        .isEmpty() &&
-      ids.rdd.filter(_.isNullAt(0)).isEmpty()
-  }
-
-  /** Damped rounds as RDD jobs — exact replay of [[iterateRelational]]'s
-    * engine arithmetic (PageRankRoutingSpec pins bit-equality):
-    * per-edge contribution = `BigDecimal.valueOf(pr*recip).setScale(12,
-    * HALF_UP)` (Spark's non-ANSI double→decimal(28,12) cast; non-finite
-    * or >28-digit values cast to null = skip, the Pca recipe), per-node
-    * sum is exact decimal addition (order-free), `__in` =
-    * `BigDecimal.doubleValue` (the decimal→double cast), and the damped
-    * update runs the same double expression tree. One co-partitioned
-    * join + one reduceByKey shuffle per round, zero per-round plans;
-    * the whole iteration executes as ONE job at materialization. */
-  private def iterateRdd(e: DataFrame, ids: DataFrame, idCol: String,
-                         iters: Int, damping: Double,
-                         teleportNumerator: Double): DataFrame = {
-    val spark = e.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val spark = nodes.sparkSession
+    val t = GraphIds.idType(nodes, idCol)
+    Seq("__src", "__dst").foreach(GraphIds.idType(edgesRecip, _))
+    val e = edgesRecip
+      .filter(col("__src").isNotNull && col("__dst").isNotNull && col("__recip").isNotNull)
+      .select(col("__src").cast(LongType).as("__src"),
+        col("__dst").cast(LongType).as("__dst"), col("__recip"))
+      .localCheckpoint(true)
+    val ids = nodes.select(col(idCol).cast(LongType).as("__id")).localCheckpoint(true)
     val eRdd = e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-    val p = new org.apache.spark.HashPartitioner(
-      math.max(1, eRdd.getNumPartitions))
-    val bySrc = eRdd.partitionBy(p).persist(lvl)
-    val idsRdd = ids.rdd.map(r => (r.getLong(0), ())).partitionBy(p).persist(lvl)
-    val n = idsRdd.count()
+    val idRows = ids.rdd
+    val p = new HashPartitioner(math.max(1, eRdd.getNumPartitions))
+    val bySrc = eRdd.partitionBy(p).persist(Lvl)
+    val idsRdd = idRows.filter(!_.isNullAt(0)).map(r => (r.getLong(0), ()))
+      .partitionBy(p).persist(Lvl)
+    val n = idRows.count()
     val tele = teleportNumerator / n
     def quant(d: Double): java.math.BigDecimal =
       if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) null
@@ -136,8 +122,9 @@ object PageRank {
           .setScale(12, java.math.RoundingMode.HALF_UP)
         if (bd.precision > 28) null else bd
       }
-    var pr: org.apache.spark.rdd.RDD[(Long, Double)] =
-      idsRdd.mapValues(_ => 1.0 / n)
+    def damped(in: Option[java.math.BigDecimal]): Double =
+      tele + damping * in.map(_.doubleValue).getOrElse(0.0)
+    var pr: RDD[(Long, Double)] = idsRdd.mapValues(_ => 1.0 / n)
     for (_ <- 1 to iters) {
       val in = bySrc.join(pr) // both on `p`: narrow
         .flatMap { case (_, ((dst, recip), prv)) =>
@@ -146,53 +133,21 @@ object PageRank {
         }
         .reduceByKey(p, (a: java.math.BigDecimal, b: java.math.BigDecimal) =>
           a.add(b))
-      pr = idsRdd.leftOuterJoin(in).mapValues { case (_, o) =>
-        tele + damping * o.map(_.doubleValue).getOrElse(0.0)
-      }
+      pr = idsRdd.leftOuterJoin(in).mapValues { case (_, o) => damped(o) }
     }
-    val outRdd = pr.map { case (v, d) => org.apache.spark.sql.Row(v, d) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("pr",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
+    // a null id matches no edge: it keeps the value of a node nothing
+    // points at
+    val nullPr = if (iters == 0) 1.0 / n else damped(None)
+    val outRdd = pr.map { case (v, d) => Row(v, d) }
+      .union(idRows.filter(_.isNullAt(0)).map(_ => Row(null, nullPr)))
+    val schema = StructType(Seq(
+      StructField(idCol, LongType, ids.schema("__id").nullable),
+      StructField("pr", DoubleType, nullable = false)))
     val out = spark.createDataFrame(outRdd, schema).localCheckpoint(true)
     bySrc.unpersist(blocking = false)
     idsRdd.unpersist(blocking = false)
-    out
-  }
-
-  /** The original relational rounds — routing fallback (null recip /
-    * non-long ids) and the spec's equivalence reference. */
-  private[graft] def iterateRelational(e: DataFrame, ids: DataFrame,
-                                       idCol: String, iters: Int,
-                                       damping: Double,
-                                       teleportNumerator: Double): DataFrame = {
-    val n = ids.count()
-    var pr = ids.withColumn("__pr", lit(1.0 / n))
-    var lastCkpt: DataFrame = null
-    for (round <- 1 to iters) {
-      val in = e.join(pr.select(col("__id").as("__src"), col("__pr")), "__src")
-        .select(col("__dst").as("__id"),
-          (col("__pr") * col("__recip")).cast(Dec).as("__c"))
-        .groupBy("__id").agg(sum("__c").cast("double").as("__in"))
-      pr = ids.join(in, Seq("__id"), "left")
-        .select(col("__id"),
-          (lit(teleportNumerator / n) +
-            lit(damping) * coalesce(col("__in"), lit(0.0))).as("__pr"))
-      // checkpoint every OTHER round (and the last): caps lineage growth
-      // at two join+agg layers while halving the eager materializations —
-      // checkpoint cadence is a lineage concern only, the decimal
-      // quantization makes every round's VALUES partitioning-independent.
-      // Each new eager checkpoint makes its PREDECESSOR's blocks dead —
-      // release per round instead of accumulating node-cardinality
-      // tables × rounds until a driver GC (the Clusters lesson).
-      if (round % 2 == 0 || round == iters) {
-        pr = pr.localCheckpoint(true)
-        if (lastCkpt != null) graft.ops.Checkpoints.release(lastCkpt)
-        lastCkpt = pr
-      }
-    }
-    pr.select(col("__id").as(idCol), col("__pr").as("pr"))
+    Checkpoints.release(e)
+    Checkpoints.release(ids)
+    GraphIds.narrow(out, t, idCol)
   }
 }

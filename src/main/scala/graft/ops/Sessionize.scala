@@ -119,7 +119,7 @@ object Sessionize {
   }
 
   /** Auto-route threshold — the measured ×100 crossover
-    * (`SessionizeSkewProbe`, round 14, two runs, /tmp/graft-sf10 events
+    * (COVERAGE.md, round 14, two runs, ×100 events
     * ≈ 10M rows, planted hot keys, session_index 1.04/1.15):
     *
     *   hot key | plain s     | sharded s   | plain peak task

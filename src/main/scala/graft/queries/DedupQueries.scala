@@ -520,8 +520,8 @@ object DedupQueries {
         // materialize the batch's gate→hash→keeper→anti-join lineage
         // ONCE: `fresh` feeds THREE consumers (the LSH probe below, the
         // kept sink write, the seen write — four with the q173 ledger),
-        // and each re-ran the whole chain per batch (R16Probe `stream`:
-        // addBatch is 80-93% of the trio's trigger time). Blocks are
+        // and each re-ran the whole chain per batch (OPTIMIZATION_r16.md
+        // §3: addBatch is 80-93% of the trio's trigger time). Blocks are
         // released at the end of the batch body.
         val fresh = fresh0.localCheckpoint()
         val bh = fresh.select(col("doc_id"),
@@ -943,7 +943,7 @@ object DedupQueries {
       // eager checkpoint before the presentation sort: the range
       // exchange's bounds-sampling pass executes its child twice, and
       // here the child is the whole candidate-verify join (the q24
-      // lesson, Q24Profile) — ×100 28.95 -> 21.05 s min-of-2
+      // lesson, OPTIMIZATION_r15.md) — ×100 28.95 -> 21.05 s min-of-2
       .localCheckpoint(true)
       .orderBy("doc_a", "doc_b")
   }
@@ -1151,7 +1151,7 @@ object DedupQueries {
     // computed once and probed by every microbatch of both runs — the
     // staged-index shape from the historyBandRows scaladoc. Measured at
     // ×100 deployment shape (475k-doc history, 4 batches, min-of-2,
-    // BandIndexBench): prebuilt in-memory index 30.1 s vs per-batch
+    // COVERAGE.md "Band-index variants"): prebuilt in-memory index 30.1 s vs per-batch
     // recompute 37.1 s vs (band,key)-bucketed catalog table 32.2 s —
     // the bucketed table is the cross-JVM variant (its write amortizes
     // across sessions, which a localCheckpoint cannot), but within one

@@ -42,8 +42,8 @@ object EnrichQueries {
     * Uses the typed-Aggregator hybrid: base reduction stays relational
     * (codegen, map-side partials), the typed cascade sees only the
     * reduced (doc, code, cnt) rows with per-order buffers bounded by
-    * order size. Fastest of the four SectorVote forms at EVERY measured
-    * scale under full materialization (noop sink — ScratchForms):
+    * order size. Fastest of the four forms measured at EVERY
+    * scale under full materialization (noop sink, OPTIMIZATION_r15.md):
     * sf0.1 2.6 s / ×30 12.9 s / ×100 45.9 s, vs hash-agg cascade
     * 2.9/14.2/52.0, windowed 6.7/21.0/94.1, compact-HOF 3.2/37.6/166.8.
     * The compact form's HOF lambdas evaluate INTERPRETED per row, which
@@ -66,7 +66,7 @@ object EnrichQueries {
       // eager checkpoint BEFORE the presentation sort: a global sort's
       // range exchange runs a bounds-SAMPLING pass that executes its
       // child plan a second time, and here the child is the whole typed
-      // cascade over the reduced rows — Q24Profile measured the re-run
+      // cascade over the reduced rows — measured (COVERAGE.md) the re-run
       // at ~19 s of q24's ~59 s ×100 wall (full 58.7 vs checkpointed
       // 39.9 s min-of-2; the sort itself is ~free once its input is
       // materialized). sf0.1 is unchanged within noise (~150k rows).

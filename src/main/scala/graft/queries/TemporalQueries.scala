@@ -519,7 +519,7 @@ object TemporalQueries {
       // the sessionize stagings carry flush sentinels precisely so every
       // timer fires inside a DATA batch), and each no-data batch still
       // paid a full plan + offset/commit + state-store round
-      // (R16Probe `stream`). Read from the cloned session snapshotted at
+      // (OPTIMIZATION_r16.md §3). Read from the cloned session snapshotted at
       // start(), like the state sizing above.
       s.conf.set(NoDataKey, "false")
       joined.writeStream.format("memory").queryName(sink)

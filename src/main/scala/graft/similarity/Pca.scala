@@ -72,7 +72,7 @@ object Pca {
     * ~0.3 s/round of Catalyst analysis+planning+codegen on a BRAND-NEW
     * plan per round (the round vector is a literal, so no plan is ever
     * reused), vs 0.04 s to re-execute an already-planned identical query
-    * — measured in Q94Profile at sf0.1. The aggregate ships only the
+    * — measured at sf0.1 (OPTIMIZATION_r15.md). The aggregate ships only the
     * d-vector of partial sums per partition (depth-2 tree), strictly
     * less traffic than the old dims×partitions shuffle, and the RDD is
     * built from `xca` ONCE so the row-decode plan is compiled once.

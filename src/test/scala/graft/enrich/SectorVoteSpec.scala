@@ -53,34 +53,6 @@ class SectorVoteSpec extends SparkSpec {
     assert(shuffles.size == 1, plan.treeString)
   }
 
-  test("majorityAgg (typed Aggregator) matches the relational majority") {
-    val data = Seq((1L, 10), (1L, 10), (1L, 10), (1L, 20), (2L, 10), (2L, 20), (2L, 30))
-    val ds = data.toDF("doc", "sector").as[(Long, Int)]
-    val got = ds.groupByKey(_._1).mapValues(_._2)
-      .agg(SectorVote.majorityAgg().toColumn.name("maj"))
-      .collect().toMap
-    // mapValues to plain Option
-    assert(got(1L).contains(10) && got(2L).isEmpty)
-    val relational = SectorVote.majority(data.toDF("doc", "sector"), "doc", "sector")
-      .select("doc", "majority").as[(Long, Option[Int])].collect().toMap
-    assert(got == relational)
-  }
-
-  test("hierarchicalCompact matches hierarchical on varied inputs") {
-    val rnd = new scala.util.Random(7)
-    val pairs = Seq.tabulate(400) { _ =>
-      val doc = rnd.nextInt(40).toLong
-      val code = (rnd.nextInt(5) + 1) * 1000000L + rnd.nextInt(3) * 10000L +
-        rnd.nextInt(2) * 100L + rnd.nextInt(2)
-      (doc, code)
-    }.toDF("doc", "icb")
-    val a = SectorVote.hierarchical(pairs, "doc", "icb")
-      .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1)
-    val b = SectorVote.hierarchicalCompact(pairs, "doc", "icb")
-      .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1)
-    assert(a.sameElements(b))
-  }
-
   test("majorityFullAgg matches the relational majority incl. tallies") {
     val rnd = new scala.util.Random(23)
     val data = Seq.tabulate(300)(_ =>
@@ -130,21 +102,6 @@ class SectorVoteSpec extends SparkSpec {
       .agg(SectorVote.hierarchicalAggWeighted().toColumn.name("v"))
       .collect().map { case (d, v) => (d, v.sector, v.level) }.sortBy(_._1)
     assert(raw.sameElements(reduced))
-  }
-
-  test("hierarchicalHashAgg matches hierarchical on varied inputs") {
-    val rnd = new scala.util.Random(17)
-    val pairs = Seq.tabulate(400) { _ =>
-      val doc = rnd.nextInt(40).toLong
-      val code = (rnd.nextInt(5) + 1) * 1000000L + rnd.nextInt(3) * 10000L +
-        rnd.nextInt(2) * 100L + rnd.nextInt(2)
-      (doc, code)
-    }.toDF("doc", "icb")
-    val a = SectorVote.hierarchical(pairs, "doc", "icb")
-      .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1)
-    val b = SectorVote.hierarchicalHashAgg(pairs, "doc", "icb")
-      .as[(Long, Option[Long], Option[String])].collect().sortBy(_._1)
-    assert(a.sameElements(b))
   }
 
   test("hierarchical: monotonicity — coarser levels only gain votes") {

@@ -1,11 +1,10 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** Routing pin for the r16 k-core RDD rounds: RDD peeling must equal
-  * the relational peeling (same surviving edge set, same early-exit
-  * round) on nasty graphs; non-long ids keep the relational rounds. */
+/** Pins `KCore`'s RDD peeling to the relational peeling in
+  * [[KCoreReference]] (same surviving edge set, same early-exit round)
+  * on nasty graphs, and int ids through the public entry points. */
 class KCoreRoutingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,18 +18,22 @@ class KCoreRoutingSpec extends SparkSpec {
       .toDF("s", "d").repartition(5)
     val sym = KCore.symmetrize(edges, "s", "d")
     (2 to 4).foreach { k =>
-      val rdd = KCore.kCoreRdd(sym, k, rounds = 8)
+      val got = KCore.kCoreOfSymmetrized(sym, k, rounds = 8)
         .as[(Long, Long)].collect().sorted.toSeq
-      val rel = KCore.kCoreRelationalOfSymmetrized(sym, k, rounds = 8)
+      val ref = KCoreReference.kCoreRelationalOfSymmetrized(sym, k, rounds = 8)
         .as[(Long, Long)].collect().sorted.toSeq
-      assert(rdd == rel, s"k=$k")
+      assert(got == ref, s"k=$k")
+      assert(KCore.kCore(edges, "s", "d", k, rounds = 8)
+        .as[(Long, Long)].collect().sorted.toSeq == ref, s"kCore k=$k")
     }
   }
 
-  test("non-long ids route to the relational rounds (int ids still work)") {
+  test("int ids: kCore returns int node ids") {
     val g = Seq((1, 2), (2, 3), (1, 3), (3, 4)).toDF("s", "d")
     val got = KCore.kCore(g, "s", "d", k = 2, rounds = 5)
       .as[(Int, Long)].collect().toSet
     assert(got == Set((1, 2L), (2, 2L), (3, 2L)))
+    assert(got == KCoreReference.kCore(g, "s", "d", k = 2, rounds = 5)
+      .as[(Int, Long)].collect().toSet)
   }
 }
