@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+/** Dev tool: explain the named queries' plans (every SparkEntry query
+  * when given no names); greppable. */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[8]")
@@ -9,7 +11,8 @@ object PlanPeek {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    args.foreach { name =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
       println(s"===== $name =====")
       // "lsh:<Fetch|InBand|InBandTwoTier>" explains the near-dup pair
       // miner with a FORCED verify form (the registered q35 routes by

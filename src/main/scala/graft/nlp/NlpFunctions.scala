@@ -1,7 +1,6 @@
 package graft.nlp
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
 
@@ -63,8 +62,8 @@ object NlpFunctions {
     // growing linearly) and fixed the same way.
     val scored = tf.join(df.hint("shuffle_hash"), "term")
       .withColumn("score", col("tf") * log(lit(corpusSize.toDouble) / col("df")))
-    val w = Window.partitionBy(idCol).orderBy(col("score").desc, col("term").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    graft.plans.BoundedTopK.perGroup(scored.select(col(idCol), col("term"), col("score")),
+        Seq(idCol), Seq(col("score").desc, col("term").asc), k)
       .select(col(idCol), col("term"), col("score"), col("rank"))
   }
 

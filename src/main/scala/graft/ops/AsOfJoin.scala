@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
   * Skew note: the window partitions by key, so a single hot key sorts on
   * one task. If keys are few/hot, pre-split by time range (partition the
   * window by (key, coarse time bucket) and carry the last value of the
-  * previous bucket in a second, bucket-level pass) — same pattern as
-  * TopK's salting; not needed for dimensioned keys like user ids.
+  * previous bucket in a second, bucket-level pass); not needed for
+  * dimensioned keys like user ids.
   */
 object AsOfJoin {
 

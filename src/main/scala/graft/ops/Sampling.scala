@@ -16,7 +16,8 @@ import graft.text.TextOps
   * form. Each row draws u ~ U(0,1) from a deterministic content hash and
   * races with key = -ln(u)/w; the k SMALLEST keys are the sample. This
   * equals weighted sampling without replacement, and is embarrassingly
-  * parallel: per-partition top-k then a tiny global re-rank (TopK).
+  * parallel: per-partition top-k heaps then a tiny global merge (the
+  * TakeOrderedAndProject that `orderBy().limit()` lowers to).
   *
   * The uniform comes from the md5-derived 32-bit int (cross-engine
   * stable, `TextOps.md5Int32`) mapped to the open interval (0,1) via
@@ -44,8 +45,7 @@ object Sampling {
     * sample slots, silently biasing the shipped sample. */
   def weightedSample(df: DataFrame, idCol: String, weight: Column, k: Int): DataFrame =
     // global top-k: orderBy+limit lowers to a TakeOrderedAndProject
-    // bounded heap (no exchange) — same total order, same sample as the
-    // salted two-window form it replaces
+    // bounded heap (no exchange)
     df.filter(weight.isNotNull && weight > lit(0))
       .withColumn("sample_key", raceKey(col(idCol), weight))
       .orderBy(col("sample_key").asc, col(idCol).asc)

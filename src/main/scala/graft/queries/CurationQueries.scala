@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analysis.{BigramLm, Dsir, NaiveBayes, RidgeProbe, TextAnalysis, UnigramLm}
 import graft.dedup.{BloomDecontaminate, ChunkDedup, SubstringDedup}
-import graft.ops.{Apportion, Sampling, TopK}
+import graft.ops.{Apportion, Sampling}
 import graft.text.{Chunker, TextOps}
 
 /** Corpus-curation operators beyond round 3's set: sub-document dedup,
@@ -176,9 +176,9 @@ object CurationQueries {
     * hash order — the source-rebalancing pass a multi-corpus training mix
     * runs (up-weights small sources relative to proportional sampling).
     * Weights decimal-sum (partition-order independent); the per-source
-    * draw is the salted two-phase TopK at k = the global budget, then cut
-    * to each source's target — no low-cardinality window over raw rows,
-    * no collect-driven k. */
+    * draw is `plans/BoundedTopK` at k = the global budget, then cut to
+    * each source's target — no low-cardinality window over raw rows, no
+    * collect-driven k. */
   val q68SourceMixture: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
     val budget = 60
@@ -190,11 +190,11 @@ object CurationQueries {
       .withColumn("target",
         floor(lit(budget) * col("w").cast("double") / col("wsum").cast("double")).cast("long"))
       .select("source", "target")
-    val ranked = TopK.perGroup(
+    val ranked = graft.plans.BoundedTopK.perGroup(
       d.select(col("doc_id"), col("source"),
         TextOps.md5Int60(concat(lit("mix:"), col("doc_id").cast("string"))).as("hk")),
       groupCols = Seq("source"), order = Seq(col("hk").asc, col("doc_id").asc),
-      k = budget, saltOn = col("doc_id"), rankCol = "rank")
+      k = budget)
     ranked.join(broadcast(targets), Seq("source"))
       .filter(col("rank") <= col("target"))
       .select(col("source"), col("rank"), col("doc_id"))
@@ -217,8 +217,8 @@ object CurationQueries {
   /** One BPE-training step: corpus-wide adjacent character-pair counts
     * within tokens (the statistic each merge round of byte-pair-encoding
     * tokenizer training maximizes), top-20 by frequency. Pure explode +
-    * one hash aggregation on a high-cardinality key; the top-k cut is the
-    * salted two-phase TopK. At 100 TB this is the per-round inner loop of
+    * one hash aggregation on a high-cardinality key; the top-k cut is a
+    * TakeOrderedAndProject bounded heap. At 100 TB this is the per-round inner loop of
     * training a tokenizer on the corpus itself. */
   val q71BpeMergeStep: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")

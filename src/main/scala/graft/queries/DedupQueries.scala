@@ -998,9 +998,9 @@ object DedupQueries {
     * ops exist FOR, as one declarative plan: quality gate (length +
     * lexical-diversity, integer-arithmetic thresholds) → exact dedup
     * with deterministic keeper (`ExactDedup.keepers`) → per-source cap
-    * of 50 in deterministic md5 draw order (salted `ops/TopK` — the
-    * stratified-cap shape that never sorts a source's rows in one
-    * task). Three shuffles total (hash keepers, cap, final order);
+    * of 50 in deterministic md5 draw order (`plans/BoundedTopK` — the
+    * stratified-cap shape whose map-side heaps cut each source to 50
+    * rows per input partition before the exchange). Three shuffles total (hash keepers, cap, final order);
     * every stage is the library op, not a re-derivation. */
   val q118CurationPipeline: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
@@ -1014,9 +1014,8 @@ object DedupQueries {
     val keepers = ExactDedup.keepers(
       ExactDedup.withTextHash(gated, "text"),
       "text_hash", "doc_id", carryCols = Seq("source", "n_words"))
-    graft.ops.TopK.perGroup(keepers, Seq("source"),
-        Seq(md5(col("doc_id").cast("string")).asc, col("doc_id").asc),
-        k = 50, saltOn = hash(col("doc_id")), rankCol = "draw_rank")
+    graft.plans.BoundedTopK.perGroup(keepers, Seq("source"),
+        Seq(md5(col("doc_id").cast("string")).asc, col("doc_id").asc), k = 50)
       .select(col("doc_id"), col("source"), col("n_words"))
       .orderBy("source", "doc_id")
   }

@@ -116,17 +116,18 @@ object RelationalQueries {
   }
 
   /** Window ranking (L4 top-1 mode generalized): top-3 orders by price per
-    * priority class, ties broken by key for determinism. Uses the salted
-    * two-phase TopK (graft.ops.TopK) instead of a raw 5-partition window —
-    * the round-1 verdict's scale-killer — so no task ever sorts a whole
-    * priority class. */
+    * priority class, ties broken by key for determinism. Ranked by
+    * `plans/BoundedTopK` instead of a raw 5-partition window — the
+    * round-1 verdict's scale-killer — so no task ever sorts a whole
+    * priority class: the map-side heaps cut each class to k rows per
+    * input partition before the exchange. */
   val q06WindowTopK: Q = (s, dir) => {
     val ord = Tables(s, dir, "orders")
-    graft.ops.TopK
+    graft.plans.BoundedTopK
       .perGroup(ord, Seq("o_orderpriority"),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc),
-        k = 3, saltOn = hash(col("o_orderkey")))
-      .select("o_orderpriority", "rn", "o_orderkey", "o_totalprice")
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), k = 3)
+      .select(col("o_orderpriority"), col("rank").as("rn"), col("o_orderkey"),
+        col("o_totalprice"))
       .orderBy("o_orderpriority", "rn")
   }
 
@@ -420,8 +421,8 @@ object RelationalQueries {
 
   /** Correlated LATERAL subquery with ORDER BY + LIMIT 1 — per-supplier
     * top-revenue order through the SQL surface. Catalyst decorrelates
-    * the lateral into a window-ranked join (same physical shape as
-    * `ops/TopK`); revenue is the double product quantized to decimal
+    * the lateral into a window-ranked join whose WindowGroupLimit caps
+    * each group before the exchange; revenue is the double product quantized to decimal
     * before summing (the determinism contract). */
   val q120LateralTopOrder: Q = (s, dir) => {
     Tables(s, dir, "lineitem").createOrReplaceTempView("v_lineitem")
@@ -848,8 +849,8 @@ object RelationalQueries {
   }
 
   /** Per-priority top-3 orders through the CUSTOM PHYSICAL OPERATOR
-    * (`plans/BoundedTopK`: logical node → planner strategy → two-phase
-    * bounded-heap exec pair) — q06's semantics re-expressed below the
+    * (`plans/BoundedTopK`: logical node → planner strategy → map-side
+    * heaps, exchange, sort, streaming final) — q06's semantics below the
     * DataFrame API. The oracle is the window-ranked spelling, so green
     * means the custom operator is result-identical to the declarative
     * form (the q78 salted-vs-plain pattern, at the physical-plan rung). */

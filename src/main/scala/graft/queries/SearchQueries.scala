@@ -30,8 +30,8 @@ object SearchQueries {
 
   /** Inverted-index postings for the 30 highest-df terms: the ES index
     * structure materialized as a table (term → df, total_tf, first 10
-    * doc ids). Truncated posting lists come from the salted two-phase
-    * TopK (bounded buffers even for corpus-frequency terms — see
+    * doc ids). Truncated posting lists come from `plans/BoundedTopK`
+    * (bounded buffers even for corpus-frequency terms — see
     * `search/Search.scala` scaladoc), deterministically sorted. The
     * posting list is serialized to a CSV string so the result is flat
     * scalar columns (the compare harness can't sort/hash array cells). */
@@ -61,20 +61,18 @@ object SearchQueries {
     * lists. Docs absent from a list contribute nothing to the fused
     * score; ties break on doc_id.
     *
-    * Scale shape: BOTH candidate lists are k-bounded before fusion (BM25
-    * via its salted TopK, the dense side via TopK over a broadcast
-    * single-vector score) — the fusion join and the ranking windows run
-    * on ≤2k rows regardless of corpus size; the corpus is scanned once
-    * per ranker and never joined against itself. */
+    * Scale shape: BOTH candidate lists are k-bounded before fusion (each
+    * a global TakeOrderedAndProject heap; the dense side over a
+    * broadcast single-vector score) — the fusion join and the ranking
+    * windows run on ≤2k rows regardless of corpus size; the corpus is
+    * scanned once per ranker and never joined against itself. */
   val q87HybridRrf: Q = (s, dir) => {
-    import graft.ops.TopK
     import graft.similarity.Cosine
     val n = 100 // per-ranker candidate list size
     val d = Tables(s, dir, "documents")
-    // Bm25.topK already returns the global top-n (TakeOrdered heap);
-    // the outer salted TopK only ASSIGNED ranks over those ≤n rows —
-    // a plain window over the survivors does that without re-sorting
-    // the list through two more exchanges (≤100 rows, single partition)
+    // Bm25.topK already returns the global top-n (TakeOrdered heap); a
+    // plain window over those ≤n survivors assigns the ranks (≤100 rows,
+    // single partition)
     val lex = Bm25.topK(d, "doc_id", "text", terms, k = n)
       .withColumn("lex_rank", row_number().over(
         org.apache.spark.sql.expressions.Window

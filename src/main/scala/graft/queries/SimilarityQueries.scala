@@ -3,15 +3,15 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{KCore, PageRank, TopK, Triangles}
+import graft.ops.{KCore, PageRank, Triangles}
 import graft.similarity.{Cosine, IvfFlat, KMeans, Pca, ProductQuantizer, RandomHyperplaneLSH, ScalarQuantizer, SemanticDedup}
 
 /** Similarity-search operator coverage over `embeddings` (north-star ANN
   * operators; reference analog N8/N9 `tencent_api.py:111-136`).
   *
   * q21 is the exact baseline: brute-force cosine top-k with the query set
-  * broadcast (corpus is never shuffled; per-group top-k is the salted
-  * two-phase TopK, so no low-cardinality window over raw rows). Its oracle
+  * broadcast (corpus is never shuffled; per-group top-k is
+  * `plans/BoundedTopK`, so no low-cardinality window over raw rows). Its oracle
   * is ground truth.
   *
   * q22 is the scale path: random-hyperplane LSH bucketing. Its oracle
@@ -92,25 +92,19 @@ object SimilarityQueries {
   private def seedOf(corpus: DataFrame): DataFrame =
     corpus.filter(col("vec_id") <= nthLowestId(corpus, "vec_id", 16))
 
-  /** Exact brute-force cosine top-5 for 10 query vectors. Selection runs
-    * through the custom bounded-heap operator (`plans/BoundedTopK`) — the
-    * few-groups/hot-key shape is exactly its regime (measured 2× over
-    * the salted-window spelling on this workload; identical selection,
-    * see BoundedTopKSpec + the q144 parity oracle). Ranks are re-derived
-    * by a window over the k×groups SURVIVORS only (≤ 50 rows — the heap
-    * emits an unordered set, and the oracle's rank must be presentation-
-    * exact). */
+  /** Exact brute-force cosine top-5 for 10 query vectors. Selection and
+    * ranks come from the custom top-k operator (`plans/BoundedTopK`) —
+    * the few-groups/hot-key shape is exactly where its map-side heaps
+    * pay (measured 2× over the salted-window spelling on this workload;
+    * identical selection, see BoundedTopKSpec + the q144 parity
+    * oracle). */
   val q21CosineTopK: Q = (s, dir) => {
     val (queries, corpus) = parts(s, dir)
     val scored = corpus.crossJoin(
         broadcast(queries.select(col("vec_id").as("query_id"), col("vec").as("qvec"))))
       .withColumn("sim", Cosine.cosine(col("qvec"), col("vec")))
-    val top = graft.plans.BoundedTopK.perGroup(scored, Seq("query_id"),
-      Seq(col("sim").desc, col("vec_id").asc), K)
-    top
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("vec_id").asc)))
+    graft.plans.BoundedTopK.perGroup(scored, Seq("query_id"),
+        Seq(col("sim").desc, col("vec_id").asc), K)
       .select(col("query_id"), col("rank"), col("vec_id"), round(col("sim"), 6).as("sim"))
       .orderBy("query_id", "rank")
   }
@@ -188,9 +182,8 @@ object SimilarityQueries {
     * product — q21 recomputes `norm(q)·norm(c)` per candidate pair, an
     * O(pairs × dim) tax; at corpus scale the normalized vectors are what
     * you'd persist. Oracle normalizes identically in DuckDB. Selection
-    * is the second composite consumer of the bounded-heap operator
-    * (`plans/BoundedTopK`, same few-groups regime as q21); ranks are
-    * re-derived over the ≤ k×groups survivors only. */
+    * and ranking is the second composite consumer of
+    * `plans/BoundedTopK` (same few-groups regime as q21). */
   val q43NormalizedTopK: Q = (s, dir) => {
     val (queries, corpus) = parts(s, dir)
     val qn = queries.select(col("vec_id").as("query_id"),
@@ -200,9 +193,6 @@ object SimilarityQueries {
       .withColumn("sim", Cosine.dot(col("qvec"), col("cvec")))
     graft.plans.BoundedTopK.perGroup(scored, Seq("query_id"),
         Seq(col("sim").desc, col("vec_id").asc), K)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("vec_id").asc)))
       .select(col("query_id"), col("rank"), col("vec_id"), round(col("sim"), 6).as("sim"))
       .orderBy("query_id", "rank")
   }
@@ -311,15 +301,9 @@ object SimilarityQueries {
       .join(queries.select(col("vec_id").as("query_id"), col("vec").as("qv")), "query_id")
       .join(corpus.select(col("vec_id").as("cand_id"), col("vec").as("cv")), "cand_id")
       .withColumn("sim", Cosine.cosine(col("qv"), col("cv")))
-    // heap + rank window over the ≤3-row survivors (the q21 shape):
-    // the heap output is already clustered by query_id, so the window
-    // adds no exchange
     graft.plans.BoundedTopK.perGroup(
         scored.select(col("query_id"), col("cand_id"), col("sim")),
         Seq("query_id"), Seq(col("sim").desc, col("cand_id").asc), 3)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("cand_id").asc)))
       .select(col("query_id"), col("rank"), col("cand_id").as("vec_id"),
         round(col("sim"), 6).as("sim"))
       .orderBy("query_id", "rank")
@@ -431,8 +415,8 @@ object SimilarityQueries {
     * its LSH bucket-mates (both directions — each vector is a query).
     * The input to graph-based semantic dedup / diversity scoring; same
     * implementation-parity oracle story as q22/q37, then exact rerank +
-    * salted TopK. Vectors whose buckets are all singletons emit no rows
-    * (an honest ANN answer, mirrored by the oracle). */
+    * `plans/BoundedTopK`. Vectors whose buckets are all singletons emit
+    * no rows (an honest ANN answer, mirrored by the oracle). */
   val q93KnnGraph: Q = (s, dir) =>
     knnEdges(s, dir)
       .select(col("src"), col("rank"), col("dst"), round(col("sim"), 6).as("sim"))
@@ -462,7 +446,7 @@ object SimilarityQueries {
     }
 
   /** Shared kNN-graph edge builder (q93 output / q104 input): LSH bucket
-    * candidates → exact cosine rerank → salted top-3 per source.
+    * candidates → exact cosine rerank → ranked top-3 per source.
     * Same cap note as [[q37CosineNearDup]]: the candidate set drops
     * buckets above RandomHyperplaneLSH.DefaultMaxBucket (64), and since
     * round 14 the oracle CTEs model the cap exactly (`bsz`/`capped` in
@@ -487,22 +471,17 @@ object SimilarityQueries {
       .join(all.select(col("vec_id").as("src"), col("vec").as("vs")), "src")
       .join(all.select(col("vec_id").as("dst"), col("vec").as("vd")), "dst")
       .withColumn("sim", Cosine.cosine(col("vs"), col("vd")))
-    // BoundedTopK heap instead of the salted double window: the bucket
-    // cap already bounds every src's candidate set (≤ NumTables×cap
-    // rows), so the salt pass bought no skew safety here while sorting
-    // the whole scored candidate table TWICE (two exchanges). The heap's
-    // partial phase prunes to ≤3 rows per src per task map-side, the
-    // exchange carries only survivors, and the rank window runs over
-    // ≤3-row groups already clustered by src (no further exchange).
-    // Same total order (sim desc, dst asc — dst unique per src), same
-    // Catalyst SortOrder comparator, so the top-3 sets and ranks are
-    // identical (q144 pins heap ≡ window parity).
-    val top = graft.plans.BoundedTopK.perGroup(
+    // BoundedTopK instead of the salted double window: the bucket cap
+    // already bounds every src's candidate set (≤ NumTables×cap rows),
+    // so the salt pass bought no skew safety here while sorting the
+    // whole scored candidate table TWICE (two exchanges). The partial
+    // phase prunes to ≤3 rows per src per task map-side, so the
+    // exchange and the final's sort carry only survivors. Total order
+    // (sim desc, dst asc — dst unique per src), so the top-3 sets and
+    // ranks match the window spelling (q144 pins that parity).
+    graft.plans.BoundedTopK.perGroup(
       scored.select(col("src"), col("dst"), col("sim")),
       Seq("src"), Seq(col("sim").desc, col("dst").asc), 3)
-    top.withColumn("rank", row_number().over(
-      org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-        .orderBy(col("sim").desc, col("dst").asc)))
   }
 
   /** kNN LABEL AGREEMENT — the standard embedding-health probe (and the
@@ -595,7 +574,7 @@ object SimilarityQueries {
   /** SQ8 scalar-quantized top-10: the 8-bit-per-dimension compression
     * tier between q21's exact floats and q60's PQ codebooks. Corpus
     * bounds fit → asymmetric (query-exact) distance over reconstructed
-    * codes → salted top-k; per-dimension contributions decimal-quantized
+    * codes → `plans/BoundedTopK`; per-dimension contributions decimal-quantized
     * so the oracle reproduces the score bit-for-bit
     * (`similarity/ScalarQuantizer`). */
   val q127AnnSq8: Q = (s, dir) => {
@@ -637,7 +616,7 @@ object SimilarityQueries {
     * query's label — filter-THEN-search, the constraint joins as a key
     * so each query scores only its label slice (pre-filtering; a
     * search-then-filter plan would over-fetch k and still miss). Same
-    * exact-cosine + salted-top-k machinery as q21. */
+    * exact-cosine + `plans/BoundedTopK` machinery as q21. */
   val q135FilteredAnn: Q = (s, dir) => {
     val e = Tables.vectors(s, dir)
     val tauQ = nthLowestId(e, "vec_id", 10) // rank contract, see parts()
@@ -648,13 +627,9 @@ object SimilarityQueries {
         col("label"))
     val scored = corpus.join(broadcast(queries), "label")
       .withColumn("sim", Cosine.cosine(col("qvec"), col("vec")))
-    // heap + rank window over the ≤5-row survivors (the q21 shape)
     graft.plans.BoundedTopK.perGroup(
         scored.select(col("query_id"), col("vec_id"), col("label"), col("sim")),
         Seq("query_id"), Seq(col("sim").desc, col("vec_id").asc), 5)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("vec_id").asc)))
       .select(col("query_id"), col("rank"), col("vec_id"), col("label"),
         round(col("sim"), 6).as("sim"))
       .orderBy("query_id", "rank")

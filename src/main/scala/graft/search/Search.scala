@@ -164,8 +164,9 @@ object PhraseSearch {
   * is a scale bug: a hot term ("the") appears in nearly every document,
   * so its group COLLECTS THE WHOLE CORPUS' doc ids into one aggregation
   * buffer before the slice throws them away. Instead the truncated
-  * posting list is built with the salted two-phase TopK (bounded k rows
-  * per (term, salt) at every stage), and df/total_tf come from a plain
+  * posting list is built with `plans/BoundedTopK` (k-capped map-side
+  * heaps under a resident-row budget, then a streaming merge over the
+  * term-sorted exchange), and df/total_tf come from a plain
   * codegen'd aggregation with constant-size buffers. Two aggregations
   * over the token stream instead of one, but every buffer is O(k). */
 object InvertedIndex {
@@ -178,10 +179,9 @@ object InvertedIndex {
     val tf = Bm25.termFreqs(docs, idCol, textCol)
     val stats = tf.groupBy("term")
       .agg(countDistinct(col(idCol)).as("df"), sum(col("tf")).as("total_tf"))
-    val topDocs = graft.ops.TopK.perGroup(
+    val topDocs = graft.plans.BoundedTopK.perGroup(
         tf.select(col("term"), col(idCol)),
-        groupCols = Seq("term"), order = Seq(col(idCol).asc),
-        k = maxPostings, saltOn = col(idCol))
+        groupCols = Seq("term"), order = Seq(col(idCol).asc), k = maxPostings)
       .groupBy("term")
       .agg(sort_array(collect_list(col(idCol))).as("postings"))
     stats.join(topDocs, Seq("term"))

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-flat approximate nearest neighbour search — the second scale path
@@ -46,11 +45,9 @@ object IvfFlat {
              nprobe: Int): DataFrame = {
     val scored = queries.crossJoin(broadcast(centroids))
       .withColumn("__dist", Cosine.l2sq(col(vecCol), col(cenVecCol)))
-    val w = Window.partitionBy(idCol)
-      .orderBy(col("__dist").asc, col(cenIdCol).asc)
-    scored.withColumn("probe_rank", row_number().over(w))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col(idCol), col(cenIdCol).as("cell"), col("probe_rank"))
+    graft.plans.BoundedTopK.perGroup(scored.select(idCol, cenIdCol, "__dist"),
+        Seq(idCol), Seq(col("__dist").asc, col(cenIdCol).asc), nprobe)
+      .select(col(idCol), col(cenIdCol).as("cell"), col("rank").as("probe_rank"))
   }
 
   /** Distinct (query, candidate) pairs from probed cells — an equi-join

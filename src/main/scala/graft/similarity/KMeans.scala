@@ -238,7 +238,7 @@ object KMeans {
     * step over a trained index: (idCol, cell, probe_rank). Same pinned
     * distance text as [[assignCells]] (here cc is the kernel fold over
     * the centroid ARRAY column — identical doubles to the driver
-    * literal). The window is over queries × k rows (the query set is
+    * literal). The top-k runs over queries × k rows (the query set is
     * broadcast-small by IVF contract). */
   def probeCells(queries: DataFrame, idCol: String, vecCol: String,
                  cens: Seq[(Long, Array[Double])], nprobe: Int): DataFrame = {
@@ -249,12 +249,11 @@ object KMeans {
     val dist = (Cosine.dot(col(vecCol), col(vecCol)) -
       (lit(2.0) * Cosine.dot(col(vecCol), col("__cen_vec")))) +
       Cosine.dot(col("__cen_vec"), col("__cen_vec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(dist.asc, col("__cen_id").asc)
-    queries.crossJoin(broadcast(centDf))
-      .withColumn("probe_rank", row_number().over(w))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col(idCol), col("__cen_id").as("cell"), col("probe_rank"))
+    graft.plans.BoundedTopK.perGroup(
+        queries.crossJoin(broadcast(centDf))
+          .select(col(idCol), col("__cen_id"), dist.as("__dist")),
+        Seq(idCol), Seq(col("__dist").asc, col("__cen_id").asc), nprobe)
+      .select(col(idCol), col("__cen_id").as("cell"), col("rank").as("probe_rank"))
   }
 
   /** Collect a deterministic seed (e.g. the first k corpus vectors) to

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product-quantization ANN — the third scale path next to LSH (q22) and
@@ -107,14 +106,13 @@ object ProductQuantizer {
     val cb = codebooks(seed, idCol, vecCol, numSub, subDim)
     val codes = encode(corpus, idCol, vecCol, cb, numSub, subDim)
     val table = adcTable(queries, idCol, vecCol, cb, numSub, subDim)
-    // BoundedTopK heap instead of the salted double window: the ADC
-    // score table is the full |queries| × |corpus| cross, and the
-    // windows sorted it twice; the heap's partial phase prunes to
-    // ≤ shortlist rows per query per task MAP-SIDE, so the exchange
-    // carries survivors only. The shortlist is an order-insensitive SET
-    // (the exact rerank below re-sorts), and (adc asc, cand_id asc) is
-    // a total order under the same Catalyst comparator — identical
-    // shortlist, identical result (q144 pins heap ≡ window parity).
+    // BoundedTopK instead of the salted double window: the ADC score
+    // table is the full |queries| × |corpus| cross, and the windows
+    // sorted it twice; the partial phase prunes to ≤ shortlist rows per
+    // query per task MAP-SIDE, so the exchange carries survivors only.
+    // The shortlist is an order-insensitive SET (the exact rerank below
+    // re-sorts), and (adc asc, cand_id asc) is a total order — identical
+    // shortlist, identical result (q144 pins top-k ≡ window parity).
     val short = graft.plans.BoundedTopK.perGroup(
       adcScores(codes, idCol, table),
       groupCols = Seq("query_id"), order = Seq(col("adc").asc, col("cand_id").asc),
@@ -124,9 +122,8 @@ object ProductQuantizer {
       .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv")), "query_id")
       .join(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__cv")), "cand_id")
       .withColumn("sim", Cosine.cosine(col("__qv"), col("__cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("cand_id").asc)
-    rr.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    graft.plans.BoundedTopK.perGroup(rr.select("query_id", "cand_id", "sim"),
+        Seq("query_id"), Seq(col("sim").desc, col("cand_id").asc), k = 1)
       .select(col("query_id"), col("cand_id").as("vec_id"), col("sim"))
   }
 }

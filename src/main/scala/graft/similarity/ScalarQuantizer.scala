@@ -3,8 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.TopK
-
 /** SQ8 scalar quantization for embedding columns: each dimension is
   * affinely mapped to an 8-bit code against per-dimension corpus
   * [min, max] bounds — 4× less scan I/O than float32 vectors, the
@@ -26,7 +24,7 @@ import graft.ops.TopK
   * the tiny key domain a non-issue); the score pass broadcasts the
   * 1-row params and the query set, computes the fold entirely row-local
   * (the corpus is never exploded — a per-(vec,dim) join would put n·d
-  * rows through the exchange), and ends in the salted two-phase top-k.
+  * rows through the exchange), and ends in `plans/BoundedTopK`.
   * Constant-size-dominated; one shuffle total (the top-k's).
   */
 object ScalarQuantizer {
@@ -63,15 +61,12 @@ object ScalarQuantizer {
       .crossJoin(broadcast(queries))
       .withColumn("simd", graft.expressions.Sq8Sim.sq8_sim(
         col("qvec"), col("vec"), col("mn"), col("mx")))
-    // heap + rank window over the ≤k-row survivors (the q21 shape): the
-    // scored table is the full |queries| × |corpus| cross, and the
-    // salted double window sorted it twice; the heap prunes map-side
+    // the scored table is the full |queries| × |corpus| cross: the
+    // top-k's map-side heaps prune it before the exchange, where the
+    // salted double window sorted it twice
     graft.plans.BoundedTopK.perGroup(
         scored.select(col("query_id"), col("vec_id"), col("simd")),
         Seq("query_id"), Seq(col("simd").desc, col("vec_id").asc), k)
-      .withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("simd").desc, col("vec_id").asc)))
       .select(col("query_id"), col("rank"), col("vec_id"),
         round(col("simd"), 6).as("sim"))
   }

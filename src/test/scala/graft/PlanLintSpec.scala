@@ -34,26 +34,49 @@ class PlanLintSpec extends SparkSpec {
     // explode. (Tiny bounded explodes belong UNDER a one-row
     // BroadcastNestedLoopJoin's streamed side or behind an aggregate,
     // both of which pass this check.)
+    //
+    // The walk is over the PREPARED plan: `sparkPlan` is built before
+    // EnsureRequirements places exchanges, so it never holds a
+    // BroadcastExchangeExec. The queries below offended when the walk
+    // moved there; each still has to be triaged (a bounded build side,
+    // e.g. an aggregate of the explode, or a corpus-sized one to fix).
+    // The list can only shrink: a listed query that stops offending
+    // fails the lint until it is deleted from the list.
     import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val knownOffenders = Set(
+      "q18_minhash_pairs", "q20_simhash_pairs", "q22_ann_lsh",
+      "q32_word_similarity", "q35_char_ngram_pairs", "q37_cosine_neardup",
+      "q44_decontamination", "q53_postings", "q58_sketch_stats",
+      "q59_incremental_neardup", "q60_ann_pq", "q69_ngram_novelty",
+      "q91_substring_dedup", "q97_heavy_hitters", "q123_bpe_encode",
+      "q125_repetition", "q127_ann_sq8", "q133_fuzzy_match",
+      "q160_sketch_calibration", "q162_dup_source_matrix", "q170_curation_funnel",
+      "q172_dedup_threshold_curve")
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.sparkPlan
-        val bad = plan.collect {
+        val plan = fn(spark, dir).queryExecution.executedPlan
+        val bad = new AdaptiveSparkPlanHelper {}.collect(plan) {
           case b: BroadcastExchangeExec
               if b.collect { case g: GenerateExec => g }.nonEmpty => b
         }
         if (bad.nonEmpty) Some(name) else None
-    }
-    assert(offenders.isEmpty,
-      s"broadcast over an exploded subtree in: ${offenders.mkString(", ")}")
+    }.toSet
+    val fresh = (offenders -- knownOffenders).toSeq.sorted
+    val cleared = (knownOffenders -- offenders).toSeq.sorted
+    assert(fresh.isEmpty,
+      s"broadcast over an exploded subtree in: ${fresh.mkString(", ")}")
+    assert(cleared.isEmpty,
+      s"no longer broadcasting an exploded subtree, drop from knownOffenders: " +
+        cleared.mkString(", "))
   }
 
   test("no query plans an unpartitioned Window over UNBOUNDED input") {
     // A Window with an empty partitionSpec funnels its whole input
     // through one task's sort. That's fine when the input is
     // structurally BOUNDED — an aggregate (group-cardinality rows), a
-    // group-limit (the two-phase TopK re-rank), or a global limit (a
+    // group-limit (WindowGroupLimit), or a global limit (a
     // codebook seed) — because the single task sorts group-count rows,
     // not the corpus; that's the same judgment the broadcast-Generate
     // lint applies. It is a scale bug when a corpus-row path reaches the
@@ -85,9 +108,9 @@ class PlanLintSpec extends SparkSpec {
   }
 
   test("scorer joins stay non-broadcast in the ADAPTIVE executed plan") {
-    // The lint above inspects the pre-AQE sparkPlan; AQE can still demote
-    // a sort-merge join to a runtime broadcast from OBSERVED sizes, which
-    // the static check never sees. shuffle_hash hints protect the three
+    // The broadcast lint inspects the plan before execution; AQE can
+    // still demote a sort-merge join to a runtime broadcast from OBSERVED
+    // sizes, which the static check never sees. shuffle_hash hints protect the three
     // token→model scorers (the subtrees where a runtime broadcast of the
     // exploded side would be corpus-sized at scale even though it looks
     // small at gate SF) — so for those representative queries, execute to
