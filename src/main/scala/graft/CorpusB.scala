@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Second-seed ORACLE-ROBUSTNESS corpus (round-12 verdict #5): all 173
@@ -117,14 +117,8 @@ object CorpusB {
     // 30-bit XOR constant: bijective on every key domain, keeps int32
     // keys positive (max remapped value < 2^31), moves every literal
     val k: Long = (seed * 2654435761L) & 0x3FFFFFFFL
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
 
     def remapKeys(name: String, df: DataFrame): DataFrame = {
       // the 30-bit XOR is bijective and sign-preserving only while the

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Fault-injection rehearsal: prove the sink contracts hold under
@@ -39,14 +38,8 @@ object FaultRehearsal {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8, 3]") // up to 3 attempts per task
-      .appName("graft-fault-rehearsal")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // up to 3 attempts per task
+    val spark = Session.local("8, 3", "8", "graft-fault-rehearsal")
 
     val n = 100000L
     var violations = List.empty[String]

@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: explain the named queries' plans (every SparkEntry query
   * when given no names); greppable. */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local("8", "8")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"===== $name =====")
-      // "lsh:<Fetch|InBand|InBandTwoTier>" explains the near-dup pair
+      // "lsh:<Fetch|InBandTwoTier>" explains the near-dup pair
       // miner with a FORCED verify form (the registered q35 routes by
       // corpus, so the big-corpus in-band plans are invisible at small
       // SFs); anything else is a SparkEntry query name.
@@ -22,7 +16,6 @@ object PlanPeek {
         import org.apache.spark.sql.functions._
         val form = name.stripPrefix("lsh:") match {
           case "Fetch" => graft.dedup.MinHashLSH.VerifyForm.Fetch
-          case "InBand" => graft.dedup.MinHashLSH.VerifyForm.InBand
           case "InBandTwoTier" => graft.dedup.MinHashLSH.VerifyForm.InBandTwoTier
           case other => sys.error(s"unknown form $other")
         }

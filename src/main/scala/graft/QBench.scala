@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev micro-bench: time specific queries, N reps each, on a given SF dir.
   * Usage: runMain graft.QBench <sfDir> <reps> <queryName>...
@@ -9,15 +8,8 @@ object QBench {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
     SparkEntry.entry(spark).collect() // warmup
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

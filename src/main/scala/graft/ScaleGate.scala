@@ -2,22 +2,30 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ×30 scale REHEARSAL promoted to a pass/fail GATE (`sbt scaleGate`):
-  * catches the next superlinear scaler in CI instead of in a judge's ×100
-  * sweep (round 7's q35 candidate-amplification hazard was found by a
-  * manual rehearsal — this main makes that probe repeatable and binary).
+/** The scale REHEARSAL promoted to a pass/fail GATE, in two tiers:
+  * `sbt scaleGate` (×30 over the rehearsal cost centers) and
+  * `sbt scaleGate100` (×100 over the queries that bound the 100 TB
+  * story). It catches the next superlinear scaler in CI instead of in a
+  * judge's ×100 sweep (round 7's q35 candidate-amplification hazard was
+  * found by a manual rehearsal — this main makes that probe repeatable
+  * and binary).
   *
-  * Procedure: build the ×30 corpus from sf0.1 under /tmp/graft-sf3 if
-  * absent (ScaleUp's growth axes: linear dedup/ANN structure, stable
-  * dims), measure the rehearsal cost-center queries at sf0.1 and at ×30
-  * in the SAME session (noop-sink, task metrics), then fail if any query
+  * Usage: runMain graft.ScaleGate <x30|x100> [srcDir] [dir] [copies]
+  *
+  * Procedure: build the tier's corpus from sf0.1 under the tier's
+  * directory if absent (ScaleUp's growth axes: linear dedup/ANN
+  * structure, stable dims), measure the tier's queries at scale and at
+  * sf0.1 in the SAME session (noop-sink, task metrics), then fail if any
+  * query
   *
   *  - errors at either SF,
   *  - scales worse than linear with headroom:
-  *      t₃₀ > [[SlackFactor]] × 30 × max(t₀.₁, [[MinBaseSec]])
+  *      t_big > [[SlackFactor]] × copies × max(t₀.₁, [[MinBaseSec]])
   *    (the max() floor keeps 1-second queries' fixed overheads from
-  *    tripping the ratio; real hazards show up as minutes, not noise), or
-  *  - spills more than [[SpillBudgetBytes]] to disk at ×30 (spill at
+  *    tripping the ratio; real hazards show up as minutes, not noise),
+  *  - runs past the tier's absolute wall cap, scaled by the session
+  *    index (see [[Tier.capSec]]), or
+  *  - spills more than [[SpillBudgetBytes]] to disk at scale (spill at
   *    ~sf3 on a 128 GiB box is the early warning for executor OOM at
   *    cluster scale — the kNN-edge and q35 hazards both announced
   *    themselves as multi-GiB spills first).
@@ -31,69 +39,196 @@ object ScaleGate {
   val MinBaseSec = 1.0
   val SpillBudgetBytes: Long = 8L << 30
 
+  /** One gate tier. `partitionFactor` × cpus shuffle partitions run the
+    * big phase: a cluster scales shuffle partitions with the data, and
+    * so does the gate. `capSec` holds absolute wall caps; a tier with
+    * caps also runs the session-speed probe that scales them and the
+    * one-shot rerun of a first shot over its cap. */
+  final case class Tier(name: String, appName: String, dir: String,
+                        copies: Int, names: Seq[String], partitionFactor: Int,
+                        capSec: Map[String, Double])
+
+  /** ×30 over the rehearsal cost centers; run with SPARK_DRIVER_MEM=48g. */
+  val X30 = Tier("x30", "graft-scale-gate", "/tmp/graft-sf3", 30,
+    ScaleRehearsal.defaultNames, partitionFactor = 3, capSec = Map.empty)
+
+  /** ×100 tier — the ×30 gate's budgets are loose enough that the
+    * heaviest cost centers only reveal their hazards at ×100 (the
+    * round-9 sweep passed ×30 everywhere while q35 ran 29.9 GiB of
+    * shuffle at ×100), so this tier measures ONLY the top cost centers.
+    *
+    * Memory note: run with SPARK_DRIVER_MEM=32g (or more). The in-band
+    * LSH verify sorts ~150 MB of fat array rows per task ×32 concurrent
+    * tasks; at the default 8g heap that legitimately spills (measured
+    * 13.9 GiB on q35), which this gate would flag — the flag would be
+    * real (an executor sized like that WOULD spill) but the 100 TB
+    * deployment premise is executors with sane sort headroom. */
+  val X100 = Tier("x100", "graft-scale-gate-100", "/tmp/graft-sf10", 100,
+    /* The ×100 cost centers: top-5 by the round-9 sweep plus q58 (the
+     * peak-task-memory canary — its sketch build holds the largest
+     * single-task state of the whole surface), plus the two streaming
+     * curation harnesses (round 10's q167 regression — a hardcoded
+     * foreachBatch partition count, +33 s at ×100 — was caught by a
+     * MANUAL sweep; this puts the operationally most fragile family
+     * under the gate). */
+    names = Seq(
+      "q35_char_ngram_pairs", "q115_prefix_jaccard", "q23_majority_sector",
+      "q24_sector_rollup", "q104_pagerank", "q58_sketch_stats",
+      "q167_streaming_curation", "q171_curation_restart", "q173_midbatch_kill",
+      // round-12 verdict #6: the streaming DEDUP family was outside the
+      // gate (the three in-gate streaming queries are curation harnesses);
+      // q147 puts StatefulDedup's TTL path under ×100 watch
+      "q147_streaming_neardup",
+      // round-12 verdict #3 (round 13): the remaining four streaming
+      // harnesses — interval join, checkpoint restart, sessionize, and
+      // sessionize restart — complete the set: all 8 streaming
+      // certifications are now capped. q151's own bench history shows the
+      // family's failure mode (64.5 s first shot vs 5.7 s rerun on a
+      // checkpoint-commit stall), which the rerun floor absorbs.
+      "q151_streaming_interval_join", "q156_checkpoint_restart",
+      "q158_streaming_sessionize", "q161_sessionize_restart",
+    ),
+    // 6× for 100× keeps per-task shuffle blocks at the ×30 tier's
+    // per-task size
+    partitionFactor = 6,
+    /* Absolute ×100 wall caps for queries whose sf0.1 base is dominated
+     * by FIXED harness overhead (trigger/commit cost of a multi-batch
+     * streaming run), making the linear `SlackFactor × copies × base`
+     * budget meaninglessly loose (q167: base ~7 s → 1050 s budget; the
+     * round-10 regression was 44.6 → 77.1 s and would have sailed
+     * through). Caps = ~1.6× the measured-good ×100 wall (round-10/11
+     * sweeps: q167 44.6 s, q171 34.9–43.3 s, both including staging +
+     * two query lifetimes + checkpoint commits) — tight enough to catch
+     * a partition-sizing or double-join regression, loose enough for
+     * this box's session noise on 40 s queries. */
+    capSec = Map(
+      "q167_streaming_curation" -> 75.0,
+      "q171_curation_restart" -> 75.0,
+      // two lives + 5 deliveries + ledger fingerprints; 52.3 s measured
+      // post-localCheckpoint (round 11), ~1.6× headroom
+      "q173_midbatch_kill" -> 85.0,
+      // prebuilt band index + streaming batch dedup; 24.0 s measured
+      // (round 11), ~1.6× headroom
+      "q147_streaming_neardup" -> 40.0,
+      // round-13 measurements (two ScaleRehearsal shots each at ×100,
+      // warm-staged, shuffle partitions 192): q151 21.1/19.5 s, q156
+      // 18.5/19.1 s, q158 27.0/27.7 s, q161 14.0/15.6 s — caps ~1.6× the
+      // worse shot. A COLD-staged first shot can exceed these (that is
+      // q151's 64.5 s spike mode); the rerun floor re-measures once with
+      // staging warm and scores the min, which is exactly the
+      // regression-vs-staging-stall distinction the caps need.
+      "q151_streaming_interval_join" -> 34.0,
+      "q156_checkpoint_restart" -> 31.0,
+      "q158_streaming_sessionize" -> 45.0,
+      "q161_sessionize_restart" -> 25.0,
+    ))
+
+  val tiers: Map[String, Tier] = Seq(X30, X100).map(t => t.name -> t).toMap
+
+  /** A query's budget in seconds and its failure, if any. */
+  final case class Verdict(budget: Double, failure: Option[String])
+
+  /** The per-query decision: `base` at sf0.1 and `big` at the tier's
+    * scale, with the tier's cap (if any) scaled by `capIdx`. */
+  def verdict(base: ScaleRehearsal.QM, big: ScaleRehearsal.QM, tier: Tier,
+              capIdx: Double): Verdict = {
+    val linear = SlackFactor * tier.copies * math.max(base.sec, MinBaseSec)
+    val cap = tier.capSec.get(big.name).map(_ * capIdx)
+    val budget = math.min(linear, cap.getOrElse(Double.MaxValue))
+    val failure =
+      big.error.orElse(base.error).map(e => s"ERROR $e")
+        .orElse(if (big.sec <= budget) None
+          else Some(f"OVER BUDGET (${big.sec}%.1f > $budget%.1f s)"))
+        .orElse(if (big.spill > SpillBudgetBytes)
+          Some(f"SPILL (${ScaleRehearsal.gib(big.spill)}%.1f GiB)") else None)
+    Verdict(budget, failure)
+  }
+
+  /** Session-speed calibration (round-13 verdict #2): the absolute caps
+    * are ~1.6× measured-good walls, but this box's probe swung
+    * 0.72→1.62 within one hour of round 13 (q115: 37.7→111.7 s, same
+    * tree) — caps loose enough to absorb that would also absorb a real
+    * 1.5× regression. So the gate runs the SAME fixed probe the bench
+    * uses and scales the absolute caps (and the rerun-trigger
+    * threshold) by max(index, 1.0): on a nominal-or-fast box the caps
+    * stay at their tight committed values; on a measurably contended
+    * box they widen exactly with the contention instead of being
+    * pre-widened for the worst box. The relative SlackFactor budgets
+    * self-normalize (base and big are measured in-session) and are
+    * untouched. A probe failure costs only calibration (index 1.0). */
+  private def capIndex(spark: SparkSession): Double =
+    try {
+      val p = Bench.probeSec(spark)
+      val idx = math.max(1.0, p / Bench.NominalProbeSec)
+      println(f"SCALEGATE probe=$p%.3f s session_index=${p / Bench.NominalProbeSec}%.2f -> caps ×$idx%.2f")
+      idx
+    } catch { case e: Exception =>
+      println(s"SCALEGATE probe failed (caps unscaled): $e"); 1.0
+    }
+
+  /** Variance floor under the absolute caps (round-12 verdict #5): the
+    * caps are ~1.6× measured-good walls on a box with documented ±25%
+    * single-shot noise, so a pure noise spike can false-fail (and a
+    * noise-assisted real regression false-pass — that risk is inherent
+    * to single-shot caps and accepted). A capped query whose FIRST shot
+    * exceeds its cap gets exactly one in-gate re-run while the big
+    * corpus is still hot; the min of the two full measurements is
+    * scored, and both shots are logged so a reproduced breach reads as
+    * "confirmed by protocol", not judgment. */
+  private def rerunCapBreaches(spark: SparkSession, tier: Tier,
+                               big: Seq[ScaleRehearsal.QM],
+                               capIdx: Double): Seq[ScaleRehearsal.QM] =
+    big.map { q =>
+      tier.capSec.get(q.name).map(_ * capIdx) match {
+        case Some(cap) if q.error.isEmpty && q.sec > cap =>
+          val again = ScaleRehearsal.measure(spark, tier.dir, Seq(q.name)).head
+          println(f"SCALEGATE rerun ${q.name}: first=${q.sec}%.1f s " +
+            f"rerun=${again.sec}%.1f s (cap $cap%.1f s) -> min scored")
+          if (again.error.isEmpty && again.sec < q.sec) again else q
+        case _ => q
+      }
+    }
+
   def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val dir = args.lift(1).getOrElse("/tmp/graft-sf3")
-    val copies = args.lift(2).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-gate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val preset = args.headOption.flatMap(tiers.get).getOrElse(sys.error(
+      s"usage: ScaleGate <${tiers.keys.toSeq.sorted.mkString("|")}> [srcDir] [dir] [copies]"))
+    val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    val tier = preset.copy(dir = args.lift(2).getOrElse(preset.dir),
+      copies = args.lift(3).map(_.toInt).getOrElse(preset.copies))
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus, tier.appName)
 
-    // (re)build the ×30 corpus only when a table is missing — the build
-    // is minutes of parquet writes, the gate should be re-runnable in
-    // seconds-to-minutes
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val complete = Tables.names.forall { t =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$t.parquet/_SUCCESS"))
-    }
-    if (!complete) {
-      println(s"SCALEGATE building ×$copies corpus at $dir")
-      ScaleUp.build(spark, src, dir, copies, quiet = true)
-    }
-
-    val names = ScaleRehearsal.defaultNames
+    ScaleUp.ensure(spark, src, tier.dir, tier.copies)
     SparkEntry.entry(spark).collect() // warmup
+    val capIdx = if (tier.capSec.isEmpty) 1.0 else capIndex(spark)
 
-    // ×30 phase FIRST on the fresh JVM, baselines after — the ×100 tier's
-    // ordering (ScaleGate100): the big runs are the gate's signal and the
-    // baseline phase's page-cache/heap wear was measured inflating them
-    // ~2× there; baselines are noise-tolerant (MinBaseSec floors them).
-    // a cluster scales shuffle partitions with the data; so does the gate
-    spark.conf.set("spark.sql.shuffle.partitions", (cpus.toInt * 3).toString)
-    println(s"SCALEGATE ×$copies at $dir")
-    val big = ScaleRehearsal.measure(spark, dir, names)
+    // big phase FIRST, on the freshest JVM/page-cache state: round 10
+    // measured in-gate q35 at 219 s vs 110.8 s solo when the sf0.1
+    // baseline phase ran first (page-cache churn + heap wear halved the
+    // gate's sensitivity — budgets absorbed it, but a real regression
+    // would hide in that same slack). Baselines are cheap and noise-
+    // tolerant (MinBaseSec floors them); the big runs are the signal.
+    spark.conf.set("spark.sql.shuffle.partitions",
+      (cpus.toInt * tier.partitionFactor).toString)
+    println(s"SCALEGATE ×${tier.copies} at ${tier.dir}")
+    val big = rerunCapBreaches(spark, tier,
+      ScaleRehearsal.measure(spark, tier.dir, tier.names), capIdx)
     spark.conf.set("spark.sql.shuffle.partitions", cpus)
     println(s"SCALEGATE baseline at $src")
-    val base = ScaleRehearsal.measure(spark, src, names).map(q => q.name -> q).toMap
+    val base = ScaleRehearsal.measure(spark, src, tier.names).map(q => q.name -> q).toMap
 
-    def gb(b: Long): Double = b / 1024.0 / 1024 / 1024
-    println(f"${"query"}%-26s ${"sf0.1 s"}%8s ${"x30 s"}%8s ${"ratio"}%7s ${"budget"}%8s ${"spill GiB"}%9s verdict")
-    var bad = List.empty[String]
-    big.foreach { q =>
+    println(f"${"query"}%-26s ${"sf0.1 s"}%8s ${tier.name + " s"}%8s ${"ratio"}%7s ${"budget"}%8s ${"spill GiB"}%9s verdict")
+    val bad = big.flatMap { q =>
       val b = base(q.name)
-      val err = q.error.orElse(b.error)
-      val budget = SlackFactor * copies * math.max(b.sec, MinBaseSec)
-      val verdict =
-        if (err.nonEmpty) s"ERROR ${err.get}"
-        else if (q.sec > budget) f"SUPERLINEAR (${q.sec}%.1f > ${budget}%.1f s)"
-        else if (q.spill > SpillBudgetBytes) f"SPILL (${gb(q.spill)}%.1f GiB)"
-        else "ok"
-      if (verdict != "ok") bad ::= q.name
-      println(f"${q.name}%-26s ${b.sec}%8.2f ${q.sec}%8.2f ${q.sec / math.max(b.sec, 0.01)}%7.1f ${budget}%8.1f ${gb(q.spill)}%9.2f $verdict")
+      val v = verdict(b, q, tier, capIdx)
+      println(f"${q.name}%-26s ${b.sec}%8.2f ${q.sec}%8.2f ${q.sec / math.max(b.sec, 0.01)}%7.1f ${v.budget}%8.1f ${ScaleRehearsal.gib(q.spill)}%9.2f ${v.failure.getOrElse("ok")}")
+      v.failure.map(_ => q.name)
     }
     spark.stop()
     if (bad.nonEmpty) {
-      println(s"SCALEGATE FAIL: ${bad.reverse.mkString(", ")}")
+      println(s"SCALEGATE ${tier.name} FAIL: ${bad.mkString(", ")}")
       sys.exit(1)
     }
-    println("SCALEGATE PASS")
+    println(s"SCALEGATE ${tier.name} PASS")
   }
 }

@@ -53,6 +53,8 @@ object ScaleRehearsal {
     "q173_midbatch_kill",
   )
 
+  def gib(bytes: Long): Double = bytes / 1024.0 / 1024 / 1024
+
   /** One query's rehearsal measurements (bytes unless noted). */
   final case class QM(name: String, sec: Double, shufR: Long, shufW: Long,
                       spill: Long, peakMem: Long, tasks: Long, rows: Long,
@@ -67,7 +69,10 @@ object ScaleRehearsal {
     val m = new Metrics
     spark.sparkContext.addSparkListener(m)
     try names.map { name =>
-      System.gc(); m.reset()
+      System.gc()
+      // the previous query's (or the warmup's) late events must not land
+      // in this query's counters
+      org.apache.spark.graft.ListenerDrain(spark.sparkContext); m.reset()
       val t0 = System.nanoTime()
       try {
         val obs = new org.apache.spark.sql.Observation()
@@ -78,7 +83,9 @@ object ScaleRehearsal {
           .write.format("noop").mode("overwrite").save()
         val rows = obs.get("n").asInstanceOf[Long]
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener bus drains asynchronously
+        // the bus delivers task ends asynchronously: wait for every one
+        // this query posted before reading the counters
+        org.apache.spark.graft.ListenerDrain(spark.sparkContext)
         QM(name, sec, m.shuffleRead.sum, m.shuffleWrite.sum,
           m.spillDisk.sum, m.peakExecMem, m.tasks.sum, rows, None)
       } catch { case e: Throwable =>
@@ -89,7 +96,7 @@ object ScaleRehearsal {
   }
 
   private final class Metrics extends SparkListener {
-    val shuffleRead, shuffleWrite, spillDisk, spillMem = new LongAdder
+    val shuffleRead, shuffleWrite, spillDisk = new LongAdder
     val tasks = new LongAdder
     @volatile var peakExecMem = 0L
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
@@ -98,13 +105,12 @@ object ScaleRehearsal {
         shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
         shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
         spillDisk.add(m.diskBytesSpilled)
-        spillMem.add(m.memoryBytesSpilled)
         tasks.add(1)
         if (m.peakExecutionMemory > peakExecMem) peakExecMem = m.peakExecutionMemory
       }
     }
     def reset(): Unit = { shuffleRead.reset(); shuffleWrite.reset()
-      spillDisk.reset(); spillMem.reset(); tasks.reset(); peakExecMem = 0L }
+      spillDisk.reset(); tasks.reset(); peakExecMem = 0L }
   }
 
   def main(args: Array[String]): Unit = {
@@ -113,21 +119,13 @@ object ScaleRehearsal {
       if (args.lift(1).contains("all")) SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.drop(1).toSeq
       else defaultNames
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(32)
     // a cluster sizes shuffle partitions with the data; pin them per run
     // so rehearsals can separate "plan scales badly" from "32 partitions
     // were too few at this SF" (the fixed-width artifact)
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-rehearsal")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(cpus, shufflePartitions, "graft-scale-rehearsal")
 
     SparkEntry.entry(spark).collect() // warmup
 
@@ -136,14 +134,13 @@ object ScaleRehearsal {
     // output-heavy query times driver ser/de, which no warehouse pipeline
     // pays (they write). Row count rides an Observation so it costs no
     // second action. (All inside `measure`.)
-    def gb(b: Long): String = f"${b / 1024.0 / 1024 / 1024}%7.2f"
     println(f"${"query"}%-26s ${"sec"}%8s ${"shufR GiB"}%9s ${"shufW GiB"}%9s ${"spill GiB"}%9s ${"peakTask GiB"}%12s ${"tasks"}%7s rows")
     val results = measure(spark, sfDir, names)
     results.foreach {
       case QM(name, sec, _, _, _, _, _, _, Some(err)) =>
         println(f"$name%-26s $sec%8.2f FAILED: $err")
       case QM(name, sec, sr, sw, sp, pk, tasks, rows, None) =>
-        println(f"$name%-26s $sec%8.2f ${gb(sr)}%9s ${gb(sw)}%9s ${gb(sp)}%9s ${gb(pk)}%12s $tasks%7d $rows")
+        println(f"$name%-26s $sec%8.2f ${gib(sr)}%9.2f ${gib(sw)}%9.2f ${gib(sp)}%9.2f ${gib(pk)}%12.2f $tasks%7d $rows")
     }
     val failed = results.filter(_.error.nonEmpty).map(_.name)
     if (failed.nonEmpty) println(s"FAILED: ${failed.mkString(", ")}")

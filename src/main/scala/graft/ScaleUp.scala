@@ -155,21 +155,28 @@ object ScaleUp {
     }
   }
 
+  /** [[build]] `out` only when a table's `_SUCCESS` marker is missing:
+    * the build is minutes of parquet writes, a gate reusing the corpus
+    * should re-run in seconds to minutes. */
+  def ensure(spark: SparkSession, src: String, out: String, copies: Int): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val complete = Tables.names.forall { t =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"$out/$t.parquet/_SUCCESS"))
+    }
+    if (!complete) {
+      println(s"SCALEUP building ×$copies corpus at $out")
+      build(spark, src, out, copies, quiet = true)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val eventsSpan = args.lift(3).contains("span")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus, "graft-scaleup", "WARN")
     build(spark, src, out, copies, eventsSpan = eventsSpan)
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -11,7 +10,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus(4)
     // Config-sensitivity overrides (round-13 verdict #7): a green that
     // depends on a partition-count or AQE-coalesce accident (tie order
     // inside a window, a coalesce that happens to keep one file) is
@@ -22,15 +21,8 @@ object Verify {
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, shufflePartitions, logLevel = "WARN")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (wanted(name)) {
@@ -38,12 +30,8 @@ object Verify {
         // overwrite only happens on success, so a query that now throws
         // would otherwise leave the stale parquet in place and the
         // driver's compare would score a broken query as passing.
-        val outPath = new java.io.File(s"$outDir/$name")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(): Unit
-        }
-        if (outPath.exists) rm(outPath)
+        val outPath = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+        outPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(outPath, true)
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Build a Zipf-SKEWED-KEY rehearsal corpus (round-12 verdict #4): the
@@ -63,14 +63,8 @@ object ZipfCorpus {
     val src = args.lift(0).getOrElse("/tmp/graft-sf3")
     val out = args.lift(1).getOrElse("/tmp/graft-zipf3")
     val s = args.lift(2).map(_.toDouble).getOrElse(1.2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
 
     def partsOf(name: String): Int = {
       val p = new org.apache.hadoop.fs.Path(s"$src/$name.parquet")

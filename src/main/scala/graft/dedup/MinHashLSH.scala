@@ -212,28 +212,28 @@ object MinHashLSH {
     *  - [[VerifyForm.Fetch]]: band-join ids only, then fetch each
     *    candidate's shingle array by key. Wins when candidates are few —
     *    each doc's array ships ~once per candidate PARTNER.
-    *  - [[VerifyForm.InBand]]: the shingle array rides the band join and
-    *    the Jaccard evaluates pipelined inside it — each doc's array
-    *    ships exactly numBands times, whatever the collision rate. Wins
-    *    when band collisions amplify (the ×100 rehearsal: 17.4M
-    *    candidates, 58→28.5 GiB shuffle, 268→200 s).
+    *  - [[VerifyForm.InBandTwoTier]]: the (truncated) shingle array
+    *    rides the band join and a bound evaluates pipelined inside it —
+    *    each doc's array ships exactly numBands times, whatever the
+    *    collision rate. Wins when band collisions amplify (the ×100
+    *    rehearsal: 17.4M candidates; the first, full-array in-band form
+    *    already cut 58→28.5 GiB of shuffle and 268→200 s there).
     *  - [[VerifyForm.Auto]]: decide from the measured band-bucket
     *    histogram (see [[chooseVerifyForm]]) — one small routing job.
     *    Callers that know their corpus (or loop over a cached input and
-    *    don't want the extra job) pass Fetch/InBand explicitly. */
+    *    don't want the extra job) pass Fetch/InBandTwoTier explicitly. */
   sealed trait VerifyForm
   object VerifyForm {
     case object Auto extends VerifyForm
     case object Fetch extends VerifyForm
-    case object InBand extends VerifyForm
 
     /** In-band with TRUNCATED hashes riding the band exchange (tier 1:
       * [[graft.expressions.JaccardUpperBound]] over 16-bit values — 4×
-      * fewer array bytes than InBand's full 8-byte hashes) and one
-      * skinny exact-re-verify fetch join over the pair-bounded tier-1
-      * survivors (tier 2). Identical output to InBand/Fetch: tier 1
-      * passes a provable superset — the bound's distinct-elements
-      * precondition is self-enforced (the kernel's fused dedup mode,
+      * fewer array bytes than full 8-byte hashes) and one skinny
+      * exact-re-verify fetch join over the pair-bounded tier-1
+      * survivors (tier 2). Identical output to Fetch: tier 1 passes a
+      * provable superset — the bound's distinct-elements precondition
+      * is self-enforced (the kernel's fused dedup mode,
       * `trunc_hashes_distinct`), so multiset shingle arrays are safe
       * too. Only valid for `array<bigint>` shingle columns (the hashed
       * pipelines). */
@@ -251,13 +251,13 @@ object MinHashLSH {
     * times are per-form minima on the two-tier member unless noted:
     *   ×30  char-8: ρ=1.46, fetch   8.65 s / two-tier 13.1 s — Fetch ✓
     *   ×50  char-8: ρ=2.37, fetch  15.71 s / two-tier 18.5 s — Fetch ✓
-    *     (classic in-band 25.9 s — fetch beats both members here;
+    *     (full-array in-band 25.9 s — fetch beats both members here;
     *      κ=2 called this in-band: the mis-route that forced the refit)
     *   ×60  char-8: ρ=2.83, fetch  22.49 s / two-tier 28.2 s — Fetch ✓
     *     (min-of-3: the two forms are within noise of each other here —
     *      the crossover's left edge)
     *   ×70  char-8: ρ=3.28, fetch  85.7 s / two-tier 33.9 s — in-band ✓
-    *     (classic in-band 48.2 s also beats fetch: both members cross
+    *     (full-array in-band 48.2 s also beats fetch: both members cross
     *      between ρ=2.83 and 3.28)
     *   ×100 char-8: ρ=4.34, fetch 276 s   / two-tier 57.5 s — in-band ✓
     *   ×30  word-3: ρ=0.02, fetch   4.4 s / in-band  5.3 s — Fetch ✓
@@ -281,7 +281,7 @@ object MinHashLSH {
     * mixture measured ρ = 8.02 (C = 32.1M — the dense half dominates C,
     * the sparse half only adds n·B band rows), routed InBandTwoTier,
     * and min-of-2 alternating timings confirmed the routed form IS the
-    * fastest: two-tier 88.0 s vs classic in-band 104.5 s vs fetch
+    * fastest: two-tier 88.0 s vs full-array in-band 104.5 s vs fetch
     * 311.0 s, identical 13,720-pair outputs. Measured NEGATIVE for
     * per-source routing: the cost model compares actual shipment counts
     * (2C vs κ·n·B), both of which aggregate correctly over a mixture,
@@ -298,16 +298,10 @@ object MinHashLSH {
     * is purely a latency decision. */
   val AutoSmallCorpusN: Long = 100000L
 
-  /** Explicitly free an eager `localCheckpoint(true)`'s storage when the
-    * checkpointed plan will never be read — see
-    * [[graft.ops.Checkpoints.release]]. */
-  private def releaseCheckpoint(checkpointed: DataFrame): Unit =
-    graft.ops.Checkpoints.release(checkpointed)
-
   /** Cost-based verify routing from the MEASURED candidate count. Fetch
-    * ships ~2 arrays per DISTINCT candidate pair; InBand ships every
+    * ships ~2 arrays per DISTINCT candidate pair; in-band ships every
     * doc's array once per band but pays ~[[InBandCostFactor]]× per array
-    * — so InBand wins iff 2·C > κ·n·numBands. C is computed EXACTLY by
+    * — so in-band wins iff 2·C > κ·n·numBands. C is computed EXACTLY by
     * running the ids-only candidate join (skinny 8-byte rows — the cheap
     * part of either form; the expense both forms differ on is array
     * movement, which this job never does), with the same hot-bucket cap
@@ -323,26 +317,22 @@ object MinHashLSH {
     val sigs = signaturesFromHashArray(hashed, idCol, hCol, numHashes)
     val c = candidatePairs(sigs, idCol, "__sig", numBands, rowsPerBand, maxBucket)
       .count()
-    if (inBandWins(c, n, numBands)) inBandFormFor(hashed, hCol)
+    if (inBandFits(hashed, hCol) && inBandWins(c, n, numBands))
+      VerifyForm.InBandTwoTier
     else VerifyForm.Fetch
   }
 
-  /** Which member of the in-band FAMILY a routed decision runs: the
-    * two-tier truncated form for `array<bigint>` shingles (it dominated
-    * classic InBand at every measured point — ×30 c8 13.1 vs 18.9 s,
-    * ×100 c8 60.4 vs 91.0 s min-of-3, identical outputs — by shipping
-    * 2-byte truncated elements through the same fat exchange), classic
-    * InBand otherwise (TruncHashes requires long arrays). The
-    * fetch-vs-in-band BOUNDARY is κ = 2.9 (see [[InBandCostFactor]] —
-    * the ×50/×60/×70 gap probes bracket both members' crossover between
-    * 2C/nB = 2.83 and 3.28); the two-tier form still pays the full
-    * windowed-cap + sort-merge structure, so its advantage over fetch
-    * appears in the same collision-amplified regime, just bigger. */
-  private def inBandFormFor(hashed: DataFrame, hCol: String): VerifyForm =
+  /** Whether a routed in-band decision can run: the two-tier form needs
+    * `array<bigint>` shingles (TruncHashes' input type); any other
+    * element type runs Fetch, which emits the identical pairs. No
+    * full-array in-band form serves them: two-tier beat one at every
+    * measured corpus (×30 c8 13.1 vs 18.9 s, ×100 c8 57.5 vs 75.2 s,
+    * and the [[InBandCostFactor]] points). */
+  private def inBandFits(hashed: DataFrame, hCol: String): Boolean =
     hashed.schema(hCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
-             org.apache.spark.sql.types.LongType, _) => VerifyForm.InBandTwoTier
-      case _ => VerifyForm.InBand
+             org.apache.spark.sql.types.LongType, _) => true
+      case _ => false
     }
 
   private def inBandWins(c: Long, n: Long, numBands: Int): Boolean =
@@ -357,17 +347,15 @@ object MinHashLSH {
     def fetch(cands: DataFrame) =
       verifyCandidates(hashed, idCol, hCol, cands, threshold)
     def inBand() =
-      inBandVerifyPairs(hashed, idCol, hCol, numHashes, numBands, r,
+      inBandTwoTierVerifyPairs(hashed, idCol, hCol, numHashes, numBands, r,
         threshold, maxBucket)
     def freshCands() = candidatePairs(
       signaturesFromHashArray(hashed, idCol, hCol, numHashes),
       idCol, "__sig", numBands, r, maxBucket)
     verify match {
-      case VerifyForm.InBand => inBand()
-      case VerifyForm.InBandTwoTier =>
-        inBandTwoTierVerifyPairs(hashed, idCol, hCol, numHashes, numBands, r,
-          threshold, maxBucket)
+      case VerifyForm.InBandTwoTier => inBand()
       case VerifyForm.Fetch  => fetch(freshCands())
+      case VerifyForm.Auto if !inBandFits(hashed, hCol) => fetch(freshCands())
       case VerifyForm.Auto   =>
         val n = hashed.select(col(idCol)).count()
         // Small corpora skip the routing machinery entirely: in-band's
@@ -398,13 +386,8 @@ object MinHashLSH {
           val cands = freshCands().localCheckpoint(true)
           val c = cands.count()
           if (inBandWins(c, n, numBands)) {
-            releaseCheckpoint(cands)
-            inBandFormFor(hashed, hCol) match {
-              case VerifyForm.InBandTwoTier =>
-                inBandTwoTierVerifyPairs(hashed, idCol, hCol, numHashes,
-                  numBands, r, threshold, maxBucket)
-              case _ => inBand()
-            }
+            graft.ops.Checkpoints.release(cands)
+            inBand()
           } else fetch(cands)
         }
     }
@@ -416,17 +399,33 @@ object MinHashLSH {
     * rate the amplification is brutal (the ×100 rehearsal measured q35 at
     * 17.4M candidates for 25.6k true pairs, ~70 partners/doc, 58 GiB of
     * shuffle read to ship 1.2 GB of arrays). Here the array rides the
-    * one (band, key) exchange, the self-join evaluates the exact Jaccard
-    * PIPELINED (pair rows never shuffle), survivors are
-    * threshold-filtered in place, and only true pairs reach the final
-    * distinct. A pair agreeing in k bands pays k microsecond Jaccard
+    * one (band, key) exchange and the self-join filters pipelined (pair
+    * rows never shuffle): a pair agreeing in k bands pays k bound
     * evaluations; amplification drops from per-partner to per-band.
-    * Output set identical to the fetch form by construction.
+    *
+    * Two tiers attack that exchange's BYTES: at the ×100 rehearsal the
+    * full-array in-band form's one fat exchange carried 8M band rows ×
+    * ~2.4 KB gram arrays = 29.9 GiB, and the round-10 kernel work proved
+    * per-pair CPU is no longer the bound (array movement is). Tier 1
+    * ships each doc's 16-bit TRUNCATED multiset
+    * ([[graft.expressions.TruncHashes]] — 2 bytes/element, 4× fewer
+    * array bytes through the same windowed-cap + sort-merge join)
+    * and filters band collisions at `jaccard_upper >= threshold`, a
+    * PROVABLE upper bound on the exact Jaccard (see
+    * [[graft.expressions.JaccardUpperBound]] for the multiset-min
+    * argument), so survivors are a superset of the true pairs. Tier 2
+    * re-verifies survivors exactly via the skinny fetch join — survivor
+    * count ≈ true pairs + a small truncation-collision margin
+    * (E[spurious ΔJ] ≈ na·nb/2¹⁶/union, ~0.002 at 300-gram docs), so
+    * the fetch ships each array ~once per TRUE partner, not per band
+    * collision. Output identical to Fetch by construction.
+    * Requires `array<bigint>` shingles (TruncHashes' input type).
     *
     * Physical form of the FAT side — two alternatives were built and
     * MEASURED at ×100 (500k docs, 8M band rows × ~2.4 KB arrays, 32g
-    * heap, 192 partitions) against this windowed-count + sort-merge form
-    * (110.8 s solo, zero spill, post-JaccardSim):
+    * heap, 192 partitions) against the windowed-count + sort-merge form
+    * this verify keeps (110.8 s solo for the full-array form, zero
+    * spill, post-JaccardSim):
     *   (a) hoist the hot-bucket guard to a skinny pre-pass (extra
     *       scan-side MinHash + (band,key) count-agg, oversized list
     *       broadcast-anti-joined before the fat exchange) + shuffle_hash
@@ -439,54 +438,6 @@ object MinHashLSH {
     * SMJ needs anyway, and the shuffle (one fat exchange written once,
     * read twice) plus the scan-side MinHash are the real floor.
     *
-    * Round 11 attacked that floor's BYTES instead: for `array<bigint>`
-    * shingles the routed in-band decision now runs
-    * [[inBandTwoTierVerifyPairs]] (truncated 2-byte elements through the
-    * same exchange + exact re-verify of survivors — ×100 c8 60.4 s vs
-    * this form's 91.0 s, identical output). This classic form remains
-    * the in-band member for non-long shingle arrays and for explicit
-    * `VerifyForm.InBand` callers. */
-  private def inBandVerifyPairs(hashed: DataFrame, idCol: String, hCol: String,
-                                numHashes: Int, numBands: Int, rowsPerBand: Int,
-                                threshold: Double, maxBucket: Int): DataFrame = {
-    val rows = hashed.select(col(idCol), col(hCol),
-        explode(bandKeys(
-          graft.expressions.MinHashSig.minhash_sig(col(hCol), numHashes),
-          numBands, rowsPerBand)).as("__bk"))
-      .select(col(idCol), col(hCol),
-        col("__bk.band").as("band"), col("__bk.key").as("key"))
-    val capped = capBuckets(rows, maxBucket)
-    val l = capped.select(col(idCol).as("a"), col(hCol).as("__sh_a"),
-      col("band"), col("key"))
-    val rr = capped.select(col(idCol).as("b"), col(hCol).as("__sh_b"),
-      col("band"), col("key"))
-    val jac = jaccardExpr(hashed.schema(hCol).dataType)
-    l.join(rr, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .withColumn("jaccard", jac(col("__sh_a"), col("__sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"), col("jaccard"))
-      .distinct()
-  }
-
-  /** Two-tier in-band verify — InBand's shape with the exchange BYTES
-    * attacked: at the ×100 rehearsal the in-band form's one fat exchange
-    * carries 8M band rows × ~2.4 KB full gram arrays = 29.9 GiB, and the
-    * round-10 kernel work proved per-pair CPU is no longer the bound
-    * (array movement is). Tier 1 ships each doc's 16-bit TRUNCATED
-    * multiset ([[graft.expressions.TruncHashes]] — 2 bytes/element, 4×
-    * fewer array bytes through the same windowed-cap + sort-merge join)
-    * and filters band collisions at `jaccard_upper >= threshold`, a
-    * PROVABLE upper bound on the exact Jaccard (see
-    * [[graft.expressions.JaccardUpperBound]] for the multiset-min
-    * argument), so survivors are a superset of the true pairs. Tier 2
-    * re-verifies survivors exactly via the skinny fetch join — survivor
-    * count ≈ true pairs + a small truncation-collision margin
-    * (E[spurious ΔJ] ≈ na·nb/2¹⁶/union, ~0.002 at 300-gram docs), so
-    * the fetch ships each array ~once per TRUE partner, not per band
-    * collision. Output identical to InBand/Fetch by construction.
-    * Requires `array<bigint>` shingles (TruncHashes' input type).
-    *
     * The bound's DISTINCT-elements precondition (JaccardUpperBound uses
     * physical lengths as set sizes) is self-enforced here by the
     * kernel's dedup mode ([[graft.expressions.TruncHashes]]
@@ -494,7 +445,7 @@ object MinHashLSH {
     * fused primitive sort, scan-side, BEFORE the fat exchange): the
     * gram kernels already emit distinct hashes so it collapses nothing
     * for current callers, but a future multiset-hash pipeline routed
-    * here by element type alone (see [[inBandFormFor]]) would otherwise
+    * here by element type alone (see [[inBandFits]]) would otherwise
     * silently lose true pairs (A=[x,x] vs B=[x]: set J = 1.0 but the
     * physical-length bound gives 0.5 < threshold). An `array_distinct`
     * wrapper was tried first and REVERTED: its boxed per-element

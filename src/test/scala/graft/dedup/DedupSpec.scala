@@ -222,10 +222,8 @@ class DedupSpec extends SparkSpec {
         .select("doc_a", "doc_b", "jaccard")
         .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
     val fetch = run(MinHashLSH.VerifyForm.Fetch)
-    val inband = run(MinHashLSH.VerifyForm.InBand)
     val twoTier = run(MinHashLSH.VerifyForm.InBandTwoTier)
-    assert(fetch.nonEmpty && fetch.sameElements(inband))
-    assert(fetch.sameElements(twoTier))
+    assert(fetch.nonEmpty && fetch.sameElements(twoTier))
   }
 
   test("two-tier verify keeps a true pair that NAIVE truncation would drop") {

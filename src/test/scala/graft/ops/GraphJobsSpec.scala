@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.dedup.Clusters
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Pins the Spark job count of the graph operators' construction on one
   * fixed clean long-id graph each: the edge/node checkpoints, one job per
@@ -11,35 +10,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * on every curation run. */
 class GraphJobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs `body` launches, counted by job group; a marker job after it
-    * proves the listener bus has delivered every earlier job start. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graph-jobs-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(group + "-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(group + "-marker"))
-      seen.toArray.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   // two chains (1..6, 10..12) and a pair: five label-propagation rounds
   // carry label 1 to vertex 6, a sixth sees no change
