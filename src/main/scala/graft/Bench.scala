@@ -4,65 +4,41 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line on stdout for the driver (→ BENCH_r{N}.json).
   *
-  * Hygiene (round-1 verdict items): the timed action is the same full
+  * Each shot goes through the [[Profile]] loop with the same full
   * materialization Verify performs (`collect()` of the ordered result, so
-  * final sorts are not optimized away as they were under `count()`);
-  * failures are reported on stderr and recorded as -1, never silently
-  * timed; JVM/codegen/parquet warmup is absorbed by an untimed warmup run
-  * of the flagship entry query so the first timed query isn't inflated.
-  *
-  * Reporting (round-4 verdict item, sharpened round 7): the FULL 147-query
-  * line is written to `BENCH.json` in the working directory and printed
-  * once for human logs — but at ~3.5 kB it exceeds the driver's 2000-char
-  * stdout tail capture, which head-truncated it into `parsed: null` for
-  * three straight rounds (BENCH_r04–r06). So the LAST stdout line is now a
-  * compact (<1 kB) JSON the tail always contains whole: the 11-query
-  * relational baseline set individually (the BASELINE.md bench gate),
-  * plus whole-surface totals and a pointer to the full per-query file.
+  * final sorts are not optimized away); a failure is reported on stderr
+  * and recorded as -1. An untimed warmup absorbs JVM/codegen/parquet init.
+  * The full per-query line goes to `BENCH.json` (and stdout once); the
+  * first shot's layer profile to `BENCH_PROFILE.json`. The LAST stdout
+  * line is a compact (<1 kB) JSON the driver's 2000-char tail capture
+  * always holds whole: the 11-query relational baseline set (the
+  * BASELINE.md bench gate), whole-surface totals and a pointer to the
+  * full file.
   */
 object Bench {
 
-  /** Session-speed calibration (round-12 verdict #2): the round-over-round
-    * headline comparison had no denominator for BOX speed — round 12's
-    * +17% "regression" was pure session noise (the judge's geomean across
-    * 173 queries including untouched one-liners was 1.153), and the record
-    * had no way to show it. The bench now times a FIXED probe — a frozen
-    * q01-shaped scan-aggregate over sf0.1 lineitem, deliberately inlined
-    * so query-code evolution can never move the yardstick — discards two
-    * JIT-warm shots then takes the MIN of 8 (the statistic `probeSec`'s
-    * comment justifies: ±5% cross-JVM vs ±11% for the median), and reports
-    * `session_index` = min / [[NominalProbeSec]] in both JSON lines. An
-    * index of 1.15 tells the diff reader "this box ran 15% slow; divide
-    * the headline by that before believing a regression".
+  /** Session-speed calibration: the bench times a FIXED probe — a frozen
+    * q01-shaped scan-aggregate over sf0.1 lineitem, inlined so query-code
+    * evolution never moves the yardstick — and reports `session_index` =
+    * probe / [[NominalProbeSec]] in both JSON lines. An index of 1.15
+    * says "this box ran 15% slow; divide the headline by that before
+    * believing a regression" (round 12's +17% "regression" was pure
+    * session noise). The index also scales the flag rule's absolute
+    * slowdown guard; the per-query ratios self-normalize by their median.
     *
-    * [[NominalProbeSec]] provenance: mid of four fresh-JVM probe runs on
-    * the round-13 build session (0.344/0.319/0.335/0.329 s, min-of-8
-    * each), a session whose q92/q39/q48 A/B numbers sat at or below the
-    * round-11 committed bench values — i.e. a nominal-speed box.
-    * Re-baseline only if the probe itself changes (then re-measure,
-    * don't reinterpret history).
-    *
-    * The per-query FLAG thresholds already self-normalize via the median
-    * ratio (a uniformly slow session inflates every ratio, so r >
-    * 1.5×median flags nothing) — the session index additionally scales the
-    * ABSOLUTE slowdown guard (0.5 s on a nominal box is 0.575 s on a 1.15×
-    * box), and calibrates the headline, which the median ratio never
-    * touched. `runMain graft.Bench --probe-only` prints the raw probe for
-    * re-baselining a new box without a full bench. */
+    * [[NominalProbeSec]]: mid of four fresh-JVM probe runs
+    * (0.344/0.319/0.335/0.329 s) on a nominal-speed box. Re-baseline only
+    * if the probe itself changes; `runMain graft.Bench --probe-only`
+    * prints the raw probe. */
   val NominalProbeSec: Double = 0.332
 
   def probeSec(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions._
-    def once(): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
+    val probe: Profile.Q = (s, _) =>
+      s.read.parquet("/root/testdata/sf0.1/lineitem.parquet")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(sum("l_quantity"), sum("l_extendedprice"),
           avg("l_discount"), count(lit(1)))
-        .collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     // a single ~0.5 s shot varies ±20% ACROSS fresh JVMs (JIT state);
     // discard two extra JIT-warm shots, then MIN-of-8 — the min is the
     // least-noisy timing statistic (it strips GC/scheduler jitter but
@@ -70,8 +46,8 @@ object Bench {
     // shot). Measured cross-JVM spread: median-of-8 ±11%, min-of-8 ±5%
     // — the latter is the resolution the index needs (it exists to
     // expose 15%+ box drift).
-    once(); once()
-    Vector.fill(8)(once()).min
+    Profile.run(spark, "", Seq.fill(10)("probe" -> probe), Profile.collect).drop(2)
+      .map(p => p.error.fold(p.sec)(e => sys.error(s"session probe failed: $e"))).min
   }
 
   def main(args: Array[String]): Unit = {
@@ -94,13 +70,9 @@ object Bench {
         System.err.println(s"[bench] warmup skipped: $e") }
     } }
 
-    // session-speed probe (after warmup, before any timed query; see
-    // probeSec's scaladoc). --probe-only is handled OUTSIDE the try: a
-    // probe failure there must fail loudly and exit — falling through
-    // to a full bench would overwrite BENCH.json (and mint a sticky
-    // baseline) on exactly the broken-box run the flag exists for. In
-    // normal mode a probe failure costs only calibration — index falls
-    // back to 1.0 and is reported as such.
+    // session-speed probe, after warmup. --probe-only must fail loudly on
+    // a probe failure (a fall-through would overwrite BENCH.json on a
+    // broken box); in a full run a failure costs only calibration (1.0).
     if (args.contains("--probe-only")) {
       val p = probeSec(spark)
       println(f"""{"probe_sec":$p%.3f,"nominal_sec":$NominalProbeSec%.3f,"session_index":${p / NominalProbeSec}%.3f}""")
@@ -113,25 +85,16 @@ object Bench {
         (-1.0, 1.0)
       }
 
-    // Variance protocol (round-10 verdict #3, sticky baseline round-12
-    // verdict #2): the bench is single-shot, so on a box with documented
-    // 1.5-3x session noise a round-over-round "regression" on an
-    // untouched sub-2s query is unfalsifiable. Two baselines, flag on
-    // EITHER:
-    //  - "run":   BENCH.json as last written (intra-round, walks forward
-    //             with every run — catches step regressions);
-    //  - "round": BENCH_base_r{N}.json, a snapshot of the BENCH.json this
-    //             round INHERITED, taken by the first Bench run after the
-    //             driver drops BENCH_r{N}.json (N = highest such file).
-    //             The run baseline alone let cross-round drift walk past
-    //             unflagged (r10->r11: q44 2.24x, q18 2.21x) because by
-    //             round end it equals the same round's latest run.
-    // A query whose ratio against a baseline exceeds that baseline
-    // run-pair's median ratio (the machine-noise normalizer, same rule as
-    // tools/bench_diff.py) by >1.5x AND slowed by >0.5s gets ONE
-    // in-protocol re-run; the min is reported and the first-shot value
-    // recorded under "reruns" (with which baseline tripped) so the diff
-    // reader sees "reproduced" vs "noise" by protocol, not judgment.
+    // Variance protocol: the bench is single-shot on a box with 1.5-3x
+    // session noise, so a query is flagged against two baselines:
+    //  - "run":   BENCH.json as last written (catches step regressions);
+    //  - "round": BENCH_base_r{N}.json, the BENCH.json this round
+    //             inherited, snapshot by the first run after the driver
+    //             drops BENCH_r{N}.json (catches cross-round drift).
+    // A query whose ratio exceeds that pair's median ratio (the noise
+    // normalizer, as in tools/bench_diff.py) by >1.5x AND slowed by
+    // >0.5 s gets ONE re-run; the min is reported and the first shot
+    // recorded under "reruns" with the baseline that tripped.
     def readBench(path: java.nio.file.Path): Map[String, Double] = try {
       val txt = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
       val json = org.json4s.jackson.JsonMethods.parse(txt)
@@ -165,32 +128,23 @@ object Bench {
     val prevRound: Map[String, Double] =
       roundBase.map(readBench).getOrElse(Map.empty)
 
-    var failed = List.empty[String]
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-              recordFailure: Boolean): Double = {
-      // settle the JVM between queries: the interpreted-HOF-heavy queries
-      // allocate hard, and carryover GC debt otherwise bleeds one query's
-      // cost into the next measurement
-      System.gc()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).collect(); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e")
-        if (recordFailure) failed ::= name
-        -1.0
-      }
+    // Profile's loop: System.gc() before each query (carryover GC debt
+    // would bleed into the next measurement), the profile read after the
+    // clock stops
+    def shots(names: Seq[String]): Seq[Profile.Record] =
+      Profile.run(spark, sfDir, names.map(n => n -> SparkEntry.queries(n)), Profile.collect)
+    def secOf(p: Profile.Record): Double = p.error match {
+      case Some(e) => System.err.println(s"[bench] ${p.name} FAILED: $e"); -1.0
+      case None => p.sec
     }
-    // Defensive sweep before the timed loop: computed staged tables are
-    // run-scoped (no current code can reuse a previous run's), but a
-    // stale warehouse must never be able to feed a timed query even if a
-    // future call site forgets the run scoping — the bench always starts
-    // from a computed-staging-cold warehouse.
+    // the timed loop starts from a computed-staging-cold warehouse, even
+    // if a future call site forgets the run scoping
     try graft.queries.KeyedWorkDir.dropComputedStaged(spark)
     catch { case e: Exception =>
       System.err.println(s"[bench] staged-state sweep failed: $e") }
-    val firstShot = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timed(name, fn, recordFailure = true)
-    }
+    val profiles = shots(SparkEntry.queries.keys.toSeq.sorted)
+    val firstShot = profiles.map(p => p.name -> secOf(p))
+    val failed = profiles.filter(_.error.nonEmpty).map(_.name).reverse
     val firstByName = firstShot.toMap
     def flaggedVs(base: Map[String, Double]): Set[String] = {
       val ratios = firstShot.collect {
@@ -215,20 +169,15 @@ object Bench {
       if (flaggedRun(k) && flaggedRound(k)) "both"
       else if (flaggedRound(k)) "round" else "run"
     // Before each rerun, drop run-scoped COMPUTED staged tables (trained
-    // centroids, built kNN edges, q157 dedup stages — see
-    // KeyedWorkDir.ComputedStagedPrefixes). Round-15 verdict #1: without
-    // this, a first shot that PAYS a staged build gets min-of-2'd against
-    // a rerun that merely READS the table the first shot left behind, and
-    // the build cost vanishes from the record (q104 8.245 s → 1.876 s in
-    // BENCH_r15). The drop makes every rerun redo whatever computed
-    // staging its first shot did, so both shots measure the same work;
-    // raw-input stream staging is untouched. Measurement-methodology
-    // change, disclosed in OPTIMIZATION_r16.md.
+    // centroids, kNN edges, q157 dedup stages): otherwise a first shot
+    // that pays a staged build is min-of-2'd against a rerun that only
+    // reads it (q104 8.2 s → 1.9 s in BENCH_r15). Raw-input stream
+    // staging is untouched.
     val reruns = flagged.toSeq.sorted.map { name =>
       try graft.queries.KeyedWorkDir.dropComputedStaged(spark)
       catch { case e: Exception =>
         System.err.println(s"[bench] staged-state drop before rerun failed: $e") }
-      val again = timed(name, SparkEntry.queries(name), recordFailure = false)
+      val again = secOf(shots(Seq(name)).head)
       System.err.println(f"[bench] rerun $name (vs ${vsLabel(name)}): " +
         f"first=${firstByName(name)}%.2f s rerun=$again%.2f s")
       name -> again
@@ -255,6 +204,10 @@ object Bench {
     println(fullLine) // human logs; too long for the driver's 2000-char tail
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
       (fullLine + "\n").getBytes("UTF-8"))
+    // the first shot's layer profile, one entry per query (Profile.Record)
+    val prof = profiles.map(p => "\"" + p.name + "\":" + p.json).mkString("{", ",\n", "}")
+    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_PROFILE.json"),
+      s"""{$cal,"sf":"$sfDir","queries":$prof}\n""".getBytes("UTF-8"))
 
     // Compact driver-facing line, printed LAST so the stdout tail capture
     // always contains it whole: the BASELINE.md bench-gate set (the 11

@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * Procedure: build the tier's corpus from sf0.1 under the tier's
   * directory if absent (ScaleUp's growth axes: linear dedup/ANN
   * structure, stable dims), measure the tier's queries at scale and at
-  * sf0.1 in the SAME session (noop-sink, task metrics), then fail if any
+  * sf0.1 in the SAME session (`ScaleRehearsal.measure`), then fail if any
   * query
   *
   *  - errors at either SF,
@@ -130,7 +130,7 @@ object ScaleGate {
 
   /** The per-query decision: `base` at sf0.1 and `big` at the tier's
     * scale, with the tier's cap (if any) scaled by `capIdx`. */
-  def verdict(base: ScaleRehearsal.QM, big: ScaleRehearsal.QM, tier: Tier,
+  def verdict(base: Profile.Record, big: Profile.Record, tier: Tier,
               capIdx: Double): Verdict = {
     val linear = SlackFactor * tier.copies * math.max(base.sec, MinBaseSec)
     val cap = tier.capSec.get(big.name).map(_ * capIdx)
@@ -139,23 +139,18 @@ object ScaleGate {
       big.error.orElse(base.error).map(e => s"ERROR $e")
         .orElse(if (big.sec <= budget) None
           else Some(f"OVER BUDGET (${big.sec}%.1f > $budget%.1f s)"))
-        .orElse(if (big.spill > SpillBudgetBytes)
-          Some(f"SPILL (${ScaleRehearsal.gib(big.spill)}%.1f GiB)") else None)
+        .orElse(if (big.spillBytes > SpillBudgetBytes)
+          Some(f"SPILL (${ScaleRehearsal.gib(big.spillBytes)}%.1f GiB)") else None)
     Verdict(budget, failure)
   }
 
-  /** Session-speed calibration (round-13 verdict #2): the absolute caps
-    * are ~1.6× measured-good walls, but this box's probe swung
-    * 0.72→1.62 within one hour of round 13 (q115: 37.7→111.7 s, same
-    * tree) — caps loose enough to absorb that would also absorb a real
-    * 1.5× regression. So the gate runs the SAME fixed probe the bench
-    * uses and scales the absolute caps (and the rerun-trigger
-    * threshold) by max(index, 1.0): on a nominal-or-fast box the caps
-    * stay at their tight committed values; on a measurably contended
-    * box they widen exactly with the contention instead of being
-    * pre-widened for the worst box. The relative SlackFactor budgets
-    * self-normalize (base and big are measured in-session) and are
-    * untouched. A probe failure costs only calibration (index 1.0). */
+  /** Session-speed calibration: the absolute caps are ~1.6× measured-good
+    * walls, but this box's probe has swung 0.72→1.62 within one hour
+    * (q115: 37.7→111.7 s, same tree). So the gate runs the bench's fixed
+    * probe and scales the caps (and the rerun trigger) by max(index, 1.0):
+    * tight on a nominal box, widened exactly with measured contention.
+    * The relative SlackFactor budgets self-normalize (base and big run in
+    * one session). A probe failure costs only calibration (index 1.0). */
   private def capIndex(spark: SparkSession): Double =
     try {
       val p = Bench.probeSec(spark)
@@ -166,18 +161,15 @@ object ScaleGate {
       println(s"SCALEGATE probe failed (caps unscaled): $e"); 1.0
     }
 
-  /** Variance floor under the absolute caps (round-12 verdict #5): the
-    * caps are ~1.6× measured-good walls on a box with documented ±25%
-    * single-shot noise, so a pure noise spike can false-fail (and a
-    * noise-assisted real regression false-pass — that risk is inherent
-    * to single-shot caps and accepted). A capped query whose FIRST shot
-    * exceeds its cap gets exactly one in-gate re-run while the big
-    * corpus is still hot; the min of the two full measurements is
-    * scored, and both shots are logged so a reproduced breach reads as
-    * "confirmed by protocol", not judgment. */
+  /** Variance floor under the absolute caps (±25% single-shot noise): a
+    * capped query whose FIRST shot exceeds its cap gets exactly one
+    * re-run while the big corpus is hot; the min is scored and both
+    * shots are logged, so a reproduced breach reads as confirmed by
+    * protocol. A noise-assisted real regression can still pass; that
+    * risk is inherent to single-shot caps. */
   private def rerunCapBreaches(spark: SparkSession, tier: Tier,
-                               big: Seq[ScaleRehearsal.QM],
-                               capIdx: Double): Seq[ScaleRehearsal.QM] =
+                               big: Seq[Profile.Record],
+                               capIdx: Double): Seq[Profile.Record] =
     big.map { q =>
       tier.capSec.get(q.name).map(_ * capIdx) match {
         case Some(cap) if q.error.isEmpty && q.sec > cap =>
@@ -221,7 +213,7 @@ object ScaleGate {
     val bad = big.flatMap { q =>
       val b = base(q.name)
       val v = verdict(b, q, tier, capIdx)
-      println(f"${q.name}%-26s ${b.sec}%8.2f ${q.sec}%8.2f ${q.sec / math.max(b.sec, 0.01)}%7.1f ${v.budget}%8.1f ${ScaleRehearsal.gib(q.spill)}%9.2f ${v.failure.getOrElse("ok")}")
+      println(f"${q.name}%-26s ${b.sec}%8.2f ${q.sec}%8.2f ${q.sec / math.max(b.sec, 0.01)}%7.1f ${v.budget}%8.1f ${ScaleRehearsal.gib(q.spillBytes)}%9.2f ${v.failure.getOrElse("ok")}")
       v.failure.map(_ => q.name)
     }
     spark.stop()

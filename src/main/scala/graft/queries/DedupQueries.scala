@@ -19,6 +19,25 @@ object DedupQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
+  /** `cols` of `df` plus the curation quality gate's inputs: n_words and
+    * n_distinct of the tokenized `text`. */
+  private def withGateCounts(df: DataFrame, cols: String*): DataFrame = {
+    val toks = TextOps.tokens(col("text"))
+    df.select(cols.map(col) ++ Seq(size(toks).as("n_words"),
+      size(array_distinct(toks)).as("n_distinct")): _*)
+  }
+
+  /** The curation quality gate over [[withGateCounts]]' columns, in
+    * integer arithmetic: at least 20 words, at least 30% of them
+    * distinct. */
+  private def passesGate: Column =
+    col("n_words") >= 20 && col("n_distinct") * 10 >= col("n_words") * 3
+
+  /** `cols` of the documents of `df` that pass the quality gate, plus
+    * n_words and n_distinct. */
+  private def qualityGated(df: DataFrame, cols: String*): DataFrame =
+    withGateCounts(df, cols: _*).filter(passesGate)
+
   /** F8 dedup gate: src0 is the 7-day history, src1..9 the incoming batch.
     * Within-batch keeper selection (deterministic min doc_id per hash),
     * then left-anti join against history hashes. Exercises O2 + J3 + F8. */
@@ -307,13 +326,8 @@ object DedupQueries {
         val in = fs.open(spanMarker)
         try in.readByte() == 1 finally in.close()
       } else {
-        val toks = TextOps.tokens(col("text"))
         val gated = ExactDedup.withTextHash(
-          s.read.parquet(streamPath)
-            .select(col("doc_id"), col("text"),
-              size(toks).as("n_words"), size(array_distinct(toks)).as("n_distinct"))
-            .filter(col("n_words") >= 20 && col("n_distinct") * 10 >= col("n_words") * 3),
-          "text")
+          qualityGated(s.read.parquet(streamPath), "doc_id", "text"), "text")
         val n = gated
           .groupBy("text_hash")
           .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
@@ -327,13 +341,9 @@ object DedupQueries {
     if (spanning) {
       val life1Seen = s.read.parquet(s"$tmp/seen")
         .filter(col("batch_id") <= 1).select("text_hash")
-      val toks2 = TextOps.tokens(col("text"))
       val gated2 = ExactDedup.withTextHash(
-        s.read.parquet(streamPath)
-          .filter(col("doc_id") >= boundaryId)
-          .select(col("doc_id"), col("text"),
-            size(toks2).as("n_words"), size(array_distinct(toks2)).as("n_distinct"))
-          .filter(col("n_words") >= 20 && col("n_distinct") * 10 >= col("n_words") * 3),
+        qualityGated(s.read.parquet(streamPath).filter(col("doc_id") >= boundaryId),
+          "doc_id", "text"),
         "text")
       val crossLife = gated2
         .join(life1Seen, Seq("text_hash"), "left_semi")
@@ -502,12 +512,7 @@ object DedupQueries {
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ss = batch.sparkSession
-        val toks = TextOps.tokens(col("text"))
-        val gated = batch
-          .select(col("doc_id"), col("source"), col("text"),
-            size(toks).as("n_words"), size(array_distinct(toks)).as("n_distinct"))
-          .filter(col("n_words") >= 20 &&
-            col("n_distinct") * 10 >= col("n_words") * 3)
+        val gated = qualityGated(batch, "doc_id", "source", "text")
         val k = ExactDedup.keepers(ExactDedup.withTextHash(gated, "text"),
           "text_hash", "doc_id", carryCols = Seq("source", "text", "n_words"))
         val seenPath = new org.apache.hadoop.fs.Path(seen)
@@ -634,12 +639,8 @@ object DedupQueries {
     * chain re-runs the lineage per stage. */
   val q170CurationFunnel: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val toks = TextOps.tokens(col("text"))
-    val base = d.filter(col("source") =!= "src0")
-      .select(col("doc_id"), col("text"),
-        size(toks).as("n_words"), size(array_distinct(toks)).as("n_distinct"))
-      .withColumn("pass_q",
-        col("n_words") >= 20 && col("n_distinct") * 10 >= col("n_words") * 3)
+    val base = withGateCounts(d.filter(col("source") =!= "src0"), "doc_id", "text")
+      .withColumn("pass_q", passesGate)
     // The funnel's gate→hash lineage feeds FOUR consumers (the keeper
     // aggregate, the keeper join, the LSH probe projection, the final
     // funnel aggregate), and each re-ran the scan + double tokenize +
@@ -1004,13 +1005,7 @@ object DedupQueries {
     * every stage is the library op, not a re-derivation. */
   val q118CurationPipeline: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val toks = TextOps.tokens(col("text"))
-    val gated = d
-      .select(col("doc_id"), col("source"), col("text"),
-        size(toks).as("n_words"),
-        size(array_distinct(toks)).as("n_distinct"))
-      .filter(col("n_words") >= 20 &&
-        col("n_distinct") * 10 >= col("n_words") * 3)
+    val gated = qualityGated(d, "doc_id", "source", "text")
     val keepers = ExactDedup.keepers(
       ExactDedup.withTextHash(gated, "text"),
       "text_hash", "doc_id", carryCols = Seq("source", "n_words"))
@@ -1063,10 +1058,7 @@ object DedupQueries {
     KeyedWorkDir.contentKeyedTable(s, "graft_q157_keepers_", dir, stagingTables, stagingLayout)
     KeyedWorkDir.contentKeyedTable(s, "graft_q157_dedup_", dir, stagingTables, stagingLayout)
     // 1. quality gate (integer-arithmetic thresholds, as q118)
-    val toks = TextOps.tokens(col("text"))
-    val gated = d.select(col("doc_id"), col("source"), col("text"),
-        size(toks).as("n_words"), size(array_distinct(toks)).as("n_distinct"))
-      .filter(col("n_words") >= 20 && col("n_distinct") * 10 >= col("n_words") * 3)
+    val gated = qualityGated(d, "doc_id", "source", "text")
       .select("doc_id", "source", "text")
     // 2. exact dedup, deterministic min-id keeper; staged (bucketed)
     val s1 = graft.sinks.Sinks.stagedTable(s, s"graft_q157_keepers_$suffix",

@@ -245,7 +245,7 @@ object SimilarityQueries {
       key = "cen_id", numBuckets = 1, sortCols = Seq("cen_id")) {
       val (_, corpus) = parts(s, dir)
       val seed = KMeans.collectSeed(seedOf(corpus), "vec_id", "vec")
-      KMeans.train(corpus, "vec_id", "vec", seed, rounds = 3)
+      KMeans.train(corpus, "vec", seed, rounds = 3)
         .map { case (id, arr) => (id, arr.toSeq) }.toDF("cen_id", "cen_vec")
     }
     staged.collect()

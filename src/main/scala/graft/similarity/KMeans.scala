@@ -7,14 +7,13 @@ import org.apache.spark.sql.functions._
   * the loop whose single step q49 maintains (`IvfFlat.recomputeCentroids`)
   * and whose fitted index q34/q65 search. Designed for the 100 TB regime:
   *
-  *  - **Zero corpus shuffles in the assignment.** The centroid set is
-  *    k×d doubles held on the driver between rounds (the [[Pca]]
-  *    d-vector precedent); each round embeds them as LITERAL arrays and
-  *    computes the argmin as a statically unrolled
-  *    `least(struct(dist_1, id_1), …, struct(dist_k, id_k))` — pure
-  *    whole-stage-codegen projection, no crossJoin row multiplication,
-  *    no exchange. The only shuffle per round is the per-(cell, dim)
-  *    mean — cells×dims rows after map-side combine, corpus-size-free.
+  *  - **Zero corpus shuffles.** The centroid set is k×d doubles held on
+  *    the driver between rounds (the [[Pca]] d-vector precedent). A
+  *    training round is one treeAggregate of per-cell decimal sums and
+  *    counts ([[train]]); the final assignment ([[assignCells]]) embeds
+  *    the centroids as LITERAL arrays and computes the argmin as a
+  *    statically unrolled `least(struct(dist_1, id_1), …)` — pure
+  *    whole-stage-codegen projection, no crossJoin, no exchange.
   *  - **Engine-exact determinism.** dist = ((x·x − 2·(x·c)) + c·c) with
   *    every product a sequential-fold dot ([[graft.expressions.DotProduct]]
   *    ≡ DuckDB `list_inner_product`) and the formula text pinned, so
@@ -27,8 +26,6 @@ import org.apache.spark.sql.functions._
   * round on both engines identically — k may shrink, never misalign.
   */
 object KMeans {
-
-  private val Dec = "decimal(28,12)"
 
   /** Sequential-fold self-dot on the driver — MUST match
     * [[graft.expressions.DotProduct]]'s order (and DuckDB's
@@ -71,52 +68,6 @@ object KMeans {
       .select(col(idCol), col("__m.cell").as("cell"), col("__m.dist").as("dist"))
   }
 
-  /** Decimal-exact per-(cell, dim) means of the members — the
-    * partition-order-independent twin of `IvfFlat.recomputeCentroids`
-    * (whose double `avg` is fine for a one-shot step but would let
-    * round-N error feed round-N+1 here). */
-  def dimMeansExact(cells: DataFrame, corpus: DataFrame,
-                    idCol: String, vecCol: String): DataFrame =
-    cells.select(col(idCol), col("cell"))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("d", "xf")))
-      .select(col("cell"), col("d"), col("xf").cast("double").as("x"))
-      .groupBy("cell", "d")
-      .agg((sum(col("x").cast(Dec)).cast("double") / count(lit(1))).as("w"))
-
-  /** `rounds` Lloyd iterations from `seed`; returns the trained
-    * centroids (driver-side, k×d doubles — the index you then persist
-    * or hand to `IvfFlat`).
-    *
-    * Physical form (r15): on a UNIFORM-dims corpus (one cheap min/max
-    * size aggregate proves it) the rounds run as RDD treeAggregates —
-    * the relational round embedded k×d centroid LITERALS per round, so
-    * every round was a brand-new plan paying full Catalyst analysis +
-    * a large codegen compile (the q94 Pca finding; q149's cold shot was
-    * ~6.9 s vs ~0.7 s warm, almost all per-round planning). The RDD
-    * round replays the engine arithmetic exactly: dist =
-    * ((x·x − 2·(x·c)) + c·c) with the same sequential-fold dots and the
-    * same double-comparison semantics as least(struct(dist, cell))
-    * (NaN largest, ties → lower cell id), per-(cell,dim) means as the
-    * same BigDecimal.valueOf+setScale(12, HALF_UP) quantize-then-sum
-    * over member count. Rows with a null element are skipped (they fail
-    * the __xx IS NOT NULL gate in the relational form). Corpora with
-    * VARIABLE vector lengths (where the relational form's null-dist
-    * struct ordering semantics bind) keep the relational rounds —
-    * routing never changes results (KMeansSpec pins equality). */
-  def train(corpus: DataFrame, idCol: String, vecCol: String,
-            seed: Seq[(Long, Array[Double])], rounds: Int): Seq[(Long, Array[Double])] = {
-    if (seed.size >= 2 && rounds > 0) {
-      val dims = seed.head._2.length
-      if (seed.forall(_._2.length == dims)) {
-        val mm = corpus.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
-        if (!mm.isNullAt(0) && mm.getInt(0) == dims && mm.getInt(1) == dims)
-          return trainRdd(corpus, vecCol, seed, rounds, dims)
-      }
-    }
-    trainRelational(corpus, idCol, vecCol, seed, rounds)
-  }
-
   /** Spark SQL's total order on doubles (SQLOrderingUtil /
     * nanSafeCompareDoubles): NaN is largest, NaN equals NaN, -0.0 equals
     * 0.0 — the ordering least(struct(dist, cell)) compares dist with. */
@@ -125,9 +76,36 @@ object KMeans {
     else if (java.lang.Double.isNaN(a)) { if (java.lang.Double.isNaN(b)) 0 else 1 }
     else -1
 
-  private def trainRdd(corpus: DataFrame, vecCol: String,
-                       seed: Seq[(Long, Array[Double])], rounds: Int,
-                       dims: Int): Seq[(Long, Array[Double])] = {
+  /** `rounds` Lloyd iterations from `seed`; returns the trained
+    * centroids (driver-side, k×d doubles — the index you then persist
+    * or hand to `IvfFlat`).
+    *
+    * Each round is one RDD treeAggregate, so training launches exactly
+    * `rounds` Spark jobs (fewer if it collapses) and no round pays
+    * Catalyst analysis or a codegen compile for k×d centroid literals
+    * (the q94 Pca finding: q149's cold shot was ~6.9 s vs ~0.7 s warm
+    * when every round was a new relational plan). The round replays
+    * [[assignCells]]' arithmetic exactly: dist = ((x·x − 2·(x·c)) + c·c)
+    * with the same sequential-fold dots and the same double comparison
+    * as least(struct(dist, cell)) (NaN largest, ties → lower cell id),
+    * and per-(cell, dim) means as the same BigDecimal.valueOf +
+    * setScale(12, HALF_UP) quantize-then-sum over member count.
+    *
+    * A vector takes no part when it is null, has a null element (it
+    * fails [[assignCells]]' `__xx IS NOT NULL` gate) or its length
+    * differs from the centroids'. The seed's centroids must share one
+    * length.
+    *
+    * Empty cells drop out of the next round, and training stops with
+    * the survivors once fewer than 2 remain (all vectors assigned to one
+    * centroid, or an empty/all-null corpus) instead of forfeiting the
+    * run. The unrolled oracle (q149) assumes no collapse, which holds for
+    * any corpus whose seeds attract at least one vector each. */
+  def train(corpus: DataFrame, vecCol: String,
+            seed: Seq[(Long, Array[Double])], rounds: Int): Seq[(Long, Array[Double])] = {
+    val dims = seed.headOption.map(_._2.length).getOrElse(0)
+    require(seed.forall(_._2.length == dims),
+      s"k-means seed centroids must share one length; got ${seed.map(_._2.length).distinct}")
     // one conversion plan, built once: widen to double exactly as the
     // kernels do per element (ieee-exact float→double)
     val rows = corpus.select(col(vecCol).cast("array<double>")).rdd
@@ -195,40 +173,6 @@ object KMeans {
           cIds(j) -> Array.tabulate(dims)(d =>
             sums(j * dims + d).doubleValue() / cnts(j))
       }
-      round += 1
-    }
-    cens
-  }
-
-  /** Spec hook: the relational rounds, callable directly so the fast
-    * path can be pinned bit-equal against them. */
-  private[graft] def trainRelationalForSpec(corpus: DataFrame, idCol: String,
-      vecCol: String, seed: Seq[(Long, Array[Double])],
-      rounds: Int): Seq[(Long, Array[Double])] =
-    trainRelational(corpus, idCol, vecCol, seed, rounds)
-
-  private def trainRelational(corpus: DataFrame, idCol: String, vecCol: String,
-                              seed: Seq[(Long, Array[Double])],
-                              rounds: Int): Seq[(Long, Array[Double])] = {
-    var cens = seed
-    // Collapse guard: a round can starve cells (all vectors assigned to
-    // one centroid, or an empty/all-null corpus yielding none). Stopping
-    // with the SURVIVING centroids is strictly better than the
-    // alternative — letting the next round's assignCells throw its
-    // >= 2-centroids require and forfeit the whole training run. The
-    // unrolled oracle (q149) assumes no collapse, which holds for any
-    // corpus whose seeds attract at least one vector each; the guard is
-    // for deployment-scale degenerate inputs.
-    var round = 0
-    while (round < rounds && cens.size >= 2) {
-      val dims = cens.head._2.length
-      val cells = assignCells(corpus, idCol, vecCol, cens)
-      val means = dimMeansExact(cells, corpus, idCol, vecCol).collect()
-      cens = means.groupBy(_.getLong(0)).toSeq.map { case (cell, rows) =>
-        val arr = new Array[Double](dims)
-        rows.foreach(r => arr(r.getInt(1)) = r.getDouble(2))
-        cell -> arr
-      }.sortBy(_._1)
       round += 1
     }
     cens

@@ -10,7 +10,7 @@ class ScaleGateSpec extends AnyFunSuite {
 
   private def qm(name: String, sec: Double, spill: Long = 0L,
                  error: Option[String] = None) =
-    ScaleRehearsal.QM(name, sec, 0L, 0L, spill, 0L, 0L, 0L, error)
+    Profile.Record(name, actionS = sec, spillBytes = spill, error = error)
 
   private val q = "q35_char_ngram_pairs"
 

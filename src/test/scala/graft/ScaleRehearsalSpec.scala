@@ -34,4 +34,26 @@ class ScaleRehearsalSpec extends SparkSpec {
     assert(qm.tasks > 0)
     assert(qm.tasks == seen.sum - 8)
   }
+
+  test("measure's clock stops when the write returns, not when a slow listener catches up") {
+    val sc = spark.sparkContext
+    val delayMs = 1000L
+    // every task end of the query waits its turn behind this listener,
+    // and so does the execution end an Observation waits for
+    val slow = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Thread.sleep(delayMs)
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(slow)
+    val qm = try ScaleRehearsal.measure(spark, "/root/testdata/sf0.001",
+        Seq("q01_pricing_summary")).head
+      finally {
+        ListenerDrain(sc)
+        sc.removeSparkListener(slow)
+      }
+    assert(qm.error.isEmpty, qm.error)
+    assert(qm.rows > 0 && qm.tasks >= 3)
+    val backlog = qm.tasks * delayMs / 1e3
+    assert(qm.sec < backlog, s"${qm.sec} s measured behind a $backlog s listener backlog")
+  }
 }

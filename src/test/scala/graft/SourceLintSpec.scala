@@ -36,4 +36,17 @@ class SourceLintSpec extends AnyFunSuite {
       outside.map { case (f, n) => s"$f:$n" }.mkString("builder outside the recipe: ", ", ", ""))
     assert(hits.count(_._1 == recipe) == 1)
   }
+
+  test("Spark work is counted only by the Profile listener") {
+    // split so this file does not match its own rule
+    val listener = ("""\b(new|extends)\s+""" + "SparkListener" + """\b""").r
+    val profile = Paths.get("src/main/scala/graft/Profile.scala")
+    val hits = scalaFiles("src/main/scala").flatMap(f => codeLines(f).collect {
+      case (line, n) if listener.findFirstIn(line).nonEmpty => (f, n)
+    })
+    val outside = hits.filterNot(_._1 == profile)
+    assert(outside.isEmpty,
+      outside.map { case (f, n) => s"$f:$n" }.mkString("listener outside Profile: ", ", ", ""))
+    assert(hits.count(_._1 == profile) == 1)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,29 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = super.afterAll()
 
-  /** Spark jobs `body` launches, counted by a job group of its own once
-    * the listener bus has delivered every job start. */
-  def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"counted-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(Option(e.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.clearJobGroup()
-      org.apache.spark.graft.ListenerDrain(sc)
-      seen.toArray.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Spark jobs `body` launches, as [[Profile]] attributes them. */
+  def jobsOf(body: => Any): Int = Profile.jobs(spark.sparkContext)(body).toInt
 }
 
 object SparkSpec {

@@ -21,7 +21,7 @@ class KMeansSpec extends SparkSpec {
 
   test("train recovers well-separated clusters (members follow bases)") {
     val df = corpus(90)
-    val cens = KMeans.train(df, "vec_id", "vec", seedOf(df, 0L, 1L, 2L), rounds = 3)
+    val cens = KMeans.train(df, "vec", seedOf(df, 0L, 1L, 2L), rounds = 3)
     val cells = KMeans.assignCells(df, "vec_id", "vec", cens)
       .select(col("vec_id"), col("cell")).as[(Long, Long)].collect()
     // every vector lands with its own residue class's seed
@@ -35,7 +35,7 @@ class KMeansSpec extends SparkSpec {
     val df = corpus(120)
     val seed = seedOf(df, 0L, 1L, 5L) // deliberately poor third seed
     def sse(rounds: Int): Double = {
-      val cens = KMeans.train(df, "vec_id", "vec", seed, rounds)
+      val cens = KMeans.train(df, "vec", seed, rounds)
       KMeans.assignCells(df, "vec_id", "vec", cens)
         .agg(sum(col("dist").cast("decimal(28,12)")).cast("double"))
         .collect()(0).getDouble(0)
@@ -44,9 +44,7 @@ class KMeansSpec extends SparkSpec {
     assert(s.sliding(2).forall { case Seq(a, b) => b <= a + 1e-9 })
   }
 
-  test("RDD fast-path rounds are bit-identical to the relational rounds") {
-    // r15: uniform-dims corpora route to trainRdd; pin it against the
-    // relational form via the package-private entry on the same seed
+  test("train's rounds equal the relational reference") {
     val n = 40
     val data = (0 until n).map { i =>
       (i.toLong, Array.tabulate(4)(d =>
@@ -54,31 +52,39 @@ class KMeansSpec extends SparkSpec {
     }
     val df = spark.createDataFrame(data).toDF("vec_id", "vec").repartition(5)
     val seed = KMeans.collectSeed(df.filter(col("vec_id") < 4), "vec_id", "vec")
-    val fast = KMeans.train(df, "vec_id", "vec", seed, rounds = 3)
-    val slow = KMeans.trainRelationalForSpec(df, "vec_id", "vec", seed, rounds = 3)
-    assert(fast.map(_._1) == slow.map(_._1))
-    fast.zip(slow).foreach { case ((_, a), (_, b)) => assert(a.toSeq == b.toSeq) }
-  }
-
-  test("variable-length corpora keep the relational rounds (routing only)") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Seq(1.0f, 2.0f)), (2L, Seq(2.0f, 1.0f)),
-      (3L, Seq(9.0f, 9.0f)), (4L, Seq(8.0f))).toDF("vec_id", "vec")
-    val seed = KMeans.collectSeed(df.filter(col("vec_id") <= 2), "vec_id", "vec")
-    // just proves the guarded route still trains without throwing and
-    // matches the relational form it falls back to
-    val got = KMeans.train(df, "vec_id", "vec", seed, rounds = 2)
-    val ref = KMeans.trainRelationalForSpec(df, "vec_id", "vec", seed, rounds = 2)
+    val got = KMeans.train(df, "vec", seed, rounds = 3)
+    val ref = KMeansReference.trainRelational(df, "vec_id", "vec", seed, rounds = 3)
     assert(got.map(_._1) == ref.map(_._1))
     got.zip(ref).foreach { case ((_, a), (_, b)) => assert(a.toSeq == b.toSeq) }
+  }
+
+  test("a vector of another length takes no part") {
+    val df = Seq(
+      (1L, Seq(1.0f, 2.0f)), (2L, Seq(2.0f, 1.0f)),
+      (3L, Seq(9.0f, 9.0f)), (4L, Seq(8.0f)), (5L, Seq(9.0f, 8.0f, 7.0f)))
+      .toDF("vec_id", "vec")
+    val seed = KMeans.collectSeed(df.filter(col("vec_id") <= 2), "vec_id", "vec")
+    val got = KMeans.train(df, "vec", seed, rounds = 2)
+    // the reference on the rows of the centroids' length
+    val ref = KMeansReference.trainRelational(df.filter(size(col("vec")) === 2),
+      "vec_id", "vec", seed, rounds = 2)
+    assert(got.map(_._1) == ref.map(_._1))
+    got.zip(ref).foreach { case ((_, a), (_, b)) => assert(a.toSeq == b.toSeq) }
+    val mixed = Seq(1L -> Array(1.0, 2.0), 4L -> Array(8.0))
+    assertThrows[IllegalArgumentException](KMeans.train(df, "vec", mixed, rounds = 1))
+  }
+
+  test("train launches one Spark job per round and no probe job") {
+    val df = corpus(90)
+    val seed = seedOf(df, 0L, 1L, 2L)
+    assert(jobsOf(KMeans.train(df, "vec", seed, rounds = 3)) == 3)
   }
 
   test("centroids are bit-identical under any partitioning") {
     val df = corpus(100)
     val seed = seedOf(df, 0L, 1L, 2L)
-    val a = KMeans.train(df, "vec_id", "vec", seed, rounds = 2)
-    val b = KMeans.train(df.repartition(7), "vec_id", "vec", seed, rounds = 2)
+    val a = KMeans.train(df, "vec", seed, rounds = 2)
+    val b = KMeans.train(df.repartition(7), "vec", seed, rounds = 2)
     assert(a.map(_._1) == b.map(_._1))
     a.zip(b).foreach { case ((_, va), (_, vb)) =>
       va.zip(vb).foreach { case (x, y) =>
@@ -91,7 +97,7 @@ class KMeansSpec extends SparkSpec {
   test("a centroid that captures no members drops out; k shrinks") {
     val df = corpus(30)
     val far = 999L -> Array(1e6, 1e6, 1e6, 1e6)
-    val cens = KMeans.train(df, "vec_id", "vec",
+    val cens = KMeans.train(df, "vec",
       seedOf(df, 0L, 1L, 2L) :+ far, rounds = 1)
     assert(cens.map(_._1) == Seq(0L, 1L, 2L))
   }
@@ -104,16 +110,16 @@ class KMeansSpec extends SparkSpec {
     // run) and return the surviving centroid.
     val df = corpus(30)
     val far = 999L -> Array(1e6, 1e6, 1e6, 1e6)
-    val cens = KMeans.train(df, "vec_id", "vec",
+    val cens = KMeans.train(df, "vec",
       seedOf(df, 0L) :+ far, rounds = 3)
     assert(cens.map(_._1) == Seq(0L), s"expected the lone survivor, got $cens")
     // an empty seed short-circuits to itself instead of cens.head crashing
-    assert(KMeans.train(df, "vec_id", "vec", Nil, rounds = 2).isEmpty)
+    assert(KMeans.train(df, "vec", Nil, rounds = 2).isEmpty)
   }
 
   test("probeCells: nprobe ranked cells per query; rank-1 equals assignCells") {
     val df = corpus(60)
-    val cens = KMeans.train(df, "vec_id", "vec", seedOf(df, 0L, 1L, 2L), rounds = 2)
+    val cens = KMeans.train(df, "vec", seedOf(df, 0L, 1L, 2L), rounds = 2)
     val probes = KMeans.probeCells(df, "vec_id", "vec", cens, nprobe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     assert(probes.count(_._3 == 1) == 60 && probes.count(_._3 == 2) == 60)
