@@ -25,7 +25,7 @@ object PlanPeek {
           64, 16, 0.7, verify = form).explain("formatted")
       } else if (name == "substrdup") {
         // q91's dup-window miner: invisible in the final plan behind
-        // report()'s localCheckpoint
+        // report()'s checkpoint
         import org.apache.spark.sql.functions._
         graft.dedup.SubstringDedup.dupWindows(
           Tables(spark, dir, "documents"), "doc_id", "text", width = 10)

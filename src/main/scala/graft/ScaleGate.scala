@@ -30,8 +30,7 @@ import org.apache.spark.sql.SparkSession
   *    cluster scale — the kNN-edge and q35 hazards both announced
   *    themselves as multi-GiB spills first).
   *
-  * Exit 0 = every budget held; the printed table is the COVERAGE.md
-  * artifact for the round.
+  * Exit 0 = every budget held.
   */
 object ScaleGate {
 

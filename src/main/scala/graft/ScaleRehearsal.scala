@@ -73,12 +73,12 @@ object ScaleRehearsal {
 
     SparkEntry.entry(spark).collect() // warmup
 
-    println(f"${"query"}%-26s ${"sec"}%8s ${"build s"}%8s ${"jobs"}%5s ${"shufR GiB"}%9s ${"shufW GiB"}%9s ${"spill GiB"}%9s ${"peakTask GiB"}%12s ${"tasks"}%7s rows")
+    println(f"${"query"}%-26s ${"sec"}%8s ${"build s"}%8s ${"bjobs"}%5s ${"jobs"}%5s ${"shufR GiB"}%9s ${"shufW GiB"}%9s ${"spill GiB"}%9s ${"peakTask GiB"}%12s ${"tasks"}%7s rows")
     val results = measure(spark, sfDir, names)
     results.foreach { q =>
       q.error match {
         case Some(err) => println(f"${q.name}%-26s ${q.sec}%8.2f FAILED: $err")
-        case None => println(f"${q.name}%-26s ${q.sec}%8.2f ${q.constructS}%8.2f ${q.jobs}%5d ${gib(q.shuffleReadBytes)}%9.2f ${gib(q.shuffleWriteBytes)}%9.2f ${gib(q.spillBytes)}%9.2f ${gib(q.peakTaskMemBytes)}%12.2f ${q.tasks}%7d ${q.rows}")
+        case None => println(f"${q.name}%-26s ${q.sec}%8.2f ${q.constructS}%8.2f ${q.constructJobs}%5d ${q.jobs}%5d ${gib(q.shuffleReadBytes)}%9.2f ${gib(q.shuffleWriteBytes)}%9.2f ${gib(q.spillBytes)}%9.2f ${gib(q.peakTaskMemBytes)}%12.2f ${q.tasks}%7d ${q.rows}")
       }
     }
     val failed = results.filter(_.error.nonEmpty).map(_.name)

@@ -3,6 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Interpolated BIGRAM language-model scoring — the context-aware
   * upgrade of [[UnigramLm]]'s perplexity-proxy quality gate (CCNet/
@@ -66,10 +67,8 @@ object BigramLm {
     // c12 materialized ONCE (the NaiveBayes.train lesson): it feeds the
     // w1 rollup AND the final projection — without the checkpoint each
     // re-runs the corpus bigram explode+agg. Zipf-bounded (bigram
-    // types), so the checkpoint is scale-safe; blocks release with the
-    // returned model plan.
-    val c12 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+    // types), so the checkpoint is scale-safe.
+    val c12 = Checkpoints.materialize(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
     val uni = counts.select(col("token").as("w2"), col("cnt").as("cu"))
     val stats = uni.agg(sum("cu").as("total"), count(lit(1)).as("vocab"))
@@ -127,10 +126,9 @@ object BigramLm {
     * re-tokenizations (tokens() is the regex-split kernel, the dominant
     * per-pass cost). */
   def selfScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = tokenized(docs, idCol, textCol).localCheckpoint(true)
-    val counts = toks.select(explode(col("__toks")).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val toks = Checkpoints.materialize(tokenized(docs, idCol, textCol))
+    val counts = Checkpoints.materialize(toks.select(explode(col("__toks")).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("cnt")))
     val model = trainFromParts(pairsFromToks(toks, idCol), counts)
     val uniModel = UnigramLm.trainFromCounts(counts)
     scoreFromToks(toks, idCol, model, uniModel)

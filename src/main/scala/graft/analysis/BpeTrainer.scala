@@ -2,6 +2,7 @@ package graft.analysis
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints
 
 /** Corpus-level BPE tokenizer training — the full iterative loop whose
   * single inner step is q71's pair-count aggregation. (Sennrich et al.
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   *    then pair asc, so training is deterministic), and the merge is
   *    applied per word with a typed map (a per-row sequential rewrite —
   *    inherently imperative, the documented exception shape).
-  *  - `localCheckpoint` truncates lineage each round, as `Clusters`
-  *    does — without it round i replans rounds 0..i-1.
+  *  - `Checkpoints.materializeRound` truncates lineage each round —
+  *    without it round i replans rounds 0..i-1.
   *
   * Returns the ordered merge list — the tokenizer model; apply it with
   * [[encode]].
@@ -83,17 +84,14 @@ object BpeTrainer {
     // argmax the same total order (count desc, then pair asc), the merge
     // the same mergeOnce — bit-identical merges and stats
     // (BpeTrainerSpec pins train ≡ reference). Lineage per round is
-    // truncated the same way (localCheckpoint + release of the previous
-    // round's blocks).
-    var words: org.apache.spark.rdd.RDD[WordSyms] = docs
+    // truncated the same way (a checkpointed round + release of the
+    // previous round's blocks).
+    var words: org.apache.spark.rdd.RDD[WordSyms] = Checkpoints.materializeRound(docs
       .select(explode(graft.text.TextOps.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
       .map { case (w, f) => WordSyms(toSymbols(w), f) }
-      .rdd
-    words.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    words.localCheckpoint()
-    words.count()
+      .rdd)
 
     // (total symbol occurrences, total character mass), freq-weighted;
     // skipped entirely when the caller doesn't need the audit columns
@@ -121,10 +119,8 @@ object BpeTrainer {
       best match {
         case Some(((a, b), cnt)) if cnt >= 2 =>
           val prev = words
-          words = words.map(ws => ws.copy(syms = mergeOnce(ws.syms, a, b)))
-          words.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          words.localCheckpoint()
-          words.count()
+          words = Checkpoints.materializeRound(
+            words.map(ws => ws.copy(syms = mergeOnce(ws.syms, a, b))))
           // the eager checkpoint makes the previous round's word table
           // dead — release per round (the Clusters lesson)
           prev.unpersist(blocking = false)

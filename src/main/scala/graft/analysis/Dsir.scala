@@ -3,6 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** DSIR-style importance weighting (Xie et al. 2023, "Data Selection for
   * Language Models via Importance Resampling"): score every document by
@@ -39,10 +40,9 @@ object Dsir {
     // vocab-sized; materialized once — the 1-row stats and the final
     // log-ratio projection would otherwise each re-run the corpus
     // explode+agg (the NaiveBayes.train lesson)
-    val m = t.groupBy("token").agg(
+    val m = Checkpoints.materialize(t.groupBy("token").agg(
       count(lit(1)).as("c_r"),
-      sum(when(col("is_t"), 1L).otherwise(0L)).as("c_t"))
-      .localCheckpoint(true)
+      sum(when(col("is_t"), 1L).otherwise(0L)).as("c_t")))
     val st = m.agg(sum("c_r").as("t_r"), sum("c_t").as("t_t"),
       count(lit(1)).as("v"))
     m.crossJoin(broadcast(st)).select(col("token"),

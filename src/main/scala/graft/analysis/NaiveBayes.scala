@@ -3,6 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Multinomial Naive Bayes text classifier, trained ON the corpus — the
   * fasttext-style supervised classifier every LLM data pipeline runs for
@@ -59,10 +60,8 @@ object NaiveBayes {
     // measured 56 Exchanges / 20 joins from exactly this duplication.
     // `pair` is (label, token, cnt): vocabulary × label-density rows, the
     // size the scaladoc's sparsity argument already bounds, so the
-    // checkpoint is safe at any corpus scale. Blocks are
-    // ContextCleaner-released once the returned plans are dropped.
-    val pair = toks.groupBy("label", "token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    // checkpoint is safe at any corpus scale.
+    val pair = Checkpoints.materialize(toks.groupBy("label", "token").agg(count(lit(1)).as("cnt")))
     // label totals + global vocab + global doc counts: all label-cardinality
     val labelTok = pair.groupBy("label").agg(sum("cnt").as("total_l"))
     val vocab = pair.select("token").distinct().agg(count(lit(1)).as("vocab"))
@@ -74,7 +73,7 @@ object NaiveBayes {
 
     // |L| rows; materialized so the model below and the returned stats
     // don't each re-run the labelTok/vocab/nDocs lineage.
-    val stats = labelTok
+    val stats = Checkpoints.materialize(labelTok
       .join(nDocs, Seq("label"))
       .crossJoin(broadcast(vocab))
       .crossJoin(broadcast(nAll))
@@ -83,8 +82,7 @@ object NaiveBayes {
         // 38-digit decimal cap to be exact (16+20+1 = 37 with a long)
         (-log(col("n_docs_l") / col("n_docs"))).cast("decimal(16,12)").as("prior_nll"),
         (-log(lit(1.0) / (col("total_l") + col("vocab")))).cast("decimal(16,12)").as("unseen_nll"),
-        col("n_docs_l"), col("total_l"), col("vocab"))
-      .localCheckpoint(true)
+        col("n_docs_l"), col("total_l"), col("vocab")))
 
     val model = pair.join(broadcast(stats), Seq("label"))
       .select(col("label"), col("token"),

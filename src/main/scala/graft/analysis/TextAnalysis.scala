@@ -3,6 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Corpus text-analysis operators for an LLM training-data pipeline:
   * token statistics, quality scoring, and document fingerprinting. All
@@ -19,8 +20,6 @@ object TextAnalysis {
   def charLen(text: Column): Column = length(text)
   def alphaCount(text: Column): Column =
     length(regexp_replace(text, "[^a-zA-Z]", ""))
-  def digitCount(text: Column): Column =
-    length(regexp_replace(text, "[^0-9]", ""))
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[!-/:-@\\[-`{-~]", ""))
 
@@ -197,8 +196,7 @@ object TextAnalysis {
     // (group, token) counts materialized once — they feed the per-group
     // totals, the corpus rollup AND the grid join below (the
     // NaiveBayes.train lesson); vocab × groups rows, scale-safe.
-    val cs = t.groupBy(groupCol, "token").agg(count(lit(1)).as("c_s"))
-      .localCheckpoint(true)
+    val cs = Checkpoints.materialize(t.groupBy(groupCol, "token").agg(count(lit(1)).as("c_s")))
     // corpus counts ROLL UP from the group counts (groupCol is a value
     // column — no rows lost), replacing a second full corpus
     // explode+aggregation with a vocab×groups-sized one.
@@ -244,12 +242,10 @@ object TextAnalysis {
     // the 1-row total and the PMI projection; cu feeds its total and BOTH
     // unigram joins — un-checkpointed, the corpus explode+agg re-ran per
     // consumer (the NaiveBayes.train lesson).
-    val cb = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c_ab"))
-      .localCheckpoint(true)
+    val cb = Checkpoints.materialize(pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c_ab")))
     val bt = cb.agg(sum("c_ab").as("b"))
-    val cu = docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    val cu = Checkpoints.materialize(docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("cnt")))
     val ut = cu.agg(sum("cnt").as("t"))
     val ratio = (col("c_ab").cast("double") / col("b")) *
       (col("t").cast("double") / col("c_a")) *

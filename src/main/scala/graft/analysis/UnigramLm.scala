@@ -3,6 +3,7 @@ package graft.analysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Corpus-trained unigram language-model scoring — the classic
   * perplexity-proxy quality filter (CCNet/Gopher use a KenLM 5-gram; the
@@ -35,12 +36,10 @@ object UnigramLm {
     * otherwise each re-run the corpus explode+aggregation (the
     * NaiveBayes.train lesson). Exposed so a composition that needs BOTH
     * the unigram and bigram models (q152) can feed one count table to
-    * both instead of tokenizing the corpus twice. Blocks are
-    * ContextCleaner-released with the model plan. */
+    * both instead of tokenizing the corpus twice. */
   private[graft] def tokenCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(true)
+    Checkpoints.materialize(docs.select(explode(TextOps.tokens(col(textCol))).as("token"))
+      .groupBy("token").agg(count(lit(1)).as("cnt")))
 
   /** The model projection over an already-materialized (token, cnt)
     * table — the formula lives only here. */

@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a near-dup pair list — the step that turns
   * pairwise similarity output (MinHashLSH / SimHash / embedding LSH)
@@ -29,12 +28,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * The driver loop only evaluates a COUNT per round (the changed-label
   * tally); labels stay distributed. Each round is persisted and the
-  * previous one released, and the result is one `localCheckpoint`
-  * (localCheckpoint stores blocks on executors: fast, but an executor
-  * loss mid-loop fails the job and Spark restarts it — acceptable for
-  * an idempotent batch operator. For long multi-hour loops on
-  * preemptible nodes, switch to reliable `checkpoint` with a checkpoint
-  * dir: same call shape, HDFS-durable at the cost of a write per round.)
+  * previous one released, and the result is one checkpoint
+  * (`Checkpoints` states the policy).
   *
   * Ids (both entry points): integral ids are cast to long once, inside
   * the edge checkpoint, and the output is cast back to the endpoints'
@@ -43,8 +38,6 @@ import org.apache.spark.storage.StorageLevel
   * component is null — it matches no edge, as in an equi-join.
   */
 object Clusters {
-
-  private val Lvl = StorageLevel.MEMORY_AND_DISK
 
   /** (vertex, component) for every vertex in `edges` (both endpoint
     * columns); component = min vertex id reachable.
@@ -70,10 +63,9 @@ object Clusters {
     // Edges are pair-sized (≪ corpus), so the checkpoint is cheap. A
     // null-endpoint edge leaves a vertex-only row (src, null), and every
     // null src collapses into one (null, null) row.
-    val und = ends.select(col("src").cast(LongType).as("src"),
+    val und = Checkpoints.materialize(ends.select(col("src").cast(LongType).as("src"),
         when(col("src").isNotNull, col("dst").cast(LongType)).as("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val out = ccRoundsRdd(und, maxIter)
     // the returned plan reads only the label checkpoint; the edge table
     // was a loop-only input
@@ -89,11 +81,11 @@ object Clusters {
     // (AQE-coalesced small locally, wide at scale) — never a constant
     val p = new HashPartitioner(math.max(1, rows.getNumPartitions))
     // edges keyed by dst ONCE (the side each round joins labels on)
-    val byDst = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(1), r.getLong(0))).partitionBy(p).persist(Lvl)
-    var labels: RDD[(Long, Long)] = rows.filter(!_.isNullAt(0))
+    val byDst = Checkpoints.persistRound(rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getLong(1), r.getLong(0))).partitionBy(p))
+    var labels: RDD[(Long, Long)] = Checkpoints.persistRound(rows.filter(!_.isNullAt(0))
       .map(_.getLong(0)).distinct(p.numPartitions)
-      .map(v => (v, v)).partitionBy(p).persist(Lvl)
+      .map(v => (v, v)).partitionBy(p))
     // the PERSISTED handle backing `labels` (mapValues below wraps it in
     // a new RDD — unpersisting the wrapper would leak the blocks)
     var owner: RDD[_] = labels
@@ -105,10 +97,11 @@ object Clusters {
       val nmin = byDst.join(labels)
         .map { case (_, (src, lab)) => (src, lab) }
         .reduceByKey(p, math.min(_: Long, _: Long))
-      val next = labels.leftOuterJoin(nmin).mapValues { case (l, o) =>
-        val m = o.fold(l)(math.min(l, _))
-        (m, o.exists(_ < l))
-      }.persist(Lvl)
+      val next = Checkpoints.persistRound(labels.leftOuterJoin(nmin).mapValues {
+        case (l, o) =>
+          val m = o.fold(l)(math.min(l, _))
+          (m, o.exists(_ < l))
+      })
       changed = next.filter(_._2._2).count()
       owner.unpersist(blocking = false)
       owner = next
@@ -120,7 +113,7 @@ object Clusters {
       StructField("component", LongType, nullable)))
     val outRdd = labels.map { case (v, l) => Row(v, l) }
       .union(rows.filter(_.isNullAt(0)).map(_ => Row(null, null)))
-    val out = und.sparkSession.createDataFrame(outRdd, schema).localCheckpoint(true)
+    val out = Checkpoints.materialize(und.sparkSession.createDataFrame(outRdd, schema))
     owner.unpersist(blocking = false)
     byDst.unpersist(blocking = false)
     out
@@ -167,11 +160,10 @@ object Clusters {
     val t = GraphIds.idType(ends, "v")
     // all vertices up front (before the self-loop filter: a vertex seen
     // only in a self-loop still owes an output row)
-    val verts = raw.select(col("u").as("v")).union(raw.select("v")).distinct()
-      .localCheckpoint(true)
+    val verts = Checkpoints.materialize(
+      raw.select(col("u").as("v")).union(raw.select("v")).distinct())
     // u =!= v also drops every null-endpoint edge (null <> x is null)
-    val e0 = raw.filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
+    val e0 = Checkpoints.materialize(raw.filter(col("u") =!= col("v")).distinct())
     val fixed = starFixedPointRdd(e0, maxIter)
     Checkpoints.release(e0)
     // children point at the root; roots label themselves, and a null
@@ -186,8 +178,8 @@ object Clusters {
     * the edge-set fixed point (or `maxIter` rounds). */
   private def starFixedPointRdd(e0: DataFrame, maxIter: Int): DataFrame = {
     val spark = e0.sparkSession
-    var e: RDD[(Long, Long)] = e0.rdd
-      .map(r => (r.getLong(0), r.getLong(1))).persist(Lvl)
+    var e: RDD[(Long, Long)] =
+      Checkpoints.persistRound(e0.rdd.map(r => (r.getLong(0), r.getLong(1))))
     val np = math.max(1, e.getNumPartitions)
     val p = new HashPartitioner(np)
     def signature(d: RDD[(Long, Long)]): (Long, BigInt) =
@@ -225,7 +217,7 @@ object Clusters {
     var converged = sig._1 == 0L
     while (!converged && iter < maxIter) {
       val prev = e
-      e = smallStar(largeStar(e)).persist(Lvl)
+      e = Checkpoints.persistRound(smallStar(largeStar(e)))
       val next = signature(e) // materializes the round
       prev.unpersist(blocking = false)
       converged = next == sig
@@ -234,8 +226,8 @@ object Clusters {
     }
     val schema = StructType(Seq(StructField("u", LongType, nullable = false),
       StructField("v", LongType, nullable = false)))
-    val out = spark.createDataFrame(e.map { case (u, v) => Row(u, v) }, schema)
-      .localCheckpoint(true)
+    val out = Checkpoints.materialize(
+      spark.createDataFrame(e.map { case (u, v) => Row(u, v) }, schema))
     e.unpersist(blocking = false)
     out
   }

@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints
 
 /** MinHash + LSH banding near-duplicate detection (the north-star corpus
   * dedup operator; the reference's closest analog is its text-similarity
@@ -368,25 +369,14 @@ object MinHashLSH {
         // q18 sf0.1 restored with q35 ×100 routing identical.
         if (n <= AutoSmallCorpusN) fetch(freshCands())
         else {
-          // the routing count MATERIALIZES the ids-only candidate set; a
-          // Fetch decision then reuses the materialization, so Auto costs
-          // ~one count over the fetch form it would have run anyway.
-          // localCheckpoint, NOT persist: a persisted plan is held by the
-          // CacheManager until explicit unpersist or session end, and the
-          // Fetch branch returns a plan still reading the cache — the
-          // candidate set (GBs at ×100) would outlive the query and
-          // accumulate across a long session (the q164 lesson, round-10
-          // advice). The Fetch branch's checkpoint blocks are
-          // ContextCleaner-released once the returned plan is executed
-          // and dropped; the in-band branch RETURNS A PLAN THAT NEVER
-          // READS the checkpoint, so it releases the blocks explicitly —
-          // otherwise repeated Auto calls in a long session accumulate
-          // GB-scale executor storage until a driver GC happens to run
-          // (round-11 ADVICE).
-          val cands = freshCands().localCheckpoint(true)
-          val c = cands.count()
+          // the routing count is observed in the job that MATERIALIZES
+          // the ids-only candidate set; a Fetch decision then reuses the
+          // materialization, so Auto costs nothing over the fetch form it
+          // would have run anyway. The in-band branch RETURNS A PLAN THAT
+          // NEVER READS the checkpoint, so it releases the blocks now.
+          val (cands, c) = Checkpoints.materializeCounted(freshCands())
           if (inBandWins(c, n, numBands)) {
-            graft.ops.Checkpoints.release(cands)
+            Checkpoints.release(cands)
             inBand()
           } else fetch(cands)
         }
@@ -503,7 +493,7 @@ object MinHashLSH {
 
   /** The history side's capped band-bucket membership rows
     * (`b, band, key`) — compute ONCE when a static history is probed by
-    * many batches (persist/localCheckpoint, or `Sinks.bucketedWrite` by
+    * many batches (`Checkpoints.materialize`, or `Sinks.bucketedWrite` by
     * (band, key) in a persistent deployment), then pass to
     * [[nearDupAgainstBandRows]]: each probe joins the prebuilt index
     * instead of re-running the corpus's signatures and banding. */

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Checkpoints
 
 /** Exact set-similarity join with PREFIX FILTERING (PPJoin-family) —
   * ALL pairs with token-set Jaccard ≥ t, guaranteed, without an
@@ -58,10 +59,9 @@ object PrefixFilterJoin {
     // materialize the deduped (id, token) table once — it feeds sizes,
     // frequencies, prefixes AND both verify sides, and the explode+
     // distinct shuffle would otherwise re-run per consumer (a staging
-    // table at warehouse scale; in-query, localCheckpoint)
-    val ts = docs.select(col(idCol).as("id"), explode(tokensCol).as("token"))
-      .distinct()
-      .localCheckpoint(true)
+    // table at warehouse scale; in-query, a checkpoint)
+    val ts = Checkpoints.materialize(
+      docs.select(col(idCol).as("id"), explode(tokensCol).as("token")).distinct())
     val sz = ts.groupBy("id").agg(count(lit(1)).as("n"))
     val freq = ts.groupBy("token").agg(count(lit(1)).as("tf"))
     // ceil(n·tNum/tDen) via floor((n·tNum + tDen−1)/tDen); the double

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Exact substring-span deduplication — the "deduplicating training
   * data" pass at SUB-chunk granularity: any `width`-token window that
@@ -66,7 +67,7 @@ object SubstringDedup {
     // dup windows feed two aggregations (count + coverage); materialize
     // once — the set is dup-window-sized (≪ corpus), the generation
     // pipeline is a full corpus explode
-    val dups = dupWindows(docs, idCol, textCol, width).localCheckpoint(true)
+    val dups = Checkpoints.materialize(dupWindows(docs, idCol, textCol, width))
     val nTok = size(TextOps.tokens(col(textCol)))
     val base = docs.select(col(idCol), nTok.cast("long").as("n_tokens"),
       when(nTok >= width, nTok - (width - 1)).otherwise(lit(0))

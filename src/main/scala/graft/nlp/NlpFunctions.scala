@@ -3,6 +3,7 @@ package graft.nlp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** The NLP/enrichment function surface (SURVEY.md §2.9 N1–N10). In the
   * reference every one of these is a remote NLU API call
@@ -52,9 +53,8 @@ object NlpFunctions {
     // value [[documentFrequencies]] computes — and deriving df from the
     // checkpointed tf removes the second corpus tokenize+explode the
     // old composition paid (r16; value-identical, NlpFunctionsSpec).
-    val tf = docs.select(col(idCol), explode(toksCol).as("term"))
-      .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    val tf = Checkpoints.materialize(docs.select(col(idCol), explode(toksCol).as("term"))
+      .groupBy(idCol, "term").agg(count(lit(1)).as("tf")))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // shuffle_hash, NOT broadcast: the DF table is vocabulary-sized —
     // Zipf-unbounded at 100 TB — the exact shape Dsir.topImportance

@@ -1,33 +1,72 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Observation}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
+import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle helpers for eagerly-materialized plans.
+/** The one place that decides how an intermediate result is
+  * materialized.
   *
-  * Spark frees a `localCheckpoint(true)`'s storage only when the driver
-  * GCs the RDD reference AND the ContextCleaner runs — unbounded latency
-  * in a long-lived session (the q164 / MinHashLSH-Auto lesson: repeated
-  * calls accumulated GB-scale executor storage between driver GCs).
-  * When the code KNOWS a checkpointed plan will never be read again,
-  * release it explicitly instead.
+  * Policy: a DataFrame is materialized by an EAGER LOCAL checkpoint
+  * ([[materialize]]). Eager, because under AQE a lazy local checkpoint
+  * already runs its shuffle stages when it is built and only defers the
+  * last stage into the first action, which hides that stage's cost from
+  * the construction/action split; local, because the blocks stay on the
+  * executors that computed them — fast, no write to a checkpoint dir.
+  * The blocks are freed by [[release]] where the code knows the plan is
+  * dead, and otherwise by the ContextCleaner once the driver GCs the
+  * plan (unbounded latency in a long session: repeated calls can
+  * accumulate GB-scale executor storage between driver GCs). A local
+  * checkpoint is lost with its executor: a later read of a lost block
+  * fails the job with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` instead of
+  * recomputing it.
+  *
+  * An RDD round of an iterative operator is persisted at
+  * [[RoundLevel]] ([[persistRound]]) and keeps its lineage, so a lost
+  * executor recomputes it; [[materializeRound]] additionally cuts the
+  * lineage for loops too long to replay.
   */
 object Checkpoints {
 
-  /** Explicitly free an eager localCheckpoint's blocks. The RDD lives
-    * behind the checkpointed Dataset's `LogicalRDD` leaf; non-blocking
-    * unpersist is safe because the caller guarantees nothing reads the
-    * plan afterwards. No-op on non-checkpointed plans.
+  /** The storage level of every persisted RDD round. */
+  val RoundLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK
+
+  /** Eager local checkpoint of `df`: the plan runs now, and the result
+    * reads the stored blocks. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** [[materialize]] plus the row count of the result, observed inside
+    * the checkpoint's own job — no second `count()` job. The
+    * observation is unnamed, so concurrent calls cannot collide. */
+  def materializeCounted(df: DataFrame): (DataFrame, Long) = {
+    val rows = Observation()
+    val mat = materialize(df.observe(rows, count(lit(1)).as("n")))
+    (mat, rows.get("n").asInstanceOf[Long])
+  }
+
+  /** Persist an RDD round at [[RoundLevel]]; the next action stores it. */
+  def persistRound[T](rdd: RDD[T]): RDD[T] = rdd.persist(RoundLevel)
+
+  /** Persist, local-checkpoint and store an RDD round now (one job): the
+    * round's lineage is cut, so round i never replays rounds 0..i-1. */
+  def materializeRound[T](rdd: RDD[T]): RDD[T] = {
+    persistRound(rdd).localCheckpoint()
+    rdd.count()
+    rdd
+  }
+
+  /** Explicitly free a checkpoint's blocks. The RDD lives behind the
+    * checkpointed Dataset's `LogicalRDD` leaf; non-blocking unpersist is
+    * safe because the caller guarantees nothing reads the plan
+    * afterwards. No-op on non-checkpointed plans.
     *
     * Contract: the argument must BE the checkpoint — the Dataset
-    * `localCheckpoint` returned, possibly under trivial unary wrappers
-    * (a projection/filter/alias over it). Releasing used to walk the
-    * whole analyzed plan and unpersist EVERY LogicalRDD leaf, which
-    * would also free a shared live checkpoint merely referenced by a
-    * derived plan (a join of the dead checkpoint with a live one) —
-    * failing later actions on the live plan with missing-block reads.
-    * Now only the unary-chain ROOT is released: a plan with more than
-    * one input is a derived plan, not a checkpoint, and is a no-op. */
+    * [[materialize]] returned, possibly under trivial unary wrappers (a
+    * projection/filter/alias over it). Only the unary-chain ROOT is
+    * released: a plan with more than one input is a derived plan (a join
+    * of a dead checkpoint with a live one), not a checkpoint, and is a
+    * no-op — freeing every leaf would break later reads of the live one. */
   def release(checkpointed: Dataset[_]): Unit = {
     @scala.annotation.tailrec
     def rootRdd(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
@@ -40,35 +79,26 @@ object Checkpoints {
       .foreach(_.rdd.unpersist(blocking = false))
   }
 
-  /** Default row cap for [[guardedBroadcast]]: ~40 MB of longs — the
-    * same driver-safety bar q164's survivor-hash broadcast uses. */
+  /** Default row cap for [[guardedBroadcast]]: ~40 MB of longs. */
   val DefaultBroadcastMaxRows: Long = 5000000L
 
   /** Broadcast a "small" side only after PROVING it is small. A forced
     * `broadcast()` hint bypasses `autoBroadcastJoinThreshold` entirely,
     * so a set assumed pair-bounded (e.g. dedup drop lists) OOMs the
     * driver the day a dup-heavy corpus makes it corpus-fraction-sized.
-    * The input is eagerly localCheckpointed (so the sizing count and the
-    * consuming join share one materialization — and the count never
-    * re-runs an expensive lineage), then wrapped in the broadcast hint
-    * only under `maxRows`; past it the join falls back to shuffle —
-    * graceful degradation instead of a fatal collect.
+    * The input is materialized with its row count observed in the same
+    * job, then wrapped in the broadcast hint only under `maxRows`; past
+    * it the join falls back to shuffle — graceful degradation instead of
+    * a fatal collect.
     *
-    * Lifecycle (residual, accepted): the checkpoint blocks are freed by
-    * ContextCleaner only after the driver GCs the returned plan — the
-    * delayed-release class [[release]] eliminates elsewhere. An eager
-    * release hook is structurally unavailable here: the returned frame
-    * is composed lazily into the CALLER's result plan, whose execution
-    * point (a `collect` in Verify/Bench, a sink write) lies outside
-    * this function and usually outside the library, so there is no
-    * post-action site that could call [[release]]. The accumulation is
-    * bounded per call — ≤ `maxRows` ids when broadcast; the degraded
-    * path keeps the full set but only materializes what the shuffle
-    * join would have anyway — and repeated invocations in one session
-    * (q48/q63/q64/q157) retire their blocks at the next driver GC. */
+    * The checkpoint is never [[release]]d here: the returned frame is
+    * composed lazily into the caller's plan, whose action lies outside
+    * this function, so the ContextCleaner frees it. The accumulation is
+    * bounded per call (≤ `maxRows` ids when broadcast; the fallback only
+    * materializes what the shuffle join would have anyway). */
   def guardedBroadcast(df: DataFrame,
                        maxRows: Long = DefaultBroadcastMaxRows): DataFrame = {
-    val mat = df.localCheckpoint(true)
-    if (mat.count() <= maxRows) broadcast(mat) else mat
+    val (mat, n) = materializeCounted(df)
+    if (n <= maxRows) broadcast(mat) else mat
   }
 }

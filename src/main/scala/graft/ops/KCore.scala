@@ -4,7 +4,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** k-core decomposition by iterative peeling: repeatedly delete nodes
   * whose (undirected) degree is below k; what survives is the maximal
@@ -43,10 +42,9 @@ object KCore {
     * share ONE distinct-shuffle + checkpoint instead of paying it per k.
     * Returns columns (a, b). */
   def symmetrize(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
+    Checkpoints.materialize(edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+      .filter(col("a") =!= col("b")).distinct())
 
   /** Nodes of the k-core of the (symmetrized, de-duplicated, loop-free)
     * graph, with their within-core degree. */
@@ -83,10 +81,10 @@ object KCore {
   /** The peeling rounds; output node ids are long. */
   private def kCoreRdd(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = sym.sparkSession
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    var e = sym.select(col("a").cast(LongType), col("b").cast(LongType)).rdd
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(0), r.getLong(1))).persist(lvl)
+    var e = Checkpoints.persistRound(
+      sym.select(col("a").cast(LongType), col("b").cast(LongType)).rdd
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .map(r => (r.getLong(0), r.getLong(1))))
     val p = new HashPartitioner(math.max(1, e.getNumPartitions))
     var remaining = e.count()
     var converged = false
@@ -94,13 +92,12 @@ object KCore {
       if (!converged) {
         val prev = e
         val deg = e.map { case (a, _) => (a, 1L) }.reduceByKey(p, _ + _)
-        e = e.partitionBy(p).join(deg)
+        e = Checkpoints.persistRound(e.partitionBy(p).join(deg)
           .flatMap { case (a, (b, da)) =>
             if (da >= k) Iterator((b, a)) else Iterator.empty }
           .partitionBy(p).join(deg)
           .flatMap { case (b, (a, db)) =>
-            if (db >= k) Iterator((a, b)) else Iterator.empty }
-          .persist(lvl)
+            if (db >= k) Iterator((a, b)) else Iterator.empty })
         val now = e.count()
         prev.unpersist(blocking = false)
         converged = now == remaining // fixpoint: every further round is a no-op
@@ -111,7 +108,7 @@ object KCore {
       .map { case (node, deg) => Row(node, deg) }
     val schema = StructType(Seq(StructField("node", LongType, nullable = false),
       StructField("deg", LongType, nullable = false)))
-    val out = spark.createDataFrame(degOut, schema).localCheckpoint(true)
+    val out = Checkpoints.materialize(spark.createDataFrame(degOut, schema))
     e.unpersist(blocking = false)
     out
   }

@@ -5,7 +5,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Damped PageRank by iterative join-aggregation — centrality over the
   * kNN similarity graph ranks prototypical documents (graph-based data
@@ -30,13 +29,12 @@ import org.apache.spark.storage.StorageLevel
   * Scale shape: the edge list (checkpointed once, with its quantized
   * reciprocal) is the only corpus-sized table; each round is one
   * edge⋈rank join + one map-side-combined aggregation + one node-sized
-  * left join, and one `localCheckpoint` of the result caps the lineage.
+  * left join, and one checkpoint of the result caps the lineage.
   * Driver holds nothing but the node count.
   */
 object PageRank {
 
   private val Dec = "decimal(28,12)"
-  private val Lvl = StorageLevel.MEMORY_AND_DISK
 
   /** `iters` rounds over `edges`; returns (idCol, pr). */
   def run(nodes: DataFrame, idCol: String, edges: DataFrame,
@@ -101,18 +99,17 @@ object PageRank {
     val spark = nodes.sparkSession
     val t = GraphIds.idType(nodes, idCol)
     Seq("__src", "__dst").foreach(GraphIds.idType(edgesRecip, _))
-    val e = edgesRecip
+    val e = Checkpoints.materialize(edgesRecip
       .filter(col("__src").isNotNull && col("__dst").isNotNull && col("__recip").isNotNull)
       .select(col("__src").cast(LongType).as("__src"),
-        col("__dst").cast(LongType).as("__dst"), col("__recip"))
-      .localCheckpoint(true)
-    val ids = nodes.select(col(idCol).cast(LongType).as("__id")).localCheckpoint(true)
+        col("__dst").cast(LongType).as("__dst"), col("__recip")))
+    val ids = Checkpoints.materialize(nodes.select(col(idCol).cast(LongType).as("__id")))
     val eRdd = e.rdd.map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
     val idRows = ids.rdd
     val p = new HashPartitioner(math.max(1, eRdd.getNumPartitions))
-    val bySrc = eRdd.partitionBy(p).persist(Lvl)
-    val idsRdd = idRows.filter(!_.isNullAt(0)).map(r => (r.getLong(0), ()))
-      .partitionBy(p).persist(Lvl)
+    val bySrc = Checkpoints.persistRound(eRdd.partitionBy(p))
+    val idsRdd = Checkpoints.persistRound(idRows.filter(!_.isNullAt(0))
+      .map(r => (r.getLong(0), ())).partitionBy(p))
     val n = idRows.count()
     val tele = teleportNumerator / n
     def quant(d: Double): java.math.BigDecimal =
@@ -143,7 +140,7 @@ object PageRank {
     val schema = StructType(Seq(
       StructField(idCol, LongType, ids.schema("__id").nullable),
       StructField("pr", DoubleType, nullable = false)))
-    val out = spark.createDataFrame(outRdd, schema).localCheckpoint(true)
+    val out = Checkpoints.materialize(spark.createDataFrame(outRdd, schema))
     bySrc.unpersist(blocking = false)
     idsRdd.unpersist(blocking = false)
     Checkpoints.release(e)

@@ -119,8 +119,8 @@ object Sessionize {
   }
 
   /** Auto-route threshold — the measured ×100 crossover
-    * (COVERAGE.md, round 14, two runs, ×100 events
-    * ≈ 10M rows, planted hot keys, session_index 1.04/1.15):
+    * (two runs, ×100 events ≈ 10M rows, planted hot keys,
+    * session_index 1.04/1.15):
     *
     *   hot key | plain s     | sharded s   | plain peak task
     *   2.5M    | 10.05/10.41 | 16.90/15.87 | 0.16 GiB

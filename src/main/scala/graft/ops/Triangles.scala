@@ -41,23 +41,21 @@ object Triangles {
     // orientation joins, the wedge self-join and the closure join, and
     // Spark would otherwise recompute the upstream edge pipeline (for a
     // kNN graph, the whole LSH+rerank) per use. At warehouse scale this
-    // is a staging table; in-query, localCheckpoint is the same move.
-    val und = edges
+    // is a staging table; in-query, a checkpoint is the same move.
+    val und = Checkpoints.materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") < col("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // deg feeds the two orientation joins AND the final zero-fill join;
     // oriented (below) feeds the wedge self-join's both sides AND the
     // closure join — without their own checkpoints each consumer re-ran
     // the degree aggregation / both orientation joins from the edge
     // checkpoint (r15: q113 plan 38 exchange/40 join nodes -> 16/16, same rows; sf0.1 parity within noise — the win is the un-recomputed orientation joins at scale). Both are
     // node-/edge-sized, the same staging class as `und`.
-    val deg = und.select(col("a").as("id"))
+    val deg = Checkpoints.materialize(und.select(col("a").as("id"))
       .unionAll(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .groupBy("id").agg(count(lit(1)).as("deg")))
 
     // orient each edge low(deg,id) → high(deg,id)
     val withDeg = und
@@ -65,14 +63,13 @@ object Triangles {
       .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
     val aKey = struct(col("da").as("kd"), col("a").as("ki"))
     val bKey = struct(col("db").as("kd"), col("b").as("ki"))
-    val oriented = withDeg.select(
+    val oriented = Checkpoints.materialize(withDeg.select(
       when(aKey < bKey,
         struct(col("a").as("u"), col("b").as("v"), bKey.as("vk")))
         .otherwise(
           struct(col("b").as("u"), col("a").as("v"), aKey.as("vk")))
         .as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.vk").as("vk"))
-      .localCheckpoint(true)
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.vk").as("vk")))
 
     // wedge at the low end u: (v, w) with vk < wk, closed by oriented (v, w)
     val o1 = oriented.select(col("u"), col("v"), col("vk"))

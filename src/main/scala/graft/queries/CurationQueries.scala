@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.analysis.{BigramLm, Dsir, NaiveBayes, RidgeProbe, TextAnalysis, UnigramLm}
 import graft.dedup.{BloomDecontaminate, ChunkDedup, SubstringDedup}
-import graft.ops.{Apportion, Sampling}
+import graft.ops.{Apportion, Checkpoints, Sampling}
 import graft.text.{Chunker, TextOps}
 
 /** Corpus-curation operators beyond round 3's set: sub-document dedup,
@@ -364,10 +364,9 @@ object CurationQueries {
     // selfScore shape). Same rows, same arithmetic — tokens() and the
     // md5 bucket are deterministic functions of `text` — so the split
     // halves and every derived value are identical by construction.
-    val base = d.select(col("doc_id"), col("source").as("label"),
+    val base = Checkpoints.materialize(d.select(col("doc_id"), col("source").as("label"),
         TextOps.tokens(col("text")).as("__toks"),
-        pmod(TextOps.md5Int32(col("text")), lit(100)).as("__bucket"))
-      .localCheckpoint(true)
+        pmod(TextOps.md5Int32(col("text")), lit(100)).as("__bucket")))
     val (model, stats) = NaiveBayes.trainTokenized(base.filter(col("__bucket") < 80))
     NaiveBayes.classifyTokenized(base.filter(col("__bucket") >= 80),
         "doc_id", model, stats)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.{Clusters, ExactDedup, MinHashLSH, PrefixFilterJoin, SimHash}
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Deduplication operator coverage over `documents` (SURVEY.md F8/W4 +
   * the north-star corpus-dedup operators). Every oracle is ground truth
@@ -167,10 +168,8 @@ object DedupQueries {
     // 32-min aggregation over the corpus — the captured plan showed the
     // scan→Generate→HashAggregate signature subtree four times (22
     // Exchanges total). Signatures are 32 longs/doc (corpus-bounded,
-    // way under the gram arrays), so the checkpoint is scale-safe;
-    // blocks are ContextCleaner-released once the returned plan drops.
-    val sigs = MinHashLSH.signaturesFromBaseRows(base, "doc_id", "h", nh)
-      .localCheckpoint(true)
+    // way under the gram arrays), so the checkpoint is scale-safe.
+    val sigs = Checkpoints.materialize(MinHashLSH.signaturesFromBaseRows(base, "doc_id", "h", nh))
     val bandRows = sigs.select(col("doc_id"), explode(array((0 until bands).map { j =>
         struct(lit(j).as("band"),
           array_join(transform(slice(col("__sig"), j * rpb + 1, rpb),
@@ -494,14 +493,13 @@ object DedupQueries {
       fs.create(stagedMarker, true).close()
     }
 
-    val histHashed = d.filter(col("source") === "src0")
+    val histHashed = Checkpoints.materialize(d.filter(col("source") === "src0")
       .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-      .localCheckpoint()
+        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh")))
     // static history ⇒ band index built ONCE, probed by every micro-batch
     // (the deployment shape nearDupAgainstHashed's scaladoc prescribes)
-    val histBands = MinHashLSH.historyBandRows(histHashed, "doc_id", "sh",
-      numHashes = 64, numBands = 16).localCheckpoint()
+    val histBands = Checkpoints.materialize(MinHashLSH.historyBandRows(histHashed,
+      "doc_id", "sh", numHashes = 64, numBands = 16))
     val out = s"$tmp/kept"
     val seen = s"$tmp/seen"
     val schema = s.read.parquet(streamPath).schema
@@ -528,7 +526,7 @@ object DedupQueries {
         // and each re-ran the whole chain per batch (OPTIMIZATION_r16.md
         // §3: addBatch is 80-93% of the trio's trigger time). Blocks are
         // released at the end of the batch body.
-        val fresh = fresh0.localCheckpoint()
+        val fresh = Checkpoints.materialize(fresh0)
         val bh = fresh.select(col("doc_id"),
           graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
         val flagged = MinHashLSH.nearDupAgainstBandRows(bh, histBands,
@@ -543,7 +541,7 @@ object DedupQueries {
         // ledger-off paths (q167/q171) keep the single-consumer lineage
         // (kept's remaining lineage is short now that `fresh` is
         // checkpointed above)
-        val kept = if (ledger.isDefined) kept0.localCheckpoint() else kept0
+        val kept = if (ledger.isDefined) Checkpoints.materialize(kept0) else kept0
         graft.sinks.Sinks.idempotentAppend(
           kept.select(col("doc_id"), col("source"), col("n_words"))
             .withColumn("part", lit(batchId)),
@@ -567,8 +565,8 @@ object DedupQueries {
         // the ledger fingerprint) are done — release per batch instead
         // of accumulating batch-sized tables × triggers (before the
         // poison throw, so even the crashed delivery cleans up)
-        graft.ops.Checkpoints.release(fresh)
-        if (kept ne kept0) graft.ops.Checkpoints.release(kept)
+        Checkpoints.release(fresh)
+        if (kept ne kept0) Checkpoints.release(kept)
         poison.foreach { case (pl, pb) =>
           if (pl == lifeIdx && pb == batchId)
             throw new RuntimeException(
@@ -613,10 +611,9 @@ object DedupQueries {
       }
     } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     // the history checkpoints are read only inside the (now finished)
-    // stream lifetimes; the returned plan reads the kept table — release
-    // the blocks instead of waiting for a driver GC + ContextCleaner
-    graft.ops.Checkpoints.release(histHashed)
-    graft.ops.Checkpoints.release(histBands)
+    // stream lifetimes; the returned plan reads the kept table
+    Checkpoints.release(histHashed)
+    Checkpoints.release(histBands)
     fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)
       .filter(_.getName.startsWith("ckpt-"))
       .foreach(p => fs.delete(p, true))
@@ -649,7 +646,7 @@ object DedupQueries {
     // hashes, the BigramLm/q90 tradeoff: one materialization buys three
     // corpus re-scans + re-tokenizations. Values unchanged: every
     // consumer reads the same deterministic rows it used to recompute.
-    val hashed = ExactDedup.withTextHash(base, "text").localCheckpoint(true)
+    val hashed = Checkpoints.materialize(ExactDedup.withTextHash(base, "text"))
     val keepers = hashed.filter(col("pass_q"))
       .groupBy("text_hash").agg(min(col("doc_id")).as("keeper_id"))
     val withKeep = hashed.join(keepers, Seq("text_hash"), "left")
@@ -735,8 +732,8 @@ object DedupQueries {
     * cheap (2.5 s of the query at sf0.1), while persisting the exploded
     * gram strings would spill ~8× the corpus text to disk. The
     * survivor-hash set is boilerplate-sized by construction — that's
-    * the list being mined — and is localCheckpointed + counted so the broadcast
-    * is guarded: past ~5M survivors (40 MB of longs) the semi-join
+    * the list being mined — and goes through `Checkpoints.guardedBroadcast`:
+    * past ~5M survivors (40 MB of longs) the semi-join
     * falls back to shuffle instead of OOMing the driver (the manual
     * remedy is still a higher df threshold, but the guard makes the
     * degradation graceful rather than fatal). */
@@ -744,19 +741,12 @@ object DedupQueries {
     val d = Tables(s, dir, "documents")
     val grams = d.select(explode(
       graft.expressions.WordGramStrings.word_gram_strings(col("text"), 8)).as("gram"))
-    val cand = grams.select(xxhash64(col("gram")).as("h"))
+    val cand = Checkpoints.guardedBroadcast(grams.select(xxhash64(col("gram")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("dfh"))
       .filter(col("dfh") >= 2)
-      .select("h")
-      .localCheckpoint() // NOT persist: the CacheManager pins cached plans
-    // until explicit unpersist or session end, so per-input-dir survivor
-    // sets would accumulate across a long bench session; a localCheckpoint
-    // materializes the survivor hashes eagerly (the count + semi-join read
-    // the same blocks) and the ContextCleaner releases the RDD blocks once
-    // the returned plan is executed and dropped
-    val candSide = if (cand.count() <= 5000000L) broadcast(cand) else cand
+      .select("h"))
     grams
-      .join(candSide, xxhash64(col("gram")) === cand("h"), "left_semi")
+      .join(cand, xxhash64(col("gram")) === cand("h"), "left_semi")
       .groupBy("gram").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2)
       .orderBy(col("df").desc, col("gram").asc)
@@ -861,7 +851,7 @@ object DedupQueries {
     val dupes = Clusters.assign(pairs, "doc_a", "doc_b")
       .filter(!col("is_representative"))
       .select(col("id").as("doc_id"))
-    val kept = d.join(graft.ops.Checkpoints.guardedBroadcast(dupes),
+    val kept = d.join(Checkpoints.guardedBroadcast(dupes),
       Seq("doc_id"), "left_anti")
     d.groupBy("source").agg(count(lit(1)).as("n_docs"))
       .join(kept.groupBy("source").agg(count(lit(1)).as("n_kept")), Seq("source"), "left")
@@ -940,12 +930,11 @@ object DedupQueries {
     // polynomial keys (the q69 pattern), so it stays an algorithm-
     // independent ground truth for Jaccard over gram keys.
     val sh = graft.expressions.WordGramKeys.word_gram_keys(col("text"), 3)
-    PrefixFilterJoin.jaccardJoin(d, "doc_id", sh, tNum = 3, tDen = 5)
-      // eager checkpoint before the presentation sort: the range
-      // exchange's bounds-sampling pass executes its child twice, and
-      // here the child is the whole candidate-verify join (the q24
-      // lesson, OPTIMIZATION_r15.md) — ×100 28.95 -> 21.05 s min-of-2
-      .localCheckpoint(true)
+    // eager checkpoint before the presentation sort: the range
+    // exchange's bounds-sampling pass executes its child twice, and
+    // here the child is the whole candidate-verify join (the q24
+    // lesson, OPTIMIZATION_r15.md) — ×100 28.95 -> 21.05 s min-of-2
+    Checkpoints.materialize(PrefixFilterJoin.jaccardJoin(d, "doc_id", sh, tNum = 3, tDen = 5))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -966,13 +955,13 @@ object DedupQueries {
     val sh = graft.expressions.WordGramKeys.word_gram_keys(col("text"), 3)
     val tiers = Seq(6, 7, 8, 9)
     // the tally set is pair-bounded (25.6k rows at ×100) but its lineage
-    // is the full PPJoin — localCheckpoint so the two aggregate consumers
+    // is the full PPJoin — checkpoint it so the two aggregate consumers
     // (pair counts, doc flags) don't run the similarity join twice
     // (measured: 73 s vs q115's 41 s for the same join at ×100)
-    val tal = PrefixFilterJoin.jaccardJoinTallies(d, "doc_id", sh, tNum = 3, tDen = 5)
-      .select(col("doc_a"), col("doc_b"), col("i"),
-        (col("na") + col("nb") - col("i")).as("u"))
-      .localCheckpoint()
+    val tal = Checkpoints.materialize(
+      PrefixFilterJoin.jaccardJoinTallies(d, "doc_id", sh, tNum = 3, tDen = 5)
+        .select(col("doc_a"), col("doc_b"), col("i"),
+          (col("na") + col("nb") - col("i")).as("u")))
     val pairRow = tal.agg(
       coalesce(sum(when(col("i") * 10 >= col("u") * tiers.head, 1L)
         .otherwise(0L)), lit(0L)).as(s"p${tiers.head}"),
@@ -1073,7 +1062,7 @@ object DedupQueries {
     val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh", 64, 16, 0.8)
     val dupes = Clusters.assign(pairs, "doc_a", "doc_b")
       .filter(!col("is_representative")).select(col("id").as("doc_id"))
-    val s2 = s1.join(graft.ops.Checkpoints.guardedBroadcast(dupes),
+    val s2 = s1.join(Checkpoints.guardedBroadcast(dupes),
       Seq("doc_id"), "left_anti")
     // 4. semantic dedup over the survivors' embeddings (q65 semantics,
     //    k sized to the SURVIVOR corpus)
@@ -1098,7 +1087,7 @@ object DedupQueries {
       .select(col("vec_id").as("doc_id"))
     val s3 = graft.sinks.Sinks.stagedTable(s, s"graft_q157_dedup_$suffix",
       key = "doc_id", numBuckets = 8, sortCols = Seq("doc_id")) {
-      s2.join(graft.ops.Checkpoints.guardedBroadcast(semDrops),
+      s2.join(Checkpoints.guardedBroadcast(semDrops),
         Seq("doc_id"), "left_anti")
     }
     // 5. decontaminate the train split against the test split (q57)
@@ -1108,7 +1097,7 @@ object DedupQueries {
     val contaminated = graft.dedup.BloomDecontaminate.contaminationReport(
         train, testSplit, "doc_id", "text", n = 8, expectedEvalNgrams = 100000L)
       .select("doc_id")
-    train.join(graft.ops.Checkpoints.guardedBroadcast(contaminated),
+    train.join(Checkpoints.guardedBroadcast(contaminated),
         Seq("doc_id"), "left_anti")
       .select("doc_id", "source")
       .orderBy("doc_id")
@@ -1141,19 +1130,18 @@ object DedupQueries {
     // history hashes AND the band index depend only on history: both
     // computed once and probed by every microbatch of both runs — the
     // staged-index shape from the historyBandRows scaladoc. Measured at
-    // ×100 deployment shape (475k-doc history, 4 batches, min-of-2,
-    // COVERAGE.md "Band-index variants"): prebuilt in-memory index 30.1 s vs per-batch
-    // recompute 37.1 s vs (band,key)-bucketed catalog table 32.2 s —
+    // ×100 deployment shape (475k-doc history, 4 batches, min-of-2):
+    // prebuilt in-memory index 30.1 s vs per-batch recompute 37.1 s vs
+    // (band,key)-bucketed catalog table 32.2 s —
     // the bucketed table is the cross-JVM variant (its write amortizes
-    // across sessions, which a localCheckpoint cannot), but within one
+    // across sessions, which a checkpoint cannot), but within one
     // session the in-memory index wins and is the default here.
-    val history = Tables(s, dir, "documents")
+    val history = Checkpoints.materialize(Tables(s, dir, "documents")
       .filter(col("source") === "src0")
       .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-      .localCheckpoint()
-    val histBands = MinHashLSH.historyBandRows(history, "doc_id", "sh",
-      numHashes = 64, numBands = 16).localCheckpoint()
+        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh")))
+    val histBands = Checkpoints.materialize(MinHashLSH.historyBandRows(history,
+      "doc_id", "sh", numHashes = 64, numBands = 16))
     def deliverAll(run: String): Unit = {
       val q = Tables.stream(s, dir, "documents")
         .writeStream
@@ -1168,10 +1156,9 @@ object DedupQueries {
     deliverAll("first")
     deliverAll("redelivery")
     // the history checkpoints are read only inside the (now finished)
-    // stream lifetimes; the returned plan reads the parquet sink —
-    // release the blocks instead of waiting for a driver GC
-    graft.ops.Checkpoints.release(history)
-    graft.ops.Checkpoints.release(histBands)
+    // stream lifetimes; the returned plan reads the parquet sink
+    Checkpoints.release(history)
+    Checkpoints.release(histBands)
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)

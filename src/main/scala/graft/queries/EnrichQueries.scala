@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.enrich.SectorVote
+import graft.ops.Checkpoints
 
 /** Sector-vote enrichment with the reference's real semantics (A1 2/3
   * majority, A2 hierarchical 1/2-threshold coarsening) over the TPC-H
@@ -59,21 +60,17 @@ object EnrichQueries {
         icb8(col("p_partkey"), col("p_size")).cast("long").as("code"))
       .agg(count(lit(1)).as("cnt"))
       .as[(Long, Long, Long)]
-    reduced.groupByKey(_._1).mapValues(r => (r._2, r._3))
+    // eager checkpoint BEFORE the presentation sort: a global sort's
+    // range exchange runs a bounds-SAMPLING pass that executes its
+    // child plan a second time, and here the child is the whole typed
+    // cascade over the reduced rows — measured the re-run at ~19 s of
+    // q24's ~59 s ×100 wall (full 58.7 vs checkpointed 39.9 s min-of-2;
+    // the sort itself is ~free once its input is materialized). sf0.1
+    // is unchanged within noise (~150k rows).
+    Checkpoints.materialize(reduced.groupByKey(_._1).mapValues(r => (r._2, r._3))
       .agg(SectorVote.hierarchicalAggWeighted().toColumn.name("v"))
       .select(col("key").as("l_orderkey"),
-        col("v.sector").as("sector"), col("v.level").as("level"))
-      // eager checkpoint BEFORE the presentation sort: a global sort's
-      // range exchange runs a bounds-SAMPLING pass that executes its
-      // child plan a second time, and here the child is the whole typed
-      // cascade over the reduced rows — measured (COVERAGE.md) the re-run
-      // at ~19 s of q24's ~59 s ×100 wall (full 58.7 vs checkpointed
-      // 39.9 s min-of-2; the sort itself is ~free once its input is
-      // materialized). sf0.1 is unchanged within noise (~150k rows).
-      // The blocks are ContextCleaner-released once the returned plan
-      // is executed and dropped (the read case — NOT the release-now
-      // case of ops.Checkpoints.release).
-      .localCheckpoint(true)
+        col("v.sector").as("sector"), col("v.level").as("level")))
       .orderBy("l_orderkey")
   }
 

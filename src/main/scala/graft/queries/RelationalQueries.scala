@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.ops.Checkpoints
 
 /** Relational operator coverage (SURVEY.md §2.4–2.7): filters with parquet
   * pushdown, broadcast dimension joins (J1), semi/anti joins (J2/J3),
@@ -291,11 +292,11 @@ object RelationalQueries {
     // only via grouping ids the output never projected; both forms emit
     // the same multiset.
     val ev = Tables(s, dir, "events")
-    val fine = ev.select(col("event_type"),
+    // group-cardinality rows; feeds 4 levels
+    val fine = Checkpoints.materialize(ev.select(col("event_type"),
         dayofweek(col("ts")).cast("long").as("dow"), col("value"))
       .groupBy(col("event_type"), col("dow"))
-      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(25,10)")).as("v"))
-      .localCheckpoint(true) // group-cardinality rows; feeds 4 levels
+      .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(25,10)")).as("v")))
     val l00 = fine.select(col("event_type"), col("dow"), col("n"), col("v"))
     val l01 = fine.groupBy(col("event_type")).agg(sum("n").as("n"), sum("v").as("v"))
       .select(col("event_type"), lit(null).cast("long").as("dow"), col("n"), col("v"))
@@ -357,11 +358,11 @@ object RelationalQueries {
     // so every level's values are identical to the Expand form.
     // grouping() markers become literals per level (data-null group
     // keys keep g=0, exactly as grouping() reports them).
-    val fine = Tables(s, dir, "lineitem")
+    // group-cardinality rows; feeds 3 levels
+    val fine = Checkpoints.materialize(Tables(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"),
-        sum(col("l_quantity").cast("decimal(28,12)")).as("q"))
-      .localCheckpoint(true) // group-cardinality rows; feeds 3 levels
+        sum(col("l_quantity").cast("decimal(28,12)")).as("q")))
     val lvl0 = fine.select(col("l_returnflag"), col("l_linestatus"),
       lit(0).as("g_rf"), lit(0).as("g_ls"), col("n"), col("q"))
     val lvl1 = fine.groupBy(col("l_linestatus"))
@@ -706,12 +707,11 @@ object RelationalQueries {
     // max from it — same decimal sums, same max, same equality filter
     // (ties survive in both forms; a NULL total_rev row fails `=` in
     // both), so the result is identical by construction.
-    val rev = Tables(s, dir, "lineitem")
+    val rev = Checkpoints.materialize(Tables(s, dir, "lineitem")
       .groupBy(col("l_suppkey"))
       .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
           .cast("decimal(25,10)"))
-        .cast("decimal(38,10)").as("total_rev"))
-      .localCheckpoint(true)
+        .cast("decimal(38,10)").as("total_rev")))
     val mx = rev.agg(max(col("total_rev")).as("__mx"))
     val top = rev.crossJoin(broadcast(mx))
       .filter(col("total_rev") === col("__mx"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{KCore, PageRank, Triangles}
+import graft.ops.{Checkpoints, KCore, PageRank, Triangles}
 import graft.similarity.{Cosine, IvfFlat, KMeans, Pca, ProductQuantizer, RandomHyperplaneLSH, ScalarQuantizer, SemanticDedup}
 
 /** Similarity-search operator coverage over `embeddings` (north-star ANN
@@ -550,7 +550,7 @@ object SimilarityQueries {
     // broadcast exists anywhere — each round's only shuffle is the
     // dims-keyed partial agg. The centered corpus is checkpointed once
     // and re-scanned 9× (8 rounds + the projection).
-    val xc = Pca.centered(all, "vec_id", "embedding").localCheckpoint(true)
+    val xc = Checkpoints.materialize(Pca.centered(all, "vec_id", "embedding"))
     val v = Pca.principalComponent(xc, Dims, iters = 8)
     Pca.project(xc, "vec_id", v)
       .select(col("vec_id"), round(col("proj"), 4).as("proj"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.ops.{AggState, AsOfJoin, GapFill, PrefixSum, RangeJoin, Regression, RobustStats, Sequences, Sessionize, ZOrder}
+import graft.ops.{AggState, AsOfJoin, Checkpoints, GapFill, PrefixSum, RangeJoin, Regression, RobustStats, Sequences, Sessionize, ZOrder}
 
 /** Temporal join operators over the `events` stream table — the two
   * join shapes Spark lacks as built-ins that every event pipeline needs:
@@ -137,7 +137,7 @@ object TemporalQueries {
         floor((col("ts").cast("double") - base) / 86400).cast("long").as("day"))
     val firstSeen = events.groupBy("user_id")
       .agg(min(col("day")).as("cohort_day"))
-    events.join(graft.ops.Checkpoints.guardedBroadcast(firstSeen), Seq("user_id"))
+    events.join(Checkpoints.guardedBroadcast(firstSeen), Seq("user_id"))
       .groupBy(col("cohort_day"), (col("day") - col("cohort_day")).as("day_offset"))
       .agg(countDistinct(col("user_id")).as("n_users"))
       .orderBy("cohort_day", "day_offset")
@@ -152,10 +152,10 @@ object TemporalQueries {
     * stage's join and the final count). */
   val q64EventFunnel: Q = (s, dir) => {
     val events = Tables(s, dir, "events").select("user_id", "event_type", "ts")
-    val v = graft.ops.Checkpoints.guardedBroadcast(
+    val v = Checkpoints.guardedBroadcast(
       events.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min("ts").as("t1")))
-    val c = graft.ops.Checkpoints.guardedBroadcast(
+    val c = Checkpoints.guardedBroadcast(
       events.filter(col("event_type") === "click")
         .join(v, Seq("user_id"))
         .filter(col("ts") > col("t1"))
@@ -631,11 +631,11 @@ object TemporalQueries {
     require(crossLifetimePairs > 0,
       "restart certification vacuous: no pair joins a second-life purchase " +
         "to reloaded click state")
-    val result = s.read.parquet(out)
+    // materialize, then drop the run's scratch
+    val result = Checkpoints.materialize(s.read.parquet(out)
       .groupBy(to_date(col("p_ts")).as("day"))
       .agg(count(lit(1)).as("n_pairs"),
-        countDistinct(col("p_user")).as("n_users"))
-      .localCheckpoint() // materialize, then drop the run's scratch
+        countDistinct(col("p_user")).as("n_users")))
     fs.delete(new Path(run), true)
     result.orderBy("day")
   }
@@ -824,7 +824,7 @@ object TemporalQueries {
     require(crossBoundary > 0,
       "restart certification vacuous: no session spans the kill boundary " +
         "(reloaded open-session state never exercised)")
-    val result = sessionRollup(s.read.parquet(out)).localCheckpoint()
+    val result = Checkpoints.materialize(sessionRollup(s.read.parquet(out)))
     fs.delete(new Path(run), true)
     result
   }

@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.ops.Checkpoints
 
 /** Full-text search operators — the in-engine equivalent of the
   * reference's Elasticsearch tier (SURVEY.md §1.1 "Search index",
@@ -66,8 +67,8 @@ object Bm25 {
     // The isin filter cannot push below the Generate (term is the
     // generated column), so without this each consumer re-ran the full
     // corpus explode + tf aggregation (the NaiveBayes.train lesson).
-    val tf = termFreqs(docs, idCol, textCol).filter(col("term").isin(terms: _*))
-      .localCheckpoint(true)
+    val tf = Checkpoints.materialize(
+      termFreqs(docs, idCol, textCol).filter(col("term").isin(terms: _*)))
 
     // Corpus stats: N and avgdl in one pass over doc lengths (map-side
     // combine; the result is a single row, crossJoin'd as a literal-like
@@ -141,8 +142,7 @@ object PhraseSearch {
     // Phrase-term-bounded postings consumed once per phrase term (the
     // base + every adjacency join): materialize once instead of
     // re-running the corpus posexplode+filter scan n times.
-    val postings = positionalPostings(docs, idCol, textCol, phrase)
-      .localCheckpoint(true)
+    val postings = Checkpoints.materialize(positionalPostings(docs, idCol, textCol, phrase))
     val base = postings.filter(col("term") === phrase.head)
       .select(col(idCol), col("pos"))
     val matched = phrase.zipWithIndex.tail.foldLeft(base) { case (acc, (t, i)) =>

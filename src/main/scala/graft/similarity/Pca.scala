@@ -52,7 +52,7 @@ object Pca {
 
   /** Mean-centered corpus in array form: (idCol, xv double[]). The
     * zip_with against the literal mean array runs once (callers
-    * localCheckpoint before iterating); element order is preserved, so
+    * checkpoint before iterating); element order is preserved, so
     * downstream sequential-fold dots see the d-ordered sequence. */
   def centered(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val mu = dimMeans(df, idCol, vecCol)

@@ -31,9 +31,6 @@ object TextOps {
     * dedup key. We *define* the semantic as a deterministic content hash. */
   def textHashHex(c: Column): Column = md5(c)
 
-  /** 64-bit xxhash for internal hot paths (codegen'd, no hex round-trip). */
-  def textHash64(c: Column): Column = xxhash64(c)
-
   /** 32-bit int from the md5 hex prefix. Cross-engine stable: equals
     * DuckDB `('0x' || substr(md5(x),1,8))::BIGINT` — used whenever an
     * oracle must recompute the same hash. */
@@ -44,10 +41,6 @@ object TextOps {
     * equality-tested against it (Md5PrefixLongSpec). */
   private[graft] def md5Int32Hof(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
-
-  /** Seeded family for MinHash: h_i(x) = md5Int32(x + "#" + i). */
-  def md5Int32Seeded(c: Column, seed: Column): Column =
-    md5Int32(concat(c, lit("#"), seed.cast("string")))
 
   /** 60-bit long from the md5 hex prefix (15 nibbles — fits a signed
     * 64-bit on both engines; DuckDB: `('0x' || substr(md5(x),1,15))::BIGINT`).
@@ -178,9 +171,6 @@ object TextOps {
                        "yyyy/MM/dd HH:mm", "dd/MM/yyyy HH:mm",
                        "MMM d, yyyy", "yyyy-MM-dd")): Column =
     coalesce(formats.map(f => try_to_timestamp(value, lit(f))): _*)
-
-  // ---- O14: regex id extraction -------------------------------------------
-  def extractId(c: Column, pattern: String): Column = regexp_extract(c, pattern, 1)
 
   // ---- O15: JSONP strip ----------------------------------------------------
   /** `cb({...})` → `{...}`: strip the callback wrapper, keep the payload.

@@ -31,6 +31,29 @@ class CheckpointsSpec extends SparkSpec {
     assert(small.count() == 3)
   }
 
+  test("guardedBroadcast launches only its checkpoint's jobs: the row " +
+       "count comes from the checkpoint's own job") {
+    // a fresh shuffled frame per call, so no call reuses another's stages
+    def grouped() = spark.range(0, 1000, 1, 4).toDF("k")
+      .groupBy(col("k") % 10).agg(count(lit(1)).as("n"))
+    val checkpointOnly = jobsOf(grouped().localCheckpoint(true))
+    val guarded = jobsOf(Checkpoints.guardedBroadcast(grouped()))
+    assert(checkpointOnly > 0)
+    assert(guarded == checkpointOnly,
+      s"guardedBroadcast ran $guarded jobs; its checkpoint alone runs $checkpointOnly")
+  }
+
+  test("materializeCounted: the observed count equals the rows, empty or not") {
+    val (empty, n0) = Checkpoints.materializeCounted(
+      spark.range(0, 100, 1, 4).toDF("k").filter(col("k") < 0))
+    assert(n0 == 0L && empty.count() == 0L)
+    val (noParts, nLocal) = Checkpoints.materializeCounted(Seq.empty[Long].toDF("k"))
+    assert(nLocal == 0L && noParts.count() == 0L)
+    val (mat, n) = Checkpoints.materializeCounted(
+      spark.range(0, 37, 1, 4).toDF("k").groupBy(col("k") % 5).agg(count(lit(1))))
+    assert(n == 5L && mat.count() == 5L)
+  }
+
   test("release: frees an eager localCheckpoint's registered RDD; no-op on plans") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val ck = Seq(1, 2, 3).toDF("x").localCheckpoint(true)
