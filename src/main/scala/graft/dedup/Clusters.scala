@@ -234,9 +234,10 @@ object Clusters {
 
   /** Best-member representative per cluster: production dedup keeps the
     * BEST copy of each duplicate group (longest, cleanest, highest
-    * quality score), not the lowest id `assign` flags. One codegen'd
-    * `min(struct(-priority, id))` hash aggregation per cluster (argmax
-    * on priority, ties to the lowest id — deterministic).
+    * quality score), not the lowest id `assign` flags. One
+    * `min(struct(-priority, id))` aggregation per cluster (argmax on
+    * priority, ties to the lowest id — deterministic); Spark plans it as
+    * a SortAggregate, since a struct buffer is not mutable in place.
     *
     * @param memberClusters (idCol, clusterCol) rows, one per member,
     *                       with whatever priority feeds `priority`

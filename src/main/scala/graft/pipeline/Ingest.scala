@@ -60,7 +60,7 @@ object Ingest {
     val fresh = ExactDedup.dedupGate(
       ExactDedup.keepers(tickerRows, "text_hash", "id",
         carryCols = Seq("source", "title", "selftext", "created_utc", "url"),
-        extraAggs = Seq(array_sort(collect_set(col("__t"))).as("tickers"))),
+        extraAggs = Seq(sort_array(collect_set(col("__t"))).as("tickers"))),
       history, "text_hash")
     import posts.sparkSession.implicits._
     fresh.select(Doc.assemble(

@@ -23,11 +23,9 @@ object EnrichQueries {
       pmod(partkey, lit(2))
 
   /** A1: per-order 2/3-majority vote on part brand. Relational two-agg
-    * form: measured FASTER than the one-shuffle `majorityFullAgg`
-    * Aggregator here (1.5s vs 2.5s at sf0.1) — both hash aggs are
-    * codegen'd with map-side partials, while the typed form pays kryo
-    * ser/de on every Map buffer; the Aggregator wins only when the
-    * per-group logic can't be expressed as codegen'd aggs (see q24). */
+    * form: a hash count per (order, brand), then the `min(struct)` argmax,
+    * which Spark plans as a SortAggregate (a struct buffer is not mutable
+    * in place). */
   val q23MajoritySector: Q = (s, dir) => {
     val li = Tables(s, dir, "lineitem")
     val part = Tables(s, dir, "part")
@@ -39,38 +37,30 @@ object EnrichQueries {
       .orderBy("l_orderkey")
   }
 
-  /** A2: per-order hierarchical ICB vote (threshold 1/2, trim 8→6→4→2).
-    * Uses the typed-Aggregator hybrid: base reduction stays relational
-    * (codegen, map-side partials), the typed cascade sees only the
-    * reduced (doc, code, cnt) rows with per-order buffers bounded by
-    * order size. Fastest of the four forms measured at EVERY
-    * scale under full materialization (noop sink, OPTIMIZATION_r15.md):
-    * sf0.1 2.6 s / ×30 12.9 s / ×100 45.9 s, vs hash-agg cascade
-    * 2.9/14.2/52.0, windowed 6.7/21.0/94.1, compact-HOF 3.2/37.6/166.8.
-    * The compact form's HOF lambdas evaluate INTERPRETED per row, which
-    * an earlier count()-based comparison hid — Catalyst prunes unused
-    * columns under count and deletes the winner computation entirely;
-    * never benchmark a projection with count(). */
+  /** A2: per-order hierarchical ICB vote (threshold 1/2, trim 8→6→4→2)
+    * through `SectorVote.hierarchical` on the raw `lineitem ⋈ part`
+    * pairs: one shuffle by order, one code list per order, the cascade
+    * kernel. Measured cold (first execution in a fresh JVM, perfbench
+    * query_mix on a seeded CorpusB of sf0.01, 4 vCPU, median of 10
+    * alternating pairs): 2.68 s with the typed-Aggregator hybrid it
+    * replaces (a relational base count feeding a kryo-buffered cascade),
+    * 1.52 s here. At ×30 (ScaleUp of sf0.1, `ScaleRehearsal`, min of 3
+    * in one JVM): 33.2 s → 17.4 s, shuffle 0.38 → 0.21 GiB, peak task
+    * memory 0.12 → 0.05 GiB. */
   val q24SectorRollup: Q = (s, dir) => {
-    import s.implicits._
     val li = Tables(s, dir, "lineitem")
     val part = Tables(s, dir, "part")
-    val reduced = li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_orderkey").cast("long").as("doc"),
+    val pairs = li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
+      .select(col("l_orderkey").cast("long").as("l_orderkey"),
         icb8(col("p_partkey"), col("p_size")).cast("long").as("code"))
-      .agg(count(lit(1)).as("cnt"))
-      .as[(Long, Long, Long)]
     // eager checkpoint BEFORE the presentation sort: a global sort's
     // range exchange runs a bounds-SAMPLING pass that executes its
-    // child plan a second time, and here the child is the whole typed
-    // cascade over the reduced rows — measured the re-run at ~19 s of
-    // q24's ~59 s ×100 wall (full 58.7 vs checkpointed 39.9 s min-of-2;
-    // the sort itself is ~free once its input is materialized). sf0.1
-    // is unchanged within noise (~150k rows).
-    Checkpoints.materialize(reduced.groupByKey(_._1).mapValues(r => (r._2, r._3))
-      .agg(SectorVote.hierarchicalAggWeighted().toColumn.name("v"))
-      .select(col("key").as("l_orderkey"),
-        col("v.sector").as("sector"), col("v.level").as("level")))
+    // child plan a second time, and here the child is the whole vote
+    // over the raw pairs — measured the re-run at ~19 s of q24's ~59 s
+    // ×100 wall with the earlier typed cascade (full 58.7 vs
+    // checkpointed 39.9 s min-of-2; the sort itself is ~free once its
+    // input is materialized).
+    Checkpoints.materialize(SectorVote.hierarchical(pairs, "l_orderkey", "code"))
       .orderBy("l_orderkey")
   }
 

@@ -23,9 +23,11 @@ object IvfFlat {
   /** Nearest-centroid assignment: (idCol, cell, dist), deterministic
     * tie-break on centroid id.
     *
-    * argmin as `min(struct(dist, cen_id))` — a codegen'd hash aggregation
-    * whose map-side combine collapses the k candidate rows per vector
-    * BEFORE the shuffle, so the exchange carries n rows. (The
+    * argmin as `min(struct(dist, cen_id))` — an aggregation (a
+    * SortAggregate: a struct buffer is not mutable in place, so Spark
+    * sorts each side of the exchange) whose map-side combine collapses
+    * the k candidate rows per vector BEFORE the shuffle, so the exchange
+    * carries n rows. (The
     * row_number-window form needs the full n×k scored rows shuffled to
     * sort each vector's candidates together — a k× exchange-volume tax on
     * the corpus-side hot path.) Struct comparison is lexicographic, so

@@ -71,8 +71,9 @@ object ProductQuantizer {
   }
 
   /** PQ codes: (idCol, m, code) — nearest codeword per subspace, ties to
-    * the lowest code id. Argmin is min(struct(dist, code)): a hash
-    * aggregation with map-side partials, not a corpus-wide window. */
+    * the lowest code id. Argmin is min(struct(dist, code)): an
+    * aggregation with map-side partials (Spark plans a struct buffer as a
+    * SortAggregate), not a corpus-wide window. */
   def encode(vecs: DataFrame, idCol: String, vecCol: String,
              cb: DataFrame, numSub: Int, subDim: Int): DataFrame =
     subvectors(vecs, idCol, vecCol, numSub, subDim)

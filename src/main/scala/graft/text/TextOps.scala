@@ -183,8 +183,15 @@ object TextOps {
     regexp_extract(c, "(?s)^[^(]*\\((.*)\\)[\\s;]*$", 1)
 
   // ---- O16: EN ticker extraction ------------------------------------------
-  /** `$tsla`-style cashtags (uppercased) ∪ bare ALL-CAPS words. */
+  /** `$tsla`-style cashtags (uppercased) ∪ bare ALL-CAPS words, distinct,
+    * cashtags first: one codegen'd pass over the bytes
+    * (graft.expressions.TickersEn), no regex, lambda or ICU case mapping. */
   def extractTickersEn(c: Column): Column =
+    graft.expressions.TickersEn.tickers_en(c)
+
+  /** The declarative specification of [[extractTickersEn]] — the kernel is
+    * equality-tested against it (TextOpsSpec). */
+  private[graft] def extractTickersEnRegex(c: Column): Column =
     array_distinct(concat(
       transform(regexp_extract_all(c, lit("\\$([a-zA-Z]+)"), lit(1)), t => upper(t)),
       regexp_extract_all(c, lit("\\b[A-Z][A-Z]+\\b"), lit(0))))

@@ -72,6 +72,37 @@ class PlanLintSpec extends SparkSpec {
         cleared.mkString(", "))
   }
 
+  test("no query plans a SortAggregate") {
+    // Spark plans an aggregation whose buffer is not mutable in place —
+    // max/min over a struct or a string, first/last of a string — as a
+    // SortAggregate: partial and final each sort their whole input.
+    // Argmax-style votes belong in a hash aggregation over fixed-width
+    // buffers or in a per-group kernel over a collected list (the A2
+    // sector vote). The queries below offended when this lint landed;
+    // the list can only shrink: a listed query that stops offending
+    // fails the lint until it is deleted from the list.
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    val knownOffenders = Set(
+      "q118_curation_pipeline", "q155_knn_label_agreement", "q165_hard_negatives",
+      "q23_majority_sector", "q28_binary_features", "q34_ann_ivf", "q46_funnel",
+      "q49_kmeans_step", "q50_asof_join", "q60_ann_pq", "q62_attribution",
+      "q65_semantic_dedup", "q75_table_stats", "q77_nearest_event",
+      "q79_asof_bucketed", "q80_asof_forward", "q83_best_keeper", "q90_nb_classify")
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        val plan = fn(spark, dir).queryExecution.executedPlan
+        val bad = new AdaptiveSparkPlanHelper {}.collect(plan) { case a: SortAggregateExec => a }
+        if (bad.nonEmpty) Some(name) else None
+    }.toSet
+    val fresh = (offenders -- knownOffenders).toSeq.sorted
+    val cleared = (knownOffenders -- offenders).toSeq.sorted
+    assert(fresh.isEmpty, s"SortAggregate in: ${fresh.mkString(", ")}")
+    assert(cleared.isEmpty,
+      s"no longer planning a SortAggregate, drop from knownOffenders: " +
+        cleared.mkString(", "))
+  }
+
   test("no query plans an unpartitioned Window over UNBOUNDED input") {
     // A Window with an empty partitionSpec funnels its whole input
     // through one task's sort. That's fine when the input is

@@ -41,6 +41,18 @@ class IngestSpec extends SparkSpec {
     assert(shuffles.size == 1, plan.treeString)
   }
 
+  test("ingest plan: ticker extraction runs no higher-order function and no regex") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, RegExpExtractAll}
+    val plan = Ingest.ingest(posts, universe, emptyHistory, clock).queryExecution.optimizedPlan
+    val bad = plan.flatMap(_.expressions).flatMap(_.collect {
+      case e: HigherOrderFunction => e
+      case e: RegExpExtractAll => e
+    })
+    assert(bad.isEmpty, bad.mkString("\n"))
+    assert(plan.flatMap(_.expressions).exists(_.exists(_.prettyName == "tickers_en")),
+      plan.treeString)
+  }
+
   test("ingest is idempotent under the dedup gate (reference test_reddit.py:12-15 analog)") {
     val run1 = Ingest.ingest(posts, universe, emptyHistory, clock)
     val history = run1.select(col("text_hash")).toDF()

@@ -165,6 +165,48 @@ class TextOpsSpec extends SparkSpec {
     assert(got == Seq("GME", "MSFT", "TSLA"))
   }
 
+  test("extractTickersEn kernel ≡ the regex form on generated strings (codegen path)") {
+    // the pieces the two passes and `\b` care about: `$`, both ASCII
+    // cases, digits, `_`, non-ASCII letters (BMP and a surrogate pair)
+    // and a non-spacing mark (U+0301) that can land before or after a run
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf("AB", "TSLA", "GME", "X", "Q", "ab", "tsla", "x"),
+      3 -> Gen.oneOf("$", "$$", "$gme", "$Ab", "$1"),
+      3 -> Gen.oneOf(" ", " ", ".", ",", "-", "\n"),
+      2 -> Gen.oneOf("0", "7", "_", "É", "é", "Σ", "σ", "\uD835\uDC00", "\u0301"))
+    val samples = collection.mutable.Buffer.empty[String]
+    forAll(Gen.listOf(piece).map(_.mkString), n = 400)(samples += _)
+    // an RDD scan, not a local relation, so both sides run codegen'd
+    val df = spark.sparkContext.parallelize(samples.toSeq :+ null, 2).toDF("s")
+    val rows = df.select(col("s"), TextOps.extractTickersEn(col("s")).as("k"),
+      TextOps.extractTickersEnRegex(col("s")).as("r")).collect()
+    assert(rows.length == samples.size + 1)
+    rows.foreach { r =>
+      assert(r.isNullAt(1) == r.isNullAt(2), String.valueOf(r.getString(0)))
+      if (!r.isNullAt(1))
+        assert(r.getSeq[String](1) == r.getSeq[String](2), s"input: ${r.getString(0)}")
+    }
+    val plan = df.select(TextOps.extractTickersEn(col("s"))).queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[tickers_en.*"), s"plan was:\n$plan")
+  }
+
+  test("extractTickersEn: Java-regex \\b cases (checked on JDK 17) and null") {
+    val cases = Seq(
+      "ÉAB CD" -> Seq("CD"),            // a Unicode letter is a word char
+      "AB1 XY" -> Seq("XY"),            // so is a digit
+      "AB_ X" -> Seq(),                 // and `_`
+      "x AB\u0301 y" -> Seq(),          // a mark after the run has a base
+      "\u0301AB z" -> Seq("AB"),        // a mark at the start has none
+      "éAB q" -> Seq(),
+      "\uD835\uDC00AB CD" -> Seq("CD"), // a surrogate-pair letter is a word char
+    )
+    val df = (cases.map(c => Option(c._1)) :+ None).toDF("s")
+    val got = df.select(TextOps.extractTickersEn(col("s")).as("r")).collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getSeq[String](0)))
+    cases.zip(got).foreach { case ((in, want), g) => assert(g.contains(want), in) }
+    assert(got.last.isEmpty)
+  }
+
   test("extractTickersCjk: numeric parenthesized codes, fallback to job ticker (ref etnet.py:233-239)") {
     val df = Seq(
       ("腾讯(00700)和平安(02318)和(abc)", "99999"),
