@@ -8,21 +8,20 @@ object PlanPeek {
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"===== $name =====")
-      // "lsh:<Fetch|InBandTwoTier>" explains the near-dup pair
-      // miner with a FORCED verify form (the registered q35 routes by
+      // "lsh:<Fetch|InBandTwoTier>" explains one verify form of the
+      // near-dup pair miner, unrouted (the registered q35 routes by
       // corpus, so the big-corpus in-band plans are invisible at small
       // SFs); anything else is a SparkEntry query name.
       if (name.startsWith("lsh:")) {
         import org.apache.spark.sql.functions._
         val form = name.stripPrefix("lsh:") match {
-          case "Fetch" => graft.dedup.MinHashLSH.VerifyForm.Fetch
-          case "InBandTwoTier" => graft.dedup.MinHashLSH.VerifyForm.InBandTwoTier
+          case "Fetch" => graft.dedup.MinHashLSH.fetchPairs _
+          case "InBandTwoTier" => graft.dedup.MinHashLSH.inBandTwoTierPairs _
           case other => sys.error(s"unknown form $other")
         }
         val sh = Tables(spark, dir, "documents").select(col("doc_id"),
           graft.expressions.NgramHashes.char_ngram_hashes(col("text"), 8).as("sh"))
-        graft.dedup.MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-          64, 16, 0.7, verify = form).explain("formatted")
+        form(sh, "doc_id", "sh", 64, 16, 0.7).explain("formatted")
       } else if (name == "substrdup") {
         // q91's dup-window miner: invisible in the final plan behind
         // report()'s checkpoint

@@ -17,7 +17,7 @@ import graft.text.TextOps
   *
   * Scale: the equi-join shuffles token-keyed candidate rows; a hot
   * token ("inc", "ltd") makes its bucket quadratic — same hazard and
-  * same remedy as `MinHashLSH.maxBucket`: cap or drop oversized token
+  * same remedy as the LSH operators' `BucketCap`: cap or drop oversized token
   * buckets, or restrict the blocker to each name's rarest token
   * (PPJoin's prefix idea, see `dedup/PrefixFilterJoin`) at some recall
   * cost. The Levenshtein itself is per-candidate-row compute, codegen'd

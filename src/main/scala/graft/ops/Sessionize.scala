@@ -109,8 +109,9 @@ object Sessionize {
     * spends one map-side-combined per-key count pass to route: hottest
     * key ≤ [[AutoHotKeyEvents]] → Plain, above → Sharded with the bucket
     * width sized so the hottest key splits into ~[[AutoShardTarget]]
-    * buckets of its own time span (the MinHashLSH VerifyForm.Auto
-    * pattern: measure the cheap statistic, run the form that wins). */
+    * buckets of its own time span (the MinHashLSH.nearDupPairsHashed
+    * routing pattern: measure the cheap statistic, run the form that
+    * wins). */
   sealed trait Form
   object Form {
     case object Plain extends Form

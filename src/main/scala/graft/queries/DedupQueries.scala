@@ -39,6 +39,26 @@ object DedupQueries {
   private def qualityGated(df: DataFrame, cols: String*): DataFrame =
     withGateCounts(df, cols: _*).filter(passesGate)
 
+  /** The word-level near-dup recipe every q18-family query runs:
+    * 64 MinHashes in 16 bands × 4 rows over word 3-gram hashes
+    * ([[wordGrams]]), exact Jaccard >= 0.8. A J=0.9 pair is missed with
+    * prob (1 - 0.9^4)^16 ~ 4e-8; the data's non-dup pairs sit below
+    * J=0.3. (q35's char-8 recipe is its own.) */
+  private val NumHashes = 64
+  private val NumBands = 16
+  private val Threshold = 0.8
+
+  /** (doc_id, `cols`, sh) of `df`: sh is the word 3-gram hash array of
+    * its `text` that the near-dup recipe runs on. */
+  private def wordGrams(df: DataFrame, cols: String*): DataFrame =
+    df.select(col("doc_id") +: cols.map(col) :+
+      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"): _*)
+
+  /** Near-dup pairs (doc_a, doc_b, jaccard) among `df`'s documents by
+    * the word-level recipe. */
+  private def nearDupPairs(df: DataFrame): DataFrame =
+    MinHashLSH.nearDupPairsHashed(wordGrams(df), "doc_id", "sh", NumHashes, NumBands, Threshold)
+
   /** F8 dedup gate: src0 is the 7-day history, src1..9 the incoming batch.
     * Within-batch keeper selection (deterministic min doc_id per hash),
     * then left-anti join against history hashes. Exercises O2 + J3 + F8. */
@@ -52,16 +72,11 @@ object DedupQueries {
       .orderBy("doc_id")
   }
 
-  /** MinHash+LSH near-dup pairs at Jaccard >= 0.8 over 3-word shingles.
-    * 64 hashes, 16 bands x 4 rows: a J=0.9 pair is missed with prob
-    * (1 - 0.9^4)^16 ~ 4e-8; the data's non-dup pairs sit below J=0.3 —
-    * the verify stage computes exact Jaccard on candidates only. */
+  /** MinHash+LSH near-dup pairs at Jaccard >= 0.8 over 3-word shingles
+    * ([[NumHashes]]): the verify stage computes exact Jaccard on
+    * candidates only. */
   val q18MinhashPairs: Q = (s, dir) => {
-    val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-        numHashes = 64, numBands = 16, threshold = 0.8)
+    nearDupPairs(Tables(s, dir, "documents"))
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy("doc_a", "doc_b")
   }
@@ -107,7 +122,7 @@ object DedupQueries {
     *
     * Built as posexplode → per-doc `lead` chain → codegen concat — NOT
     * an array `transform` HOF: the HOF form runs interpreted per gram
-    * (the `MinHashLSH.signatures` lesson) and measured 12–19 s at sf0.1
+    * (the `MinHashLSH.signaturesFromBaseRows` lesson) and measured 12–19 s at sf0.1
     * where this form is ~1 s. The two windows share one (doc_id)
     * exchange. `keepShort` mirrors the 3-gram oracle's short-doc
     * fallback (whole token list as one gram — `concat_ws` skips the
@@ -218,10 +233,7 @@ object DedupQueries {
     * split ships. */
   val q163SplitLeakage: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val clusters = Clusters.assign(pairs, "doc_a", "doc_b")
     val bucket = pmod(TextOps.md5Int32(col("text")), lit(100))
     val splits = d.select(col("doc_id"),
@@ -493,13 +505,12 @@ object DedupQueries {
       fs.create(stagedMarker, true).close()
     }
 
-    val histHashed = Checkpoints.materialize(d.filter(col("source") === "src0")
-      .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh")))
+    val histHashed = Checkpoints.materialize(
+      wordGrams(d.filter(col("source") === "src0")))
     // static history ⇒ band index built ONCE, probed by every micro-batch
     // (the deployment shape nearDupAgainstHashed's scaladoc prescribes)
     val histBands = Checkpoints.materialize(MinHashLSH.historyBandRows(histHashed,
-      "doc_id", "sh", numHashes = 64, numBands = 16))
+      "doc_id", "sh", NumHashes, NumBands))
     val out = s"$tmp/kept"
     val seen = s"$tmp/seen"
     val schema = s.read.parquet(streamPath).schema
@@ -527,11 +538,10 @@ object DedupQueries {
         // §3: addBatch is 80-93% of the trio's trigger time). Blocks are
         // released at the end of the batch body.
         val fresh = Checkpoints.materialize(fresh0)
-        val bh = fresh.select(col("doc_id"),
-          graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+        val bh = wordGrams(fresh)
         val flagged = MinHashLSH.nearDupAgainstBandRows(bh, histBands,
             histHashed, "doc_id", "sh",
-            numHashes = 64, numBands = 16, threshold = 0.8)
+            NumHashes, NumBands, Threshold)
           .select(col("batch_id").as("doc_id")).distinct()
         val kept0 = fresh.join(flagged, Seq("doc_id"), "left_anti")
         // with the q173 ledger on, kept feeds TWO consumers (the sink
@@ -651,14 +661,10 @@ object DedupQueries {
       .groupBy("text_hash").agg(min(col("doc_id")).as("keeper_id"))
     val withKeep = hashed.join(keepers, Seq("text_hash"), "left")
       .withColumn("is_keeper", col("doc_id") === coalesce(col("keeper_id"), lit(-1L)))
-    val hist = d.filter(col("source") === "src0")
-      .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val probe = withKeep.filter(col("is_keeper"))
-      .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+    val hist = wordGrams(d.filter(col("source") === "src0"))
+    val probe = wordGrams(withKeep.filter(col("is_keeper")))
     val flagged = MinHashLSH.nearDupAgainstHashed(probe, hist, "doc_id", "sh",
-        numHashes = 64, numBands = 16, threshold = 0.8)
+        NumHashes, NumBands, Threshold)
       .select(col("batch_id").as("doc_id"), lit(true).as("is_dup")).distinct()
     withKeep.join(flagged, Seq("doc_id"), "left")
       .agg(
@@ -685,10 +691,7 @@ object DedupQueries {
     * re-splits. */
   val q166ClusterSafeSplit: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val clusters = Clusters.assign(pairs, "doc_a", "doc_b")
     def splitOf(bucket: Column): Column =
       when(bucket < 80, lit("train")).when(bucket < 90, lit("valid"))
@@ -766,10 +769,7 @@ object DedupQueries {
     * lookup is a doc-count equi-join, the matrix is |sources|² rows. */
   val q162DupSourceMatrix: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val src = d.select(col("doc_id"), col("source"))
     val dec = "decimal(28,12)"
     pairs
@@ -799,10 +799,7 @@ object DedupQueries {
     * ground-truth edges + recursive-CTE transitive closure. */
   val q39DedupClusters: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     Clusters.assign(pairs, "doc_a", "doc_b")
       .select(col("id").as("doc_id"), col("cluster"), col("is_representative"))
       .orderBy("doc_id")
@@ -817,10 +814,7 @@ object DedupQueries {
     * is shared with ordinary dedup. */
   val q44Decontamination: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val bucket = pmod(TextOps.md5Int32(col("text")), lit(100))
     val splits = d.select(col("doc_id"),
       when(bucket < 80, lit("train")).when(bucket < 90, lit("valid"))
@@ -844,10 +838,7 @@ object DedupQueries {
     * back to shuffle instead of OOMing the driver.) */
   val q48DedupCorpus: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val dupes = Clusters.assign(pairs, "doc_a", "doc_b")
       .filter(!col("is_representative"))
       .select(col("id").as("doc_id"))
@@ -868,12 +859,11 @@ object DedupQueries {
     * Oracle: all-pairs batch x history ground truth. */
   val q59IncrementalNeardup: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"), col("source"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+    val sh = wordGrams(d, "source")
     val history = sh.filter(col("source") === "src0").select("doc_id", "sh")
     val batch = sh.filter(col("source") =!= "src0").select("doc_id", "sh")
     MinHashLSH.nearDupAgainstHashed(batch, history, "doc_id", "sh",
-        numHashes = 64, numBands = 16, threshold = 0.8)
+        NumHashes, NumBands, Threshold)
       .select(col("batch_id"), col("history_id"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy("batch_id", "history_id")
   }
@@ -884,10 +874,7 @@ object DedupQueries {
     * corpus dedup actually keeps. One row per non-singleton cluster. */
   val q83BestKeeper: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     val members = Clusters.assign(pairs, "doc_a", "doc_b")
       .join(d.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
     Clusters.representativesBy(members, "id", "cluster",
@@ -903,10 +890,7 @@ object DedupQueries {
     * identical clustering. */
   val q92StarClusters: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
-    val sh = d.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh",
-      numHashes = 64, numBands = 16, threshold = 0.8)
+    val pairs = nearDupPairs(d)
     Clusters.connectedComponentsStar(pairs, "doc_a", "doc_b")
       .select(col("v").as("doc_id"), col("component").as("cluster"),
         (col("v") === col("component")).as("is_representative"))
@@ -1057,9 +1041,7 @@ object DedupQueries {
         .select("doc_id", "source", "text")
     }
     // 3. near-dup clusters at J >= 0.8; drop non-representatives
-    val sh = s1.select(col("doc_id"),
-      graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairsHashed(sh, "doc_id", "sh", 64, 16, 0.8)
+    val pairs = nearDupPairs(s1)
     val dupes = Clusters.assign(pairs, "doc_a", "doc_b")
       .filter(!col("is_representative")).select(col("id").as("doc_id"))
     val s2 = s1.join(Checkpoints.guardedBroadcast(dupes),
@@ -1136,12 +1118,10 @@ object DedupQueries {
     // the bucketed table is the cross-JVM variant (its write amortizes
     // across sessions, which a checkpoint cannot), but within one
     // session the in-memory index wins and is the default here.
-    val history = Checkpoints.materialize(Tables(s, dir, "documents")
-      .filter(col("source") === "src0")
-      .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh")))
+    val history = Checkpoints.materialize(
+      wordGrams(Tables(s, dir, "documents").filter(col("source") === "src0")))
     val histBands = Checkpoints.materialize(MinHashLSH.historyBandRows(history,
-      "doc_id", "sh", numHashes = 64, numBands = 16))
+      "doc_id", "sh", NumHashes, NumBands))
     def deliverAll(run: String): Unit = {
       val q = Tables.stream(s, dir, "documents")
         .writeStream
@@ -1197,11 +1177,9 @@ object DedupQueries {
   private[graft] def neardupBatchToSink(batch: DataFrame, histBands: DataFrame,
                                         history: DataFrame, out: String,
                                         batchId: Long): Unit = {
-    val b = batch.filter(col("source") =!= "src0")
-      .select(col("doc_id"),
-        graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+    val b = wordGrams(batch.filter(col("source") =!= "src0"))
     val flagged = MinHashLSH.nearDupAgainstBandRows(b, histBands, history,
-      "doc_id", "sh", numHashes = 64, numBands = 16, threshold = 0.8)
+      "doc_id", "sh", NumHashes, NumBands, Threshold)
     graft.sinks.Sinks.idempotentAppend(
       flagged.withColumn("part", lit(batchId)), out, Seq("part"))
   }

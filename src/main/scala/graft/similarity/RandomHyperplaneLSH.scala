@@ -81,21 +81,13 @@ object RandomHyperplaneLSH {
     * space fully saturated (8192/8192 buckets occupied), and the
     * downstream join spilled 8.6 GiB. The PRIMARY remedy is sizing bits
     * to the corpus (bits ≈ log2(n / targetBucket) — more planes, finer
-    * buckets); this guard is the backstop for the hot tail that survives
-    * any fixed operating point: drop membership rows of buckets larger
-    * than `maxBucket` before pairing (MinHashLSH.capBuckets semantics —
-    * an over-full sign-bucket means the planes do not separate that
-    * region, so its pairs are mostly non-neighbors). The window count
-    * rides the exchange+sort the bucket self-join needs anyway. */
-  private def capBuckets(rows: DataFrame, maxBucket: Int): DataFrame =
-    if (maxBucket == Int.MaxValue) rows
-    else rows
-      .withColumn("__bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("table", "sig")))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
-
-  /** Default self-join bucket cap: ≥4× the largest bucket observed at
+    * buckets); the backstop for the hot tail that survives any fixed
+    * operating point is [[selfCandidates]]' `maxBucket` guard
+    * ([[graft.ops.BucketCap]] over (table, sig) — an over-full
+    * sign-bucket means the planes do not separate that region, so its
+    * pairs are mostly non-neighbors).
+    *
+    * Default self-join bucket cap: ≥4× the largest bucket observed at
     * the oracle scale factors (max 14 at sf0.1), so the guard is
     * output-invisible at every SF the DuckDB oracle checks, while
     * bounding per-bucket pair work at rehearsal/warehouse scale. */
@@ -104,25 +96,16 @@ object RandomHyperplaneLSH {
   /** Distinct candidate pairs of ONE table with itself (the near-dup /
     * kNN-graph shape). `ordered = true` emits each pair once as (a < b);
     * `false` emits both directions (every vector as a query). Buckets
-    * larger than `maxBucket` are dropped entirely — see [[capBuckets]]. */
+    * larger than `maxBucket` are dropped entirely — see [[DefaultMaxBucket]]. */
   def selfCandidates(df: DataFrame, idCol: String, vecCol: String,
                      numTables: Int, bits: Int, dims: Int,
                      ordered: Boolean,
                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val b = capBuckets(buckets(df, idCol, vecCol, numTables, bits, dims), maxBucket)
+    val b = graft.ops.BucketCap(buckets(df, idCol, vecCol, numTables, bits, dims),
+      maxBucket, "table", "sig")
     val pred = if (ordered) col("a") < col("b") else col("a") =!= col("b")
     b.toDF("a", "table", "sig").join(b.toDF("b", "table", "sig"), Seq("table", "sig"))
       .filter(pred)
       .select("a", "b").distinct()
   }
-
-  /** Audit of what [[selfCandidates]]' guard drops: every (table, sig)
-    * bucket above `maxBucket` with its size. Empty ⇒ the cap is a no-op
-    * at this corpus size; non-empty at scale ⇒ raise bits. */
-  def oversizedBuckets(df: DataFrame, idCol: String, vecCol: String,
-                       numTables: Int, bits: Int, dims: Int,
-                       maxBucket: Int = DefaultMaxBucket): DataFrame =
-    buckets(df, idCol, vecCol, numTables, bits, dims)
-      .groupBy("table", "sig").agg(count(lit(1)).as("n_vecs"))
-      .filter(col("n_vecs") > maxBucket)
 }

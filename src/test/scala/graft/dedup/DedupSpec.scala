@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.text.TextOps
@@ -49,13 +50,15 @@ class DedupSpec extends SparkSpec {
 
   // ---- MinHash LSH ----
 
+  private def wordHashed(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
+    .select(col("doc_id"), graft.expressions.NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+
   test("minhash LSH finds a planted near-dup pair and not the unrelated doc") {
     val base = (1 to 80).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 80).map(i => if (i == 40) "CHANGED" else s"tok$i").mkString(" ")
     val other = (1 to 80).map(i => s"zzz$i").mkString(" ")
-    val d = docs(1L -> base, 2L -> nearDup, 3L -> other)
-      .select(col("doc_id"), TextOps.wordShingles(TextOps.tokens(col("text")), 3).as("sh"))
-    val pairs = MinHashLSH.nearDupPairs(d, "doc_id", "sh", 64, 16, 0.8)
+    val d = wordHashed(Seq(1L -> base, 2L -> nearDup, 3L -> other))
+    val pairs = MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect()
     assert(pairs.sameElements(Array((1L, 2L))))
   }
@@ -65,70 +68,64 @@ class DedupSpec extends SparkSpec {
     val nearDup = (1 to 80).map(i => if (i == 40) "CHANGED" else s"tok$i").mkString(" ")
     val nearDup2 = (1 to 80).map(i => if (i == 41) "ALSO" else s"tok$i").mkString(" ")
     val other = (1 to 80).map(i => s"zzz$i").mkString(" ")
-    import graft.expressions.NgramHashes
-    def hashed(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
-      .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
     // history: base + unrelated; batch: two near-dups of base (which also
     // near-dup EACH OTHER — that within-batch pair must NOT be reported)
-    val history = hashed(1L -> base, 2L -> other)
-    val batch = hashed(10L -> nearDup, 11L -> nearDup2)
+    val history = wordHashed(Seq(1L -> base, 2L -> other))
+    val batch = wordHashed(Seq(10L -> nearDup, 11L -> nearDup2))
     val got = MinHashLSH.nearDupAgainstHashed(batch, history, "doc_id", "sh",
         numHashes = 64, numBands = 16, threshold = 0.8)
       .select("batch_id", "history_id").as[(Long, Long)].collect().toSet
     assert(got == Set((10L, 1L), (11L, 1L)))
   }
 
-  test("hot-bucket guard: 1k identical docs stay near-linear; honest pairs survive") {
-    // 1000 byte-identical docs — WITHOUT the guard their shared band
-    // buckets emit ~1000²/2 ≈ 500k candidate pairs; the cap drops those
-    // buckets entirely, and the honest near-dup pair (its buckets hold 2
-    // docs) is untouched.
+  test("hot-bucket guard: identical docs past MaxBucket stay near-linear; " +
+       "honest pairs survive") {
+    // MaxBucket + 200 byte-identical docs — WITHOUT the guard their
+    // shared band buckets emit ~1200²/2 ≈ 720k candidate pairs; the cap
+    // drops those buckets entirely, and the honest near-dup pair (its
+    // buckets hold 2 docs) is untouched.
     val boiler = (1 to 60).map(i => s"boiler$i").mkString(" ")
     val base = (1 to 80).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 80).map(i => if (i == 40) "CHANGED" else s"tok$i").mkString(" ")
-    val rows = (1L to 1000L).map(_ -> boiler) ++ Seq(2000L -> base, 2001L -> nearDup)
-    val d = docs(rows: _*)
-      .select(col("doc_id"), TextOps.wordShingles(TextOps.tokens(col("text")), 3).as("sh"))
-    val sigs = MinHashLSH.signatures(d, "doc_id", "sh", 64)
-
-    // audit view: every band's boilerplate bucket is over the cap
-    val dropped = MinHashLSH.oversizedBuckets(sigs, "doc_id", "__sig",
-      numBands = 16, rowsPerBand = 4, maxBucket = 500)
-    assert(dropped.count() == 16)
-    assert(dropped.agg(max("n_docs")).as[Long].collect()(0) == 1000L)
-
-    val cands = MinHashLSH.candidatePairs(sigs, "doc_id", "__sig",
-      numBands = 16, rowsPerBand = 4, maxBucket = 500)
-    val got = cands.as[(Long, Long)].collect()
+    val copies = MinHashLSH.MaxBucket + 200L
+    val d = wordHashed((1L to copies).map(_ -> boiler) ++
+      Seq(5000L -> base, 5001L -> nearDup))
+    val sigs = MinHashLSH.signaturesFromHashArray(d, "doc_id", "sh", 64)
+    val got = MinHashLSH.candidatePairs(sigs, "doc_id", "__sig",
+      numBands = 16, rowsPerBand = 4).as[(Long, Long)].collect()
     assert(got.length == 1, s"expected 1 candidate pair, got ${got.length}")
-    assert(got(0) == ((2000L, 2001L)))
+    assert(got(0) == ((5000L, 5001L)))
 
-    // end-to-end at the same cap: verified output is exactly the honest pair
-    val pairs = MinHashLSH.nearDupPairs(d, "doc_id", "sh", 64, 16, 0.8, maxBucket = 500)
+    // end to end: verified output is exactly the honest pair
+    val pairs = MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8)
       .select("doc_a", "doc_b").as[(Long, Long)].collect()
-    assert(pairs.sameElements(Array((2000L, 2001L))))
+    assert(pairs.sameElements(Array((5000L, 5001L))))
   }
 
   test("hot-bucket guard caps the bipartite gate's history side too") {
-    import graft.expressions.NgramHashes
     val boiler = (1 to 60).map(i => s"boiler$i").mkString(" ")
     val base = (1 to 80).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 80).map(i => if (i == 40) "CHANGED" else s"tok$i").mkString(" ")
-    def hashed(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-      .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    val history = hashed((1L to 800L).map(_ -> boiler) :+ (900L -> base))
-    val batch = hashed(Seq(1000L -> boiler, 1001L -> nearDup))
+    val copies = MinHashLSH.MaxBucket + 100L
+    val history = wordHashed((1L to copies).map(_ -> boiler) :+ (5000L -> base))
+    val batch = wordHashed(Seq(6000L -> boiler, 6001L -> nearDup))
     val got = MinHashLSH.nearDupAgainstHashed(batch, history, "doc_id", "sh",
-        numHashes = 64, numBands = 16, threshold = 0.8, maxBucket = 500)
+        numHashes = 64, numBands = 16, threshold = 0.8)
       .select("batch_id", "history_id").as[(Long, Long)].collect().toSet
     // the boilerplate match is suppressed by the cap; the honest one survives
-    assert(got == Set((1001L, 900L)))
+    assert(got == Set((6001L, 5000L)))
   }
 
   test("verify router: boilerplate density, not corpus size, picks the form") {
-    import graft.expressions.NgramHashes
-    def hashed(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-      .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+    // the routing decision nearDupPairsHashed makes past AutoSmallCorpusN,
+    // from the exact candidate count C
+    def routesInBand(rows: Seq[(Long, String)]): Boolean = {
+      val h = wordHashed(rows)
+      val c = MinHashLSH.candidatePairs(
+        MinHashLSH.signaturesFromHashArray(h, "doc_id", "sh", 64),
+        "doc_id", "__sig", numBands = 16, rowsPerBand = 4).count()
+      MinHashLSH.inBandWins(c, h.count(), numBands = 16)
+    }
     // 2000 docs = 20 templates × 100 copies: identical copies collide in
     // every band, so C = 20·C(100,2) ≈ 99k distinct candidate pairs and
     // 2C/(n·B) = (copies−1)/16 ≈ 6.2 — the fetch form would ship each
@@ -136,50 +133,35 @@ class DedupSpec extends SparkSpec {
     // crossover (the old router) would have called this Fetch; the
     // measured candidate count calls it InBand (6.2 > κ = 2.9 with 2×
     // margin).
-    val boiler = (1L to 2000L).map(i =>
-      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" "))
-    // the in-band FAMILY; long-array shingles run the two-tier member
-    assert(MinHashLSH.chooseVerifyForm(hashed(boiler), "doc_id", "sh",
-      numHashes = 64, numBands = 16, rowsPerBand = 4)
-      == MinHashLSH.VerifyForm.InBandTwoTier)
+    assert(routesInBand((1L to 2000L).map(i =>
+      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" "))))
     // 300 all-distinct docs: buckets are singletons, zero expected
     // partners — Fetch.
-    val sparse = (1L to 300L).map(i =>
-      i -> (1 to 40).map(w => s"doc${i}_w$w").mkString(" "))
-    assert(MinHashLSH.chooseVerifyForm(hashed(sparse), "doc_id", "sh",
-      numHashes = 64, numBands = 16, rowsPerBand = 4)
-      == MinHashLSH.VerifyForm.Fetch)
+    assert(!routesInBand((1L to 300L).map(i =>
+      i -> (1 to 40).map(w => s"doc${i}_w$w").mkString(" "))))
     // BOUNDARY pin for the round-11 recalibration: 42 copies/template
     // puts 2C/(n·B) = (42−1)/16 ≈ 2.56 INSIDE the old κ=2 in-band
     // region but BELOW the measured crossover (×60 probe: fetch still
     // wins at 2.83; κ = 2.9). This corpus must route Fetch — it
     // regresses if κ ever drifts back under ~2.6.
-    val boundary = (1L to 840L).map(i =>
-      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" "))
-    assert(MinHashLSH.chooseVerifyForm(hashed(boundary), "doc_id", "sh",
-      numHashes = 64, numBands = 16, rowsPerBand = 4)
-      == MinHashLSH.VerifyForm.Fetch)
+    assert(!routesInBand((1L to 840L).map(i =>
+      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" "))))
   }
 
   test("Auto on a small corpus short-circuits to Fetch: no candidate-set " +
        "materialization, identical pairs") {
-    import graft.expressions.NgramHashes
     // In-band-WINNING density (same 20-template × 100-copy shape the
     // router test proves routes InBand by cost model) but n = 2000 ≤
-    // AutoSmallCorpusN: Auto must skip the routing count entirely — the
-    // eager localCheckpoint is a fixed cost that roughly doubled q18 at
-    // sf0.1 (round-11 verdict #7) and is noise-level savings at small n.
-    val boiler = (1L to 2000L).map(i =>
-      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" "))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
+    // AutoSmallCorpusN: routing must skip the candidate count entirely —
+    // the eager localCheckpoint is a fixed cost that roughly doubled q18
+    // at sf0.1 and is noise-level savings at small n.
+    val boiler = wordHashed((1L to 2000L).map(i =>
+      i -> (1 to 40).map(w => s"tpl${i % 20}_w$w").mkString(" ")))
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val auto = MinHashLSH.nearDupPairsHashed(boiler, "doc_id", "sh", 64, 16, 0.8,
-      verify = MinHashLSH.VerifyForm.Auto)
+    val auto = MinHashLSH.nearDupPairsHashed(boiler, "doc_id", "sh", 64, 16, 0.8)
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
       "small-corpus Auto must not materialize (localCheckpoint) the candidate set")
-    val fetch = MinHashLSH.nearDupPairsHashed(boiler, "doc_id", "sh", 64, 16, 0.8,
-      verify = MinHashLSH.VerifyForm.Fetch)
+    val fetch = MinHashLSH.fetchPairs(boiler, "doc_id", "sh", 64, 16, 0.8)
     assert(auto.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet ==
       fetch.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet)
   }
@@ -191,7 +173,7 @@ class DedupSpec extends SparkSpec {
     // count decides in-band: 110k docs = 20 templates × 5.5k copies.
     // inBandWins needs 2C > 2.9·n·16 ≈ 5.1M; C = 20·C(5500,2) ≈ 302M
     // DISTINCT pairs would be enormous — but candidatePairs caps hot
-    // buckets at maxBucket, so use a lowered cap corpus: 1100 templates
+    // buckets at MaxBucket, so use a capped-bucket corpus: 1100 templates
     // × 100 copies = 110k docs, C = 1100·C(100,2) ≈ 5.45M > 2.55M ✓.
     // The in-band branch RETURNS AN UNEXECUTED PLAN; the routing
     // checkpoint must already be unpersisted when the call returns —
@@ -201,28 +183,43 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text").repartition(32)
       .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val plan = MinHashLSH.nearDupPairsHashed(big, "doc_id", "sh", 64, 16, 0.8,
-      verify = MinHashLSH.VerifyForm.Auto)
+    val plan = MinHashLSH.nearDupPairsHashed(big, "doc_id", "sh", 64, 16, 0.8)
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
       "in-band-winning Auto must unpersist the routing checkpoint before returning")
     assert(plan.columns.contains("jaccard")) // plan built, never executed here
   }
 
+  test("construction jobs: the routed self-join runs only its row count; " +
+       "the bipartite gate and the history index run none") {
+    val d = wordHashed((1L to 300L).map(i =>
+      i -> (1 to 40).map(w => s"doc${i}_w$w").mkString(" ")))
+    val hist = d.filter(col("doc_id") <= 100L)
+    assert(d.count() <= MinHashLSH.AutoSmallCorpusN)
+    // the routing row count, which adaptive execution runs as two jobs
+    // (its exchange's map stage, then the final aggregate)
+    val rowCount = jobsOf(d.select(col("doc_id")).count())
+    assert(rowCount == 2)
+    assert(jobsOf(MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8)) == rowCount)
+    assert(jobsOf(MinHashLSH.nearDupAgainstHashed(d, hist, "doc_id", "sh", 64, 16, 0.8)) == 0)
+    assert(jobsOf(MinHashLSH.historyBandRows(hist, "doc_id", "sh", 64, 16)) == 0)
+  }
+
+  /** (fetch, in-band two-tier) pairs of `d`, each form run unrouted. */
+  private def bothForms(d: DataFrame) = {
+    def run(form: (DataFrame, String, String, Int, Int, Double) => DataFrame) =
+      form(d, "doc_id", "sh", 64, 16, 0.8)
+        .select("doc_a", "doc_b", "jaccard")
+        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
+    (run(MinHashLSH.fetchPairs), run(MinHashLSH.inBandTwoTierPairs))
+  }
+
   test("explicit verify forms produce the identical pair set (no routing job)") {
-    import graft.expressions.NgramHashes
     val base = (1 to 80).map(i => s"tok$i").mkString(" ")
     val nearDup = (1 to 80).map(i => if (i == 40) "CHANGED" else s"tok$i").mkString(" ")
     val near2 = (1 to 80).map(i => if (i == 7) "OTHER" else s"tok$i").mkString(" ")
     val other = (1 to 80).map(i => s"zzz$i").mkString(" ")
-    val d = Seq(1L -> base, 2L -> nearDup, 3L -> near2, 4L -> other)
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), NgramHashes.word_ngram_hashes(col("text"), 3).as("sh"))
-    def run(form: MinHashLSH.VerifyForm) =
-      MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8, verify = form)
-        .select("doc_a", "doc_b", "jaccard")
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
-    val fetch = run(MinHashLSH.VerifyForm.Fetch)
-    val twoTier = run(MinHashLSH.VerifyForm.InBandTwoTier)
+    val (fetch, twoTier) = bothForms(
+      wordHashed(Seq(1L -> base, 2L -> nearDup, 3L -> near2, 4L -> other)))
     assert(fetch.nonEmpty && fetch.sameElements(twoTier))
   }
 
@@ -247,66 +244,39 @@ class DedupSpec extends SparkSpec {
         typedLit(b.map(x => x & 0xffffL).distinct.sorted.toSeq)).as("j"))
       .as[Double].collect()(0)
     assert(naive < 0.8, s"construction broken: naive truncated J $naive not < 0.8")
-    def run(form: MinHashLSH.VerifyForm) =
-      MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8, verify = form)
-        .select("doc_a", "doc_b", "jaccard")
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
-    val fetch = run(MinHashLSH.VerifyForm.Fetch)
-    val twoTier = run(MinHashLSH.VerifyForm.InBandTwoTier)
+    val (fetch, twoTier) = bothForms(d)
     assert(fetch.sameElements(twoTier))
     assert(twoTier.map(p => (p._1, p._2)).toSet == Set((1L, 2L)),
       s"expected the true near-dup pair to survive, got ${twoTier.mkString(",")}")
   }
 
   test("two-tier verify is safe on MULTISET shingle arrays") {
-    // Auto-routing picks the two-tier member on element type alone, so a
-    // multiset array<bigint> pipeline (per-occurrence hashes, no
-    // distinct) can reach it. A and B here are the SAME 100-element set
-    // (exact set J = 1.0) but A carries every element twice: a
-    // physical-length bound would give i_up = Σ min(2, 1) = 100,
+    // A multiset array<bigint> pipeline (per-occurrence hashes, no
+    // distinct) can reach the two-tier form. A and B here are the SAME
+    // 100-element set (exact set J = 1.0) but A carries every element
+    // twice: a physical-length bound would give i_up = Σ min(2, 1) = 100,
     // J_up = 100/(200+100-100) = 0.5 < 0.8 and silently DROP the pair.
-    // The two-tier entry self-enforces the bound's distinct-elements
-    // precondition (scan-side array_distinct), so the pair survives and
+    // The two-tier form self-enforces the bound's distinct-elements
+    // precondition (trunc_hashes_distinct), so the pair survives and
     // matches the duplicate-insensitive fetch form exactly.
     val set = (1L to 100L).toArray
-    val d = Seq(1L -> (set ++ set), 2L -> set).toDF("doc_id", "sh")
-    def run(form: MinHashLSH.VerifyForm) =
-      MinHashLSH.nearDupPairsHashed(d, "doc_id", "sh", 64, 16, 0.8, verify = form)
-        .select("doc_a", "doc_b", "jaccard")
-        .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
-    val fetch = run(MinHashLSH.VerifyForm.Fetch)
-    val twoTier = run(MinHashLSH.VerifyForm.InBandTwoTier)
+    val (fetch, twoTier) = bothForms(Seq(1L -> (set ++ set), 2L -> set).toDF("doc_id", "sh"))
     assert(fetch.sameElements(twoTier))
     assert(twoTier.map(p => (p._1, p._2, p._3)).toSet == Set((1L, 2L, 1.0)),
       s"expected the identical-set pair at J=1.0, got ${twoTier.mkString(",")}")
   }
 
-  test("minhash signature is deterministic across evaluations") {
-    val d = docs(1L -> "a b c d e f g h")
-      .select(TextOps.wordShingles(TextOps.tokens(col("text")), 3).as("sh"))
-    val s1 = d.select(MinHashLSH.signature(col("sh"), 16).as("s")).as[Seq[Long]].collect()(0)
-    val s2 = d.select(MinHashLSH.signature(col("sh"), 16).as("s")).as[Seq[Long]].collect()(0)
-    assert(s1 == s2 && s1.length == 16)
-  }
-
   test("minhash signature agreement estimates jaccard (statistical property)") {
-    // sets with known overlap: |A∩B|/|A∪B| = 60/140 ≈ 0.4286
-    val a = (1 to 100).map(i => s"t$i")
-    val b = (41 to 180).map(i => s"t$i")
-    val df = Seq((1L, a), (2L, b)).toDF("id", "sh")
-    val sigs = MinHashLSH.signatures(df, "id", "sh", 128)
-      .orderBy("id").select("__sig").as[Seq[Long]].collect()
+    // hashed sets with known overlap: |A∩B| = 60, |A∪B| = 180
+    val rnd = new scala.util.Random(7)
+    val hs = Seq.fill(180)(rnd.nextLong())
+    val (a, b) = (hs.take(100), hs.drop(40))
+    val sigs = Seq((1L, a), (2L, b)).toDF("id", "sh")
+      .select(col("id"), graft.expressions.MinHashSig.minhash_sig(col("sh"), 128).as("sig"))
+      .orderBy("id").select("sig").as[Seq[Long]].collect()
     val agree = sigs(0).zip(sigs(1)).count { case (x, y) => x == y }.toDouble / 128
-    val trueJ = 60.0 / 180.0 // |A∩B|=60, |A∪B|=180
+    val trueJ = 60.0 / 180.0
     assert(math.abs(agree - trueJ) < 0.15, s"estimate $agree vs true $trueJ")
-  }
-
-  test("jaccard: identical sets 1.0, disjoint sets 0.0") {
-    val d = Seq((Seq("a", "b"), Seq("a", "b"), Seq("c", "d"))).toDF("x", "y", "z")
-    val row = d.select(
-      MinHashLSH.jaccard(col("x"), col("y")).as("same"),
-      MinHashLSH.jaccard(col("x"), col("z")).as("disj")).collect()(0)
-    assert(row.getDouble(0) == 1.0 && row.getDouble(1) == 0.0)
   }
 
   // ---- SimHash ----

@@ -13,16 +13,10 @@ class MinHashSigSpec extends SparkSpec {
       (i.toLong, Seq.fill(50)(rnd.nextLong()))).toDF("id", "hs")
     val viaKernel = docs.select(col("id"), minhash_sig(col("hs"), 16).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
-    // the aggregation formulation the kernel replaced
-    val p = MinHashSig.P
-    val cs = MinHashSig.coeffs(16)
+    // the aggregation formulation q160 runs over its own base hashes
     val exploded = docs.select(col("id"), explode(col("hs")).as("h0"))
-      .select(col("id"), pmod(col("h0"), lit(p)).as("h"))
-    val aggs = cs.zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("h") * a + b, lit(p))).as(s"m$i")
-    }
-    val viaAgg = exploded.groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(col("id"), array((0 until 16).map(i => col(s"m$i")): _*).as("sig"))
+      .select(col("id"), pmod(col("h0"), lit(MinHashSig.P)).as("h"))
+    val viaAgg = graft.dedup.MinHashLSH.signaturesFromBaseRows(exploded, "id", "h", 16)
       .as[(Long, Seq[Long])].collect().toMap
     assert(viaKernel == viaAgg)
   }

@@ -73,13 +73,9 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs(Int.MaxValue).size == 20 * 19 / 2)
     assert(pairs(64) == pairs(Int.MaxValue))    // slack cap is output-invisible
     assert(pairs(10).isEmpty)                    // every shared bucket is over-full
-    // the audit names exactly the buckets the cap would drop
-    val over = RandomHyperplaneLSH.oversizedBuckets(df, "vec_id", "vec",
-      numTables = 4, bits = 4, dims = 8, maxBucket = 10)
-      .as[(Int, Int, Long)].collect()
-    assert(over.length == 4 && over.forall(_._3 == 20L))
-    assert(RandomHyperplaneLSH.oversizedBuckets(df, "vec_id", "vec",
-      numTables = 4, bits = 4, dims = 8, maxBucket = 64).isEmpty)
+    // the cap is inclusive: the 20-member buckets survive at exactly 20
+    assert(pairs(20) == pairs(Int.MaxValue))
+    assert(pairs(19).isEmpty)
   }
 
   test("selfCandidates ordered=false emits both directions of each pair") {
