@@ -460,7 +460,7 @@ object SimilarityQueries {
     // time 60 → 92 s (and 5.7 → 8.5 s at sf0.1) — a 64-dim vector is
     // ~512 B, so re-fetching it per candidate partner is cheap, while
     // the in-band join materializes two vector payloads per PAIR ROW and
-    // drags them through the capBuckets window. In-band wins when the
+    // drags them through the BucketCap window. In-band wins when the
     // ridden payload is corpus-text-sized (MinHash shingle arrays,
     // 4–16 KB/doc); for short fixed-width vectors fetch is the right
     // physical form at every measured scale.

@@ -21,7 +21,7 @@ query present in both files (`only-old`/`only-new` otherwise), then a
 unified diff of each changed plan with `--diff`. Exits 1 when any shared
 query changed or a query is missing from one side.
 
-Usage: plan_diff.py OLD.txt NEW.txt [--diff] [--only=q1,q2]
+Usage: plan_diff.py OLD.txt NEW.txt [--diff]
 """
 import difflib
 import re
@@ -62,13 +62,10 @@ def plans(text):
     return out
 
 
-def compare(old, new, only=None, show_diff=False):
+def compare(old, new, show_diff=False):
     """Print one status line per query; return True when all are same."""
-    names = sorted(set(old) | set(new))
-    if only:
-        names = [n for n in names if n in only]
     ok = True
-    for name in names:
+    for name in sorted(set(old) | set(new)):
         if name not in new:
             status = "only-old"
         elif name not in old:
@@ -88,15 +85,11 @@ def main(argv):
     args = [a for a in argv if not a.startswith("--")]
     if len(args) != 2:
         raise SystemExit(__doc__)
-    only = None
-    for a in argv:
-        if a.startswith("--only="):
-            only = set(a[len("--only="):].split(","))
     with open(args[0]) as f:
         old = plans(f.read())
     with open(args[1]) as f:
         new = plans(f.read())
-    return 0 if compare(old, new, only, "--diff" in argv) else 1
+    return 0 if compare(old, new, "--diff" in argv) else 1
 
 
 if __name__ == "__main__":

@@ -76,8 +76,6 @@ class PlanDiffTest(unittest.TestCase):
         code, out = run(peek(), peek(extra=extra))
         self.assertEqual(code, 1)
         self.assertIn("only-new  q35_char_ngram_pairs", out)
-        code, out = run(peek(), peek(extra=extra), "--only=q18_minhash_pairs")
-        self.assertEqual(code, 0)
 
 
 if __name__ == "__main__":
