@@ -2,10 +2,11 @@ package graft.expressions
 
 import org.apache.spark.sql.{Column, GraftExpressionBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct 64-bit hashes of a string's k-shingles, computed in one tight
@@ -88,67 +89,97 @@ object NgramHashes {
     h
   }
 
-  /** Static kernel: distinct FNV-1a hashes of k-char windows. */
+  /** Static kernel: distinct FNV-1a hashes of k-char windows, in
+    * first-occurrence order. */
   def charGrams(u: UTF8String, k: Int): ArrayData = {
     val s = u.toString
-    if (s.length < k) return new GenericArrayData(Array(fnv1a(s, 0, s.length)))
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var i = 0
+    if (s.length < k) return single(fnv1a(s, 0, s.length))
     val last = s.length - k
+    val seen = new OrderedLongSet(last + 1)
+    var i = 0
     while (i <= last) {
       seen.add(fnv1a(s, i, i + k))
       i += 1
     }
-    toArrayData(seen)
+    seen.toArrayData
   }
 
-  /** Static kernel: distinct FNV-1a hashes of k-word windows. Tokens are
-    * maximal non-whitespace runs; windows hash as "w1 w2 ... wk" (the
-    * single-space joiner hashes as ' ' between token spans). */
+  /** Static kernel: distinct FNV-1a hashes of k-word windows, in
+    * first-occurrence order. Tokens are maximal non-whitespace runs;
+    * windows hash as "w1 w2 ... wk" (the single-space joiner hashes as
+    * ' ' between token spans). */
   def wordGrams(u: UTF8String, k: Int): ArrayData = {
     val s = u.toString
-    // token spans [start, end)
-    val starts = new scala.collection.mutable.ArrayBuffer[Int]()
-    val ends = new scala.collection.mutable.ArrayBuffer[Int]()
+    // token t spans [spans(2t), spans(2t + 1))
+    var spans = new Array[Int](64)
+    var n = 0
     var i = 0
     while (i < s.length) {
       if (!Character.isWhitespace(s.charAt(i))) {
-        starts += i
+        if (2 * n + 2 > spans.length) spans = java.util.Arrays.copyOf(spans, 2 * spans.length)
+        spans(2 * n) = i
         while (i < s.length && !Character.isWhitespace(s.charAt(i))) i += 1
-        ends += i
+        spans(2 * n + 1) = i
+        n += 1
       } else i += 1
     }
-    val n = starts.length
-    def gramHash(w0: Int, nWords: Int): Long = {
-      var h = FnvOffset
-      var w = w0
-      val stop = w0 + nWords
-      while (w < stop) {
-        var j = starts(w)
-        val e = ends(w)
-        while (j < e) { h = (h ^ s.charAt(j)) * FnvPrime; j += 1 }
-        if (w < stop - 1) h = (h ^ ' ') * FnvPrime
-        w += 1
-      }
-      h
-    }
-    if (n < k) return new GenericArrayData(Array(gramHash(0, n)))
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var w0 = 0
+    if (n < k) return single(gramHash(s, spans, 0, n))
     val lastW = n - k
+    val seen = new OrderedLongSet(lastW + 1)
+    var w0 = 0
     while (w0 <= lastW) {
-      seen.add(gramHash(w0, k))
+      seen.add(gramHash(s, spans, w0, k))
       w0 += 1
     }
-    toArrayData(seen)
+    seen.toArrayData
   }
 
-  private def toArrayData(seen: java.util.LinkedHashSet[java.lang.Long]): ArrayData = {
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
+  /** FNV-1a of the words `w0 until w0 + nWords`, joined by one space. */
+  private def gramHash(s: String, spans: Array[Int], w0: Int, nWords: Int): Long = {
+    var h = FnvOffset
+    var w = w0
+    val stop = w0 + nWords
+    while (w < stop) {
+      var j = spans(2 * w)
+      val e = spans(2 * w + 1)
+      while (j < e) { h = (h ^ s.charAt(j)) * FnvPrime; j += 1 }
+      if (w < stop - 1) h = (h ^ ' ') * FnvPrime
+      w += 1
+    }
+    h
+  }
+
+  private def single(h: Long): ArrayData = UnsafeArrayData.fromPrimitiveArray(Array(h))
+
+  /** Open-addressing set of longs that keeps first-occurrence order:
+    * the distinct values sit in `values(0 until size)`, and each used
+    * slot holds its value's index + 1 (0 is empty). Sized for
+    * `maxItems` at a load factor of at most 1/2, so it never grows. */
+  private final class OrderedLongSet(maxItems: Int) {
+    private val values = new Array[Long](maxItems)
+    private var size = 0
+    private val slots = new Array[Int](Integer.highestOneBit(math.max(2 * maxItems - 1, 1)) << 1)
+    private val mask = slots.length - 1
+    private val shift = 64 - Integer.numberOfTrailingZeros(slots.length)
+
+    def add(v: Long): Unit = {
+      // Fibonacci hashing: the top bits of v * 2^64/phi pick the slot
+      var i = ((v * 0x9e3779b97f4a7c15L) >>> shift).toInt
+      while (true) {
+        val at = slots(i)
+        if (at == 0) {
+          values(size) = v
+          size += 1
+          slots(i) = size
+          return
+        }
+        if (values(at - 1) == v) return
+        i = (i + 1) & mask
+      }
+    }
+
+    def toArrayData: ArrayData =
+      UnsafeArrayData.fromPrimitiveArray(values, Platform.LONG_ARRAY_OFFSET, size, 8)
   }
 
   def char_ngram_hashes(c: Column, k: Int): Column =

@@ -48,11 +48,11 @@ object CurationQueries {
       .orderBy("doc_id")
   }
 
-  /** Exact n-gram decontamination with a Bloom prefilter: train docs
-    * (md5 bucket < 80, as q40/q44) sharing any word-8-gram with the test
-    * split (bucket >= 90). The Bloom filter prunes the corpus scan
-    * map-side; an exact semi-join re-verifies, so false positives never
-    * surface. */
+  /** Exact n-gram decontamination: train docs (md5 bucket < 80, as
+    * q40/q44) sharing any word-8-gram with the test split (bucket >= 90).
+    * The test split's distinct n-grams are materialized once with their
+    * count; a split this size is broadcast into an exact semi-join (a
+    * larger one would take the Bloom prune + exact verify form). */
   val q57BloomDecontam: Q = (s, dir) => {
     val d = Tables(s, dir, "documents")
     val bucket = pmod(TextOps.md5Int32(col("text")), lit(100))

@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Reusable per-input working directories for the streaming harnesses,
   * keyed by CONTENT, not just path.
   *
-  * The harnesses (q151/q156/q158/q161 staging, q167/q171 kept/seen
-  * tables, q147/q86 sinks) reuse a keyed dir across runs: staging is
-  * skip-if-present and the pipelines are certified idempotent under full
-  * redelivery. Keying by the input-dir STRING alone is unsafe in two
+  * The harnesses' staged input (q151/q156/q158/q161 and the q167/q171/
+  * q173 stream corpus) is reused across runs from a keyed dir: staging is
+  * skip-if-present and the staged files are immutable. Their mutable
+  * artifacts (q167/q171/q173 kept/seen tables, q147/q86 sinks) sit in a
+  * keyed dir private to one application ([[runScoped]]). Keying by the
+  * input-dir STRING alone is unsafe in two
   * ways: (1) if the corpus at that path is regenerated, stale staged
   * files and stale part=N partitions would be silently read into the
   * final aggregate; (2) if a code change alters gating or batch layout
@@ -65,7 +67,11 @@ object KeyedWorkDir {
     * reads a PREVIOUS run's computed bytes. The stale generations age
     * out through the same LRU reaper as content rekeys. */
   def runScoped(spark: SparkSession, layout: String): String =
-    s"$layout@${spark.sparkContext.applicationId}"
+    runScoped(spark.sparkContext.applicationId, layout)
+
+  /** [[runScoped]] for the application `appId`. */
+  private[queries] def runScoped(appId: String, layout: String): String =
+    s"$layout@$appId"
 
   /** Warehouse prefixes holding run-scoped COMPUTED staged state (see
     * [[runScoped]]) — the registry [[dropComputedStaged]] sweeps.
@@ -132,6 +138,14 @@ object KeyedWorkDir {
                         table: String, layout: String): String =
     contentKeyedTable(spark, prefix, dir, Seq(table), layout)
 
+  /** The work dir for (tag, table content, layout). Under a plain
+    * layout tag it is shared by every run on the corpus: fit for
+    * IMMUTABLE staged input only. A harness's MUTABLE artifacts (sinks,
+    * kept/seen tables, streaming checkpoints) go under a [[runScoped]]
+    * layout, private to one application: two processes sharing such a
+    * dir race on its sink partitions, and one's checkpoint cleanup
+    * deletes the other's live checkpoint (`FileNotFoundException:
+    * …/commits does not exist`). */
   def keyed(spark: SparkSession, tag: String, dir: String, table: String,
             layout: String): String = {
     val key = contentKey(spark, dir, table, layout)

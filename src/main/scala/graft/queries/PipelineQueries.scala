@@ -126,13 +126,15 @@ object PipelineQueries {
     * "at-least-once + idempotent sink = exactly-once"). */
   val q86ExactlyOnce: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    // keyed by CONTENT + reused across runs: re-running IS more
-    // redelivery, which the idempotent sink is certified to absorb, but a
-    // REGENERATED corpus must get a fresh sink (stale part=N partitions
-    // from the old corpus would otherwise survive into the aggregate —
-    // see KeyedWorkDir); per-run checkpoints are deleted at the end (the
-    // q167/q147 hygiene pattern)
-    val tmp = KeyedWorkDir.keyed(s, "q86", dir, "documents", layout = "L2")
+    // keyed by CONTENT and private to this application: re-running IS
+    // more redelivery, which the idempotent sink is certified to absorb,
+    // but a REGENERATED corpus must get a fresh sink (stale part=N
+    // partitions from the old corpus would otherwise survive into the
+    // aggregate — see KeyedWorkDir), and another process must never
+    // share it (the checkpoints are deleted at the end, the q167/q147
+    // hygiene pattern)
+    val tmp = KeyedWorkDir.keyed(s, "q86", dir, "documents",
+      KeyedWorkDir.runScoped(s, "L2"))
     val out = s"$tmp/sink"
     def deliverAll(run: String): Unit = {
       val q = Tables.stream(s, dir, "documents")

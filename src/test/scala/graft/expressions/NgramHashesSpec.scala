@@ -89,6 +89,38 @@ class NgramHashesSpec extends SparkSpec {
     }
   }
 
+  test("property: primitive kernels equal the boxed reference on the codegen path (ScalaCheck)") {
+    import org.scalacheck.Gen
+    // Unicode whitespace (EM SPACE, IDEOGRAPHIC SPACE, LINE SEPARATOR),
+    // NBSP and ZWSP (not whitespace to Java), surrogate pairs, CJK,
+    // repeated words, the empty string and texts of fewer than k words
+    val piece = Gen.oneOf(Gen.oneOf("alpha", "beta", "gamma", "x", "é", "\u4e2d\u6587",
+      "\ud83d\ude00", "a\ud835\udd18b", "\u00a0", "\u200b"), Gen.alphaNumStr.map(_.take(6)))
+    val sep = Gen.oneOf(" ", "  ", "\t", "\n", "\u2003", "\u3000", "\u2028", "")
+    val text = Gen.frequency(
+      1 -> Gen.const(""),
+      8 -> Gen.choose(0, 14).flatMap(m => Gen.listOfN(m, Gen.zip(piece, sep)))
+        .map(_.map { case (p, s) => p + s }.mkString))
+    val params = Gen.Parameters.default
+    val samples = (1 to 200).flatMap(i =>
+      text.apply(params, org.scalacheck.rng.Seed(500L + i))) :+ ""
+    // an RDD source, so the projection is compiled, not folded into a
+    // LocalRelation by the optimizer
+    val df = spark.sparkContext.parallelize(samples, 2).toDF("t").select(col("t") +:
+      Seq(1, 3, 5).flatMap(k => Seq(word_ngram_hashes(col("t"), k), char_ngram_hashes(col("t"), k))): _*)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*\\*\\(\\d+\\) Project \\[.*word_ngram_hashes.*"), plan)
+    val rows = df.collect()
+    assert(rows.length == samples.length)
+    rows.foreach { r =>
+      val t = r.getString(0)
+      Seq(1, 3, 5).zipWithIndex.foreach { case (k, j) =>
+        assert(r.getSeq[Long](1 + 2 * j) == NgramHashesReference.wordGrams(t, k), s"word k=$k on '$t'")
+        assert(r.getSeq[Long](2 + 2 * j) == NgramHashesReference.charGrams(t, k), s"char k=$k on '$t'")
+      }
+    }
+  }
+
   test("participates in whole-stage codegen") {
     val df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(char_ngram_hashes(col("text"), 8).as("r"))

@@ -26,6 +26,18 @@ class KeyedWorkDirSpec extends SparkSpec {
     assert(KeyedWorkDir.keyed(spark, tag, "/no/such/dir", "t", "v2") != a)
   }
 
+  test("a run-scoped key gives two applications distinct dirs and one application the same dir") {
+    val tag = s"kwdrun${System.nanoTime()}"
+    def dirOf(app: String) =
+      KeyedWorkDir.keyed(spark, tag, "/no/such/dir", "t", KeyedWorkDir.runScoped(app, "L2"))
+    assert(dirOf("app-1") != dirOf("app-2"))
+    assert(dirOf("app-1") == dirOf("app-1"))
+    // the curation harnesses' mutable dirs are keyed by this application
+    val app = spark.sparkContext.applicationId
+    assert(DedupQueries.curationTmp(spark, tag, "/no/such/dir") ==
+      KeyedWorkDir.keyed(spark, tag, "/no/such/dir", "documents", KeyedWorkDir.runScoped(app, "L2")))
+  }
+
   test("contentKey rekeys when the corpus is REGENERATED at the same path " +
        "(staged-table names must never reuse stale derived state)") {
     import spark.implicits._
