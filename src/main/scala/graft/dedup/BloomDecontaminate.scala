@@ -34,8 +34,9 @@ import org.apache.spark.util.sketch.BloomFilter
   *    prunes the train n-grams map-side (`BloomFilterMightContain`,
   *    codegen'd inside the scan's stage), and a shuffle-hash semi-join
   *    against the same set verifies the survivors exactly, so false
-  *    positives never reach the output. `expectedEvalNgrams` and `fpp`
-  *    size the filter; `BloomFilterAggregate` clamps that sizing to
+  *    positives never reach the output. The filter is sized for the
+  *    larger of the exact count and `expectedEvalNgrams`, at `fpp`;
+  *    `BloomFilterAggregate` clamps that sizing to
   *    `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` (items) and
   *    `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` (bits), which
   *    only lets more false positives reach the exact verify.
@@ -50,19 +51,27 @@ import org.apache.spark.util.sketch.BloomFilter
 object BloomDecontaminate {
 
   /** (train idCol, n_shared) for every train doc sharing at least one
-    * word `n`-gram with any eval doc. `expectedEvalNgrams` sizes the
-    * Bloom filter of the large form (overestimate freely — size is
-    * linear, fpp explodes only when underestimated). */
+    * word `n`-gram with any eval doc. `expectedEvalNgrams` is a floor on
+    * the large form's Bloom sizing, which never goes below the exact
+    * eval n-gram count. */
   def contaminationReport(train: DataFrame, eval: DataFrame,
                           idCol: String, textCol: String, n: Int,
                           expectedEvalNgrams: Long = 1000000L,
                           fpp: Double = 1e-4): DataFrame = {
     val (evalGrams, nEval) = Checkpoints.materializeCounted(evalSet(eval, textCol, n))
+    routed(train, evalGrams, nEval, idCol, textCol, n, expectedEvalNgrams, fpp)
+  }
+
+  /** [[contaminationReport]] over `evalGrams` (an [[evalSet]] of `nEval`
+    * hashes): the form is picked here, from `nEval` alone. */
+  private[dedup] def routed(train: DataFrame, evalGrams: DataFrame, nEval: Long,
+                            idCol: String, textCol: String, n: Int,
+                            expectedEvalNgrams: Long, fpp: Double): DataFrame =
     if (nEval <= Checkpoints.DefaultBroadcastMaxRows)
       shared(grams(train, idCol, textCol, n).join(broadcast(evalGrams), Seq("g"), "left_semi"),
         idCol)
-    else bloomVerified(train, evalGrams, idCol, textCol, n, expectedEvalNgrams, fpp)
-  }
+    else bloomVerified(train, evalGrams, idCol, textCol, n,
+      math.max(expectedEvalNgrams, nEval), fpp)
 
   /** The distinct word-`n`-gram hashes of `eval`, one column `g`. */
   private[dedup] def evalSet(eval: DataFrame, textCol: String, n: Int): DataFrame =

@@ -415,16 +415,16 @@ object DedupQueries {
   /** Working dir for one curation harness's MUTABLE artifacts (kept/seen
     * tables, sinks, checkpoints, non-vacuity flags): keyed by (tag,
     * documents-table content, layout version) — see [[KeyedWorkDir]] for
-    * why content, not just path — and private to this application
-    * ([[KeyedWorkDir.runScoped]]), so two processes on one corpus never
-    * share it; the immutable staged input is shared through
-    * [[curationStagePath]]. A regenerated corpus or a bumped layout tag
-    * gets a fresh dir instead of mixing stale part=N partitions into the
-    * aggregate. Bump the layout tag when the gate predicate,
-    * files-per-trigger or sink partitioning changes. */
+    * why content, not just path — private to this application and
+    * deleted when it ends ([[KeyedWorkDir.runKeyed]]), so two processes
+    * on one corpus never share it; the immutable staged input is shared
+    * through [[curationStagePath]]. A regenerated corpus or a bumped
+    * layout tag gets a fresh dir instead of mixing stale part=N
+    * partitions into the aggregate. Bump the layout tag when the gate
+    * predicate, files-per-trigger or sink partitioning changes. */
   private[queries] def curationTmp(s: SparkSession, tag: String, dir: String,
                                    layout: String = "L2"): String =
-    KeyedWorkDir.keyed(s, tag, dir, "documents", KeyedWorkDir.runScoped(s, layout))
+    KeyedWorkDir.runKeyed(s, tag, dir, "documents", layout)
 
   /** The staged stream corpus SHARED by q167/q171/q173 (and the specs):
     * all three harnesses stage the identical input (same filter, same

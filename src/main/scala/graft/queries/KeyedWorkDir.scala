@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * q173 stream corpus) is reused across runs from a keyed dir: staging is
   * skip-if-present and the staged files are immutable. Their mutable
   * artifacts (q167/q171/q173 kept/seen tables, q147/q86 sinks) sit in a
-  * keyed dir private to one application ([[runScoped]]). Keying by the
+  * keyed dir private to one application and deleted when it ends
+  * ([[runKeyed]]). Keying by the
   * input-dir STRING alone is unsafe in two
   * ways: (1) if the corpus at that path is regenerated, stale staged
   * files and stale part=N partitions would be silently read into the
@@ -138,14 +139,9 @@ object KeyedWorkDir {
                         table: String, layout: String): String =
     contentKeyedTable(spark, prefix, dir, Seq(table), layout)
 
-  /** The work dir for (tag, table content, layout). Under a plain
-    * layout tag it is shared by every run on the corpus: fit for
-    * IMMUTABLE staged input only. A harness's MUTABLE artifacts (sinks,
-    * kept/seen tables, streaming checkpoints) go under a [[runScoped]]
-    * layout, private to one application: two processes sharing such a
-    * dir race on its sink partitions, and one's checkpoint cleanup
-    * deletes the other's live checkpoint (`FileNotFoundException:
-    * …/commits does not exist`). */
+  /** The work dir for (tag, table content, layout), shared by every run
+    * on the corpus: fit for IMMUTABLE staged input only. A harness's
+    * MUTABLE artifacts go in a [[runKeyed]] dir. */
   def keyed(spark: SparkSession, tag: String, dir: String, table: String,
             layout: String): String = {
     val key = contentKey(spark, dir, table, layout)
@@ -156,6 +152,37 @@ object KeyedWorkDir {
     pruneStale(spark, tag, current = f.getName)
     p
   }
+
+  /** The work dir for a harness's MUTABLE artifacts (sinks, kept/seen
+    * tables, streaming checkpoints): [[keyed]] under a [[runScoped]]
+    * layout, so it is private to this application — two processes
+    * sharing such a dir race on its sink partitions, and one's checkpoint
+    * cleanup deletes the other's live checkpoint (`FileNotFoundException:
+    * …/commits does not exist`) — and deleted when the application ends,
+    * since no later run can read it. Only a JVM killed before its
+    * SparkContext stops leaves one for [[pruneStale]]. */
+  def runKeyed(spark: SparkSession, tag: String, dir: String, table: String,
+               layout: String): String = {
+    val p = keyed(spark, tag, dir, table, runScoped(spark, layout))
+    val sc = spark.sparkContext
+    runDirs.computeIfAbsent(sc.applicationId, { app =>
+      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = endRun(app)
+      })
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    }).add(p)
+    p
+  }
+
+  /** The [[runKeyed]] dirs of each live application, by application id. */
+  private[queries] val runDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[String]]()
+
+  /** Delete application `app`'s [[runKeyed]] dirs (its end listener). */
+  private[queries] def endRun(app: String): Unit =
+    Option(runDirs.remove(app)).foreach(_.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
 
   /** Orphaned-key retention: a rekey (corpus regenerated, layout bumped)
     * leaves the previous dir unreachable — nothing ever consults a stale

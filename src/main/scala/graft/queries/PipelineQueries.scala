@@ -126,15 +126,14 @@ object PipelineQueries {
     * "at-least-once + idempotent sink = exactly-once"). */
   val q86ExactlyOnce: Q = (s, dir) => {
     import org.apache.spark.sql.streaming.Trigger
-    // keyed by CONTENT and private to this application: re-running IS
-    // more redelivery, which the idempotent sink is certified to absorb,
-    // but a REGENERATED corpus must get a fresh sink (stale part=N
-    // partitions from the old corpus would otherwise survive into the
-    // aggregate — see KeyedWorkDir), and another process must never
-    // share it (the checkpoints are deleted at the end, the q167/q147
-    // hygiene pattern)
-    val tmp = KeyedWorkDir.keyed(s, "q86", dir, "documents",
-      KeyedWorkDir.runScoped(s, "L2"))
+    // keyed by CONTENT, private to this application and deleted when it
+    // ends: re-running IS more redelivery, which the idempotent sink is
+    // certified to absorb, but a REGENERATED corpus must get a fresh sink
+    // (stale part=N partitions from the old corpus would otherwise
+    // survive into the aggregate — see KeyedWorkDir), and another process
+    // must never share it (the checkpoints are deleted at the end, the
+    // q167/q147 hygiene pattern)
+    val tmp = KeyedWorkDir.runKeyed(s, "q86", dir, "documents", "L2")
     val out = s"$tmp/sink"
     def deliverAll(run: String): Unit = {
       val q = Tables.stream(s, dir, "documents")

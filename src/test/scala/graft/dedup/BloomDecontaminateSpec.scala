@@ -125,4 +125,17 @@ class BloomDecontaminateSpec extends SparkSpec {
     assert(plan.length < 64 * 1024, s"${plan.length} chars")
     assert(df.as[(Long, Long)].collect().toSeq == Seq((1L, 2L)))
   }
+
+  test("past the broadcast cap the Bloom filter is sized for at least the exact eval count") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    // the routing alone, at a count no test corpus reaches; a caller's
+    // smaller guess must not shrink the filter below the exact count
+    val nEval = graft.ops.Checkpoints.DefaultBroadcastMaxRows + 1
+    val df = BloomDecontaminate.routed(oneTrain, BloomDecontaminate.evalSet(oneEval, "text", 3),
+      nEval, "id", "text", 3, expectedEvalNgrams = 100000L, fpp = 1e-4)
+    val items = df.queryExecution.analyzed.collectWithSubqueries { case p => p.expressions }
+      .flatten.flatMap(_.collect { case b: BloomFilterAggregate =>
+        b.estimatedNumItemsExpression.eval().asInstanceOf[Long] })
+    assert(items.nonEmpty && items.forall(_ >= nEval), items)
+  }
 }

@@ -38,6 +38,22 @@ class KeyedWorkDirSpec extends SparkSpec {
       KeyedWorkDir.keyed(spark, tag, "/no/such/dir", "documents", KeyedWorkDir.runScoped(app, "L2")))
   }
 
+  test("a run-keyed dir is registered for deletion when its application ends") {
+    val tag = s"kwdend${System.nanoTime()}"
+    val d = KeyedWorkDir.runKeyed(spark, tag, "/no/such/dir", "t", "L2")
+    assert(KeyedWorkDir.runDirs.get(spark.sparkContext.applicationId).contains(d))
+    // endRun is what the application-end listener runs; a made-up
+    // application id keeps this session's own dirs alive
+    val other = KeyedWorkDir.keyed(spark, tag, "/no/such/dir", "t",
+      KeyedWorkDir.runScoped("app-ended", "L2"))
+    new File(other, "sink/part=0").mkdirs()
+    KeyedWorkDir.runDirs.computeIfAbsent("app-ended",
+      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[String]()).add(other)
+    KeyedWorkDir.endRun("app-ended")
+    assert(!new File(other).exists() && new File(d).isDirectory)
+    assert(!KeyedWorkDir.runDirs.containsKey("app-ended"))
+  }
+
   test("contentKey rekeys when the corpus is REGENERATED at the same path " +
        "(staged-table names must never reuse stale derived state)") {
     import spark.implicits._

@@ -3,9 +3,9 @@
 difference the way a claimed gain is judged (choosing-metrics §8).
 
 The command is read from BENCHMARK.json in the change's checkout; each run
-appends `--workload W --seed S --seconds <run_seconds> --trace 0`. Pair i
-uses the i-th seed and runs the parent first when i is even, the change
-first when i is odd. Every run's JSON line, its `[perfbench] op ms:` line
+appends `--workload W --seed S --seconds <run_seconds> --trace 0`. One
+untimed warm-up run per side comes first. Pair i uses the i-th seed and
+runs the parent first when i is even, the change first when i is odd. Every run's JSON line, its `[perfbench] op ms:` line
 and its exit status are written to the --out file (JSON lines, one
 session per file), so the report can be printed again with --from.
 
@@ -25,8 +25,8 @@ The per-stage `op ms` medians follow, with pairs won, without a verdict.
 
 Usage:
   bench_pairs.py PARENT_DIR CHANGE_DIR --workload curate_batch --pairs 10
-      [--seeds 21-24,31-36] [--out runs.jsonl] [--warmup 1]
-  bench_pairs.py --from runs.jsonl [--bench BENCHMARK.json]
+      [--seeds 21-24,31-36] [--out runs.jsonl]
+  bench_pairs.py --from runs.jsonl     (reads ./BENCHMARK.json)
 """
 import argparse
 import json
@@ -56,8 +56,9 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def judge(parent, change, bound, lower_better=True, claim_share=0.9):
+def judge(parent, change, bound, lower_better=True):
     """Verdict for one metric over paired runs (parent[i], change[i])."""
+    claim_share = 0.9                           # a gain wins 9 of 10 pairs
     sign = 1.0 if lower_better else -1.0
     won = sum(1 for p, c in zip(parent, change) if sign * (p - c) > 0)
     lost = sum(1 for p, c in zip(parent, change) if sign * (c - p) > 0)
@@ -141,13 +142,10 @@ def main():
     ap.add_argument("--workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", default=None, help="e.g. 21-24,31-36 (default 1..pairs)")
-    ap.add_argument("--warmup", type=int, default=1, help="untimed runs per side first")
     ap.add_argument("--out", default=None, help="JSON-lines record of every run")
     ap.add_argument("--from", dest="records", default=None, help="report a recorded file")
-    ap.add_argument("--bench", default=None, help="BENCHMARK.json (default: the change's)")
     a = ap.parse_args()
-    bench_path = a.bench or os.path.join(a.change or ".", "BENCHMARK.json")
-    with open(bench_path) as f:
+    with open(os.path.join(a.change or ".", "BENCHMARK.json")) as f:
         bench = json.load(f)
     if a.records:
         with open(a.records) as f:
@@ -160,10 +158,9 @@ def main():
     seeds = parse_seeds(a.seeds or f"1-{a.pairs}", a.pairs)
     out = a.out or f"bench_pairs-{a.workload}.jsonl"
     open(out, "w").close()                      # the file holds this session's runs
-    for i in range(a.warmup):
-        for s in SIDES:
-            r = run_one(dirs[s], bench["command"], a.workload, seeds[0], bench["run_seconds"])
-            print(f"[bench_pairs] warm-up {s}: rc={r['rc']}", file=sys.stderr, flush=True)
+    for s in SIDES:
+        r = run_one(dirs[s], bench["command"], a.workload, seeds[0], bench["run_seconds"])
+        print(f"[bench_pairs] warm-up {s}: rc={r['rc']}", file=sys.stderr, flush=True)
     records = []
     for i, seed in enumerate(seeds):
         order = SIDES if i % 2 == 0 else SIDES[::-1]
